@@ -51,9 +51,6 @@ def main() -> None:
                     help="disable the TPS/dewarp stage (reference runs it only with --dewarp)")
     ap.add_argument("--no-merge-lines", action="store_true",
                     help="keep same-row chunks as separate lines (reference --merge-lines inverse)")
-    ap.add_argument("--no-contours", action="store_true",
-                    help="skip per-line contour polygons (1-3 ms/page) for "
-                         "text-only pipelines that never export PageXML")
     args = ap.parse_args()
 
     from ocr_inference_spark.checkpoint import run_resumable
@@ -79,7 +76,6 @@ def main() -> None:
             line_sorting=args.line_sorting,
             dewarp=not args.no_dewarp,
             merge_lines=not args.no_merge_lines,
-            emit_contours=not args.no_contours,
         ),
         encoding=args.encoding,
     )

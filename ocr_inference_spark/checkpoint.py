@@ -26,7 +26,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import media_spans, reassemble_spans, recognize_pages
+from .pipeline import reassemble_spans, recognize_pages, text_only
 from .schemas import METRICS_SCHEMA
 
 
@@ -97,7 +97,8 @@ def run_resumable(
 ) -> None:
     """Process only unfinished buckets; append metrics; idempotent output.
 
-    ``options``: page.PipelineOptions threaded into the OCR kernel.
+    ``options``: page.PipelineOptions threaded into the OCR kernel, run
+    ``text_only`` because only spans and metrics are written.
     ``encoding``: 'unicode' (as recognized) or 'wylie' — the reference's
     --encoding switch (cli.py:25); 'wylie' transliterates every output
     TEXT span relationally (text/encodings.to_translit), media spans
@@ -121,7 +122,8 @@ def run_resumable(
     todo_docs = docs_b.join(F.broadcast(done), "bucket", "left_anti")
 
     ocr = recognize_pages(
-        spark, todo_docs.drop("bucket"), pages_df, strategy=strategy, options=options
+        spark, todo_docs.drop("bucket"), pages_df, strategy=strategy,
+        options=text_only(options),
     )
     ocr.cache()
 

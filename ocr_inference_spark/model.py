@@ -19,6 +19,7 @@ import io
 import numpy as np
 
 from .glyphs import GLYPH_H, GLYPH_TOP, TEMPLATES, VOCAB_SIZE
+from .worker import worker_init
 
 
 def serialize_weights(templates: np.ndarray = TEMPLATES) -> bytes:
@@ -133,9 +134,13 @@ def get_session(weight_blob: bytes) -> RecognitionSession:
     per Python worker process and reused across Arrow batches. md5 of
     the blob is an honest content key (Python's bytes hash is per-process
     salted, so it identifies nothing across processes); the digest is
-    memoized per blob object so it is not recomputed per batch."""
+    memoized per blob object so it is not recomputed per batch.
+
+    Every OCR kernel calls this first, so it also installs the worker's
+    once-per-process import guard (worker.worker_init)."""
     import hashlib
 
+    worker_init()
     cached = _DIGEST_CACHE.get(id(weight_blob))
     if cached is not None and cached[0] is weight_blob:
         key = cached[1]

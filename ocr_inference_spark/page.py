@@ -66,8 +66,11 @@ class PipelineOptions:
       --merge-lines / group_line_chunks).
     - ``emit_contours``: per-line rectified contour polygons in the OCR
       rows (PageXML Coords parity — the reference exports them from the
-      same inference run). Costs 1-3 ms/page (BENCH/NOTES_r4.md §1);
-      turn off for text-only pipelines that never export PageXML."""
+      same inference run). Costs 1-3 ms/page (BENCH/NOTES_r4.md §1).
+      Honoured by ``pipeline.recognize_pages`` and so by the exporters
+      that read its ``contour`` column (PageXML Coords);
+      ``extract_spans`` and ``checkpoint.run_resumable`` keep only text
+      and always run with it off (``pipeline.text_only``)."""
 
     k_factor: float = 1.2  # linecrop.DEFAULT_K_FACTOR
     tps_mode: str = "global"

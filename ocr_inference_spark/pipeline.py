@@ -26,20 +26,29 @@ Scale notes (100 TB / 10^12 docs):
   (SURVEY.md §4 "skew handling");
 - reassembly shuffles once on doc_id; span structs are small (text
   only — image bytes never pass this boundary);
-- AQE coalesces post-shuffle partitions; no collect() anywhere.
+- AQE coalesces post-shuffle partitions; no collect() anywhere;
+- a Python task has a fixed cost beside its rows: pyspark invalidates
+  the import caches at every task start, and on CPython 3.11 each
+  ``zipimporter`` then re-reads its archive (pyspark.zip, the
+  spark-core jar, py4j), ~58 ms of worker CPU per task on a 4-vCPU
+  box. ``worker.worker_init`` (installed by ``get_session``) skips the
+  re-read of unchanged archives in the reused worker, so page-granular
+  partitioning (4 waves per core) stays cheap.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import replace
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .model import get_session, serialize_weights
-from .page import process_page
+from .page import PipelineOptions, process_page
 from .schemas import DOCUMENTS_SCHEMA, OCR_LINES_SCHEMA
+from .worker import worker_init
 
 
 def exploded_spans(docs_df: DataFrame) -> DataFrame:
@@ -65,6 +74,25 @@ def media_spans(docs_df: DataFrame) -> DataFrame:
             F.col("s.media_ref").alias("media_ref"),
         )
     )
+
+
+def weights_broadcast(spark: SparkSession):
+    """The recognizer weights, broadcast once per SparkContext and
+    reused by every pass: a broadcast per call would leak one per pass
+    over a long session. The handle lives on the SparkContext object, so
+    a new context gets a new broadcast."""
+    sc = spark.sparkContext
+    bc = getattr(sc, "_ocr_weights_bc", None)
+    if bc is None:
+        bc = sc._ocr_weights_bc = sc.broadcast(serialize_weights())
+    return bc
+
+
+def text_only(options: PipelineOptions | None) -> PipelineOptions:
+    """The caller's options with ``emit_contours=False``: for entry
+    points that keep only spans and metrics, so the kernel does not
+    trace contour polygons that would be thrown away."""
+    return replace(options or PipelineOptions(), emit_contours=False)
 
 
 def _make_ocr_kernel(weight_bc, options=None):
@@ -149,7 +177,7 @@ def recognize_pages(
       single-JVM expression. Kernel parallelism = pages partitioning
       (caller ensures it; see jobs/ and scripts/bench_scaling.py).
     """
-    weight_bc = spark.sparkContext.broadcast(serialize_weights())
+    weight_bc = weights_broadcast(spark)
     media = media_spans(docs_df)
     if strategy == "broadcast":
         joined = pages_df.select("media_ref", "content").join(
@@ -193,7 +221,7 @@ def recognize_pages_eval(
     run_text_recognition_eval, BDRC/inference.py:668-726)."""
     import hashlib
 
-    weight_bc = spark.sparkContext.broadcast(serialize_weights())
+    weight_bc = weights_broadcast(spark)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .kernels.ctc import ctc_confidence
@@ -309,9 +337,11 @@ def extract_spans(
     strategy: str = "shuffle",
     options=None,
 ) -> DataFrame:
-    """End-to-end: documents + pages -> output documents (same schema)."""
+    """End-to-end: documents + pages -> output documents (same schema).
+    Output spans carry no contours, so the kernel runs ``text_only``."""
     ocr = recognize_pages(
-        spark, docs_df, pages_df, n_partitions, strategy=strategy, options=options
+        spark, docs_df, pages_df, n_partitions, strategy=strategy,
+        options=text_only(options),
     )
     out = reassemble_spans(docs_df, ocr)
     # pin the declared output schema
@@ -343,6 +373,7 @@ def detect_lines(spark: SparkSession, pages_df: DataFrame) -> DataFrame:
     def kernel(batches):
         from .page import detect_page
 
+        worker_init()
         for pdf in batches:
             rows = {
                 "image_name": [], "image_width": [], "image_height": [],

@@ -39,6 +39,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.ui.enabled", "false")
+        # Spark's default, pinned: worker.worker_init installs its import
+        # guard once per Python worker process, so it saves the ~58 ms
+        # per-task archive re-read only while workers are reused
+        .config("spark.python.worker.reuse", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
     spark = builder.getOrCreate()

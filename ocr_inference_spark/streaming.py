@@ -9,9 +9,9 @@ micro-batches.
 - ``streaming_exact_dedup``: keeps only the FIRST occurrence of each
   normalized-text key across the whole stream — a stateful
   ``applyInPandasWithState`` keyed on the md5 dup key. State per key is
-  one byte-wide row ("seen"), so the state store stays tiny no matter
-  how fat the documents are; the shuffle key is the 32-char digest,
-  never the text.
+  one 8-byte row (when the key was last seen), so the state store stays
+  tiny no matter how fat the documents are; the shuffle key is the
+  32-char digest, never the text.
 - ``streaming_quality_gate``: stateless quality/language filter —
   the same JVM-side expressions as the batch q39 path, applied to a
   stream (included here so a reader sees both shapes side by side).
@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -43,7 +42,7 @@ _DEDUP_OUT = StructType(
         StructField("text", StringType()),
     ]
 )
-_DEDUP_STATE = StructType([StructField("seen", IntegerType())])
+_DEDUP_STATE = StructType([StructField("seen_ms", LongType())])
 
 
 def streaming_exact_dedup(
@@ -60,7 +59,8 @@ def streaming_exact_dedup(
 
     ``ttl_seconds`` bounds the state store: a key's row is evicted
     once no occurrence has arrived for that long (processing-time
-    timeout), after which the next occurrence is treated as new. At
+    timeout), after which the next occurrence is treated as new — also
+    when it arrives before an idle micro-batch has evicted the key. At
     10^12-doc scale unbounded exact-forever state is not a real
     deployment — "suppress duplicates within a window" with TTL
     eviction keeps the RocksDB store proportional to the ACTIVE key
@@ -72,6 +72,8 @@ def streaming_exact_dedup(
         F.col(text_col).alias("text"),
     )
 
+    ttl_ms = None if ttl_seconds is None else int(ttl_seconds * 1000)
+
     def dedup_fn(key, pdf_iter, state: GroupState):
         import pandas as pd
 
@@ -80,12 +82,18 @@ def streaming_exact_dedup(
             state.remove()  # TTL eviction: forget the key entirely
             yield empty
             return
-        if state.exists:
+        now_ms = state.getCurrentProcessingTimeMs()
+        # a key with new rows comes in with hasTimedOut=False even when
+        # its timer lapsed before an idle batch fired it (e.g. across a
+        # restart), and Spark does not hand the stored timer to Python:
+        # the state row's own last-seen time decides
+        if state.exists and (ttl_ms is None or now_ms - state.get[0] <= ttl_ms):
             # key already emitted in an earlier micro-batch
             for _ in pdf_iter:
                 pass
-            if ttl_seconds is not None:
-                state.setTimeoutDuration(int(ttl_seconds * 1000))
+            if ttl_ms is not None:
+                state.update((now_ms,))
+                state.setTimeoutDuration(ttl_ms)
             yield empty
             return
         best = None
@@ -95,9 +103,9 @@ def streaming_exact_dedup(
             row = pdf.loc[pdf["id"].idxmin()]
             if best is None or row["id"] < best["id"]:
                 best = row
-        state.update((1,))
-        if ttl_seconds is not None:
-            state.setTimeoutDuration(int(ttl_seconds * 1000))
+        state.update((now_ms,))
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
         if best is None:
             yield empty
         else:

@@ -98,3 +98,10 @@ def test_wylie_encoding_output(spark, tmp_path):
     # media spans identical
     assert wyl.where(F.col("s.kind") == "media").count() == uni.where(
         F.col("s.kind") == "media").count()
+
+
+def test_get_spark_pins_python_worker_reuse(spark):
+    """worker.worker_init's import guard lives in the reused Python
+    worker process; turning reuse off would bring back the per-task
+    archive re-reads."""
+    assert spark.sparkContext.getConf().get("spark.python.worker.reuse") == "true"

@@ -251,3 +251,91 @@ def test_broadcast_strategy_equals_shuffle(spark, corpus):
     b = {r["doc_id"]: _tuples(r["spans"])
          for r in extract_spans(spark, docs_df, pages_df, strategy="broadcast").collect()}
     assert a == b
+
+
+def test_extract_spans_with_contours_requested_equals_fixture(spark, corpus):
+    """Contours asked for on a text-only entry point change nothing."""
+    from ocr_inference_spark.page import PipelineOptions
+
+    docs_df, pages_df, expected = corpus
+    out = {
+        r["doc_id"]: r["spans"]
+        for r in extract_spans(
+            spark, docs_df, pages_df, options=PipelineOptions(emit_contours=True)
+        ).collect()
+    }
+    assert len(out) == len(expected)
+    for exp in expected:
+        assert _tuples(out[exp["doc_id"]]) == _tuples(exp["spans"]), exp["doc_id"]
+
+
+class _Captured(Exception):
+    pass
+
+
+def test_text_only_entry_points_skip_contours(spark, corpus, tmp_path, monkeypatch):
+    """extract_spans and run_resumable keep only spans and metrics, so
+    the kernel they build runs with emit_contours=False; the rest of
+    the caller's options pass through."""
+    from ocr_inference_spark import checkpoint, pipeline
+    from ocr_inference_spark.page import PipelineOptions
+
+    docs_df, pages_df, _ = corpus
+    seen = []
+
+    def capture(*args, options=None, **kwargs):
+        seen.append(options)
+        raise _Captured
+
+    monkeypatch.setattr(pipeline, "recognize_pages", capture)
+    monkeypatch.setattr(checkpoint, "recognize_pages", capture)
+    caller = PipelineOptions(k_factor=1.5, emit_contours=True)
+    for call in (
+        lambda o: pipeline.extract_spans(spark, docs_df, pages_df, options=o),
+        lambda o: checkpoint.run_resumable(
+            spark, docs_df, pages_df, str(tmp_path / "out"),
+            str(tmp_path / "metrics"), "job", 2, options=o,
+        ),
+    ):
+        for options in (None, caller):
+            with pytest.raises(_Captured):
+                call(options)
+    assert [o.emit_contours for o in seen] == [False] * 4
+    assert [o.k_factor for o in seen] == [1.2, 1.5, 1.2, 1.5]
+
+
+def test_recognize_pages_default_emits_contours(spark, corpus):
+    docs_df, pages_df, _ = corpus
+    rows = (
+        recognize_pages(spark, docs_df, pages_df)
+        .where("status = 'success'")
+        .select("contour")
+        .collect()
+    )
+    assert rows and all(r["contour"] for r in rows)
+
+
+def test_weights_broadcast_once_per_context(spark, corpus):
+    from ocr_inference_spark.pipeline import weights_broadcast
+
+    docs_df, pages_df, _ = corpus
+    bc = weights_broadcast(spark)
+    recognize_pages(spark, docs_df, pages_df)
+    extract_spans(spark, docs_df, pages_df)
+    assert weights_broadcast(spark) is bc
+
+
+def test_new_context_gets_new_weights_broadcast():
+    from types import SimpleNamespace
+
+    from ocr_inference_spark.pipeline import weights_broadcast
+
+    def fake_session():
+        sc = SimpleNamespace(sent=[])
+        sc.broadcast = lambda value: sc.sent.append(value) or object()
+        return SimpleNamespace(sparkContext=sc)
+
+    a, b = fake_session(), fake_session()
+    assert weights_broadcast(a) is weights_broadcast(a)
+    assert weights_broadcast(b) is not weights_broadcast(a)
+    assert len(a.sparkContext.sent) == len(b.sparkContext.sent) == 1

@@ -198,7 +198,9 @@ def test_streaming_dedup_ttl_evicts_state(spark, tmp_path):
     (processing-time timeout -> state.remove), so a later duplicate is
     re-emitted as new — the bounded-state posture a 10^12-doc ingest
     needs. Run 1 seeds the key; after sleeping past the TTL, run 2
-    (same checkpoint) must emit the duplicate again."""
+    (same checkpoint) must emit the duplicate again, although no idle
+    batch ran in between to fire the key's timer. Run 3 keeps running:
+    its idle batches must then drain the state store to zero rows."""
     import time
 
     from ocr_inference_spark.streaming import streaming_exact_dedup
@@ -219,10 +221,7 @@ def test_streaming_dedup_ttl_evicts_state(spark, tmp_path):
         except Exception:
             return []
 
-    def start_q():
-        # NOTE: a query with registered processing-time timers never
-        # self-terminates under availableNow (it stays alive to fire
-        # them), so poll the SINK / batch progress and stop explicitly
+    def start_q(**trigger):
         stream = spark.readStream.schema(schema).parquet(src)
         return (
             streaming_exact_dedup(stream, "doc_id", "text", ttl_seconds=2.0)
@@ -230,50 +229,44 @@ def test_streaming_dedup_ttl_evicts_state(spark, tmp_path):
             .format("parquet")
             .option("path", out_path)
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="1 second")
+            .trigger(**trigger)
             .start()
         )
 
-    def wait_sink(want_ids, timeout=300):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            if sink_ids(out_path) == want_ids:
-                return
-            time.sleep(0.3)
-        raise AssertionError(f"sink never reached {want_ids}: {sink_ids(out_path)}")
+    def run_once():
+        # exactly one batch and no idle batch after it (availableNow
+        # would keep running idle batches to fire the registered timers)
+        q = start_q(once=True)
+        q.awaitTermination(120)
 
     write_file([(1, "expiring key")])
-    q = start_q()
-    wait_sink([1])
-    q.stop()
-    q.awaitTermination(60)
+    run_once()
+    assert sink_ids(out_path) == [1]
 
-    # restart with NO new data: idle batches past the TTL fire the
-    # processing-time timeout and EVICT the key (eviction only happens
-    # in a batch where the key receives no rows)
+    # the duplicate arrives past the TTL in the very batch that first
+    # sees the key again: the key's lapsed timer was never fired
     time.sleep(3)
-    q = start_q()
-    first = None
-    ran_idle = False
+    write_file([(2, "expiring key")])
+    run_once()
+    assert sink_ids(out_path) == [1, 2]
+
+    # a running query follows each batch with idle batches; past the TTL
+    # they fire the timers and evict every key, the new one included
+    q = start_q(processingTime="1 second")
+    write_file([(3, "another key")])
+    state_rows = None
     deadline = time.time() + 300
     while time.time() < deadline:
-        p = q.lastProgress
-        if p is not None:
-            first = first if first is not None else p["batchId"]
-            if p["batchId"] >= first + 3:  # several idle batches ran
-                ran_idle = True
+        progress = [p for p in q.recentProgress if p["stateOperators"]]
+        if any(p["numInputRows"] > 0 for p in progress):
+            state_rows = progress[-1]["stateOperators"][0]["numRowsTotal"]
+            if state_rows == 0:
                 break
         time.sleep(0.3)
-    # the idle batches are what FIRE the eviction timer — writing the
-    # duplicate before they ran would race the eviction on a stalled
-    # box (this VM stalls for minutes at 0% steal; see BENCH notes)
-    assert ran_idle, "idle batches never ran; cannot assert eviction"
-
-    # the duplicate of the now-evicted key must be re-emitted as new
-    write_file([(2, "expiring key")])
-    wait_sink([1, 2])
     q.stop()
     q.awaitTermination(60)
+    assert state_rows == 0, f"keys never evicted: {state_rows} state rows"
+    assert sink_ids(out_path) == [1, 2, 3]
 
     # control: without ttl the same pattern suppresses the duplicate
     src2, out2, ck2 = (str(tmp_path / p) for p in ("in2", "out2", "ck2"))
