@@ -123,7 +123,7 @@ def debug_page_artifacts(content: bytes, session) -> list[dict]:
     preview = np.stack([page] * 3, axis=-1).astype(np.float64)
     red = np.array([255.0, 0.0, 0.0])
     for c in ordered:
-        for row, x0, x1 in c.runs:
+        for row, x0, x1 in c.runs.tolist():
             preview[row, x0:x1] = 0.5 * preview[row, x0:x1] + 0.5 * red
     out.append(
         art("results", "line_preview.png", "image",

@@ -71,8 +71,14 @@ def encode_text(text: str) -> np.ndarray:
     return np.array([_CHAR_TO_ID.get(ch, space) for ch in text], dtype=np.int32)
 
 
+# id -> character lookup; the blank and out-of-range ids map to ""
+_ID_TO_CHAR = np.array([""] + list(CHARSET), dtype=object)
+
+
 def decode_ids(ids) -> str:
-    return "".join(CHARSET[i - 1] for i in ids if 1 <= i <= len(CHARSET))
+    """Char-id sequence -> text; blank and unknown ids are dropped."""
+    ids = np.asarray(ids, dtype=np.int64)
+    return "".join(_ID_TO_CHAR[ids[(ids >= 1) & (ids <= len(CHARSET))]])
 
 
 def line_pixel_width(n_chars: int) -> int:

@@ -73,5 +73,17 @@ def binarize(
     # folding the threshold onto the SMALL grid keeps the full-resolution
     # work to one uint8-vs-int16 compare (no int32 page-sized multiply)
     thr = np.clip((total - c * b * b - 1) // (b * b), -1, 255).astype(np.int16)
-    up = np.repeat(np.repeat(thr, d, axis=0), d, axis=1)[:h, :w]
-    return (gray <= up).astype(np.uint8)
+    # nearest upsampling: repeat the small grid along columns only (a
+    # quarter-page int16 row set), then compare each band of d page rows
+    # against its threshold row by broadcasting, so no page-sized
+    # threshold array exists and the inner loop runs along whole rows
+    tw = np.repeat(thr, d, axis=1)[:, :w]
+    ink = np.empty((h, w), dtype=bool)
+    hm = h - h % d
+    np.less_equal(
+        gray[:hm].reshape(hm // d, d, w), tw[: hm // d, None, :],
+        out=ink[:hm].reshape(hm // d, d, w),
+    )
+    if hm < h:  # the last, partial band
+        np.less_equal(gray[hm:], tw[-1], out=ink[hm:])
+    return ink.view(np.uint8)

@@ -17,21 +17,41 @@ at the end).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 
 
-@dataclass
+@dataclass(eq=False)
 class Component:
-    """One connected component: runs are (row, x0, x1_exclusive)."""
+    """One connected component.
 
-    runs: list
+    ``runs`` is an int64 (m, 3) array of ink runs ``[row, x0, x1)``
+    (``x1`` exclusive), row-major for components that
+    ``connected_components`` emits. Lists of (row, x0, x1) tuples are
+    converted on construction.
+
+    Invariant: the runs are immutable once constructed (the array is
+    read-only), so stats derived from them stay valid for the life of
+    the component; the top-edge profile, which deskew and dewarp both
+    read, is computed once and cached. Equality is identity: two
+    components with the same runs are still two components.
+    """
+
+    runs: np.ndarray
     x: int
     y: int
     w: int
     h: int
     area: int
+    _top: np.ndarray | None = field(default=None, init=False, repr=False)
+
+    def __post_init__(self) -> None:
+        runs = np.asarray(self.runs, dtype=np.int64).reshape(-1, 3)
+        if runs.flags.writeable:
+            runs = runs.view()
+            runs.flags.writeable = False
+        self.runs = runs
 
     @property
     def bbox(self) -> tuple[int, int, int, int]:
@@ -43,49 +63,41 @@ class Component:
         # (reference: BDRC/line_detection.py:188-209)
         return (self.x + self.w // 2, self.y + self.h // 2)
 
-    @property
-    def runs_arr(self) -> np.ndarray:
-        """Runs as an int64 (m, 3) array [row, x0, x1), cached — runs are
-        never mutated after construction, so the two views stay in sync.
-        The vectorized consumers (slice stats, profiles, thickness) pull
-        this instead of looping Python tuples."""
-        a = getattr(self, "_runs_arr", None)
-        if a is None:
-            a = np.asarray(self.runs, dtype=np.int64).reshape(-1, 3)
-            object.__setattr__(self, "_runs_arr", a)
-        return a
-
     def top_profile(self) -> np.ndarray:
         """For each column in [x, x+w): smallest row holding ink (int32);
-        columns with no ink hold -1."""
-        # runs are row-major (rows ascending): writing rows DESCENDING
-        # leaves the smallest row in each column — plain slice stores,
-        # no per-run np.minimum temporaries
-        top = np.full(self.w, -1, dtype=np.int32)
-        x = self.x
-        for row, x0, x1 in reversed(self.runs):
-            top[x0 - x : x1 - x] = row
-        return top
+        columns with no ink hold -1. Cached and read-only."""
+        if self._top is None:
+            # runs are row-major (rows ascending): writing rows DESCENDING
+            # leaves the smallest row in each column — plain slice stores,
+            # no per-run np.minimum temporaries
+            top = np.full(self.w, -1, dtype=np.int32)
+            x = self.x
+            for row, x0, x1 in reversed(self.runs.tolist()):
+                top[x0 - x : x1 - x] = row
+            top.flags.writeable = False
+            self._top = top
+        return self._top
 
     def median_thickness(self) -> float:
         """Median per-column ink row count over columns holding ink — a
         warp-INVARIANT height measure: a thin rule bent by page curl has
         an inflated bbox height but its columns stay ~rule-thin, while a
         text line's columns stay ~band-tall."""
-        a = self.runs_arr
+        a = self.runs
         if not a.size:
             return 0.0
         # +1/-1 boundary marks, cumsum -> per-column run count
-        d = np.zeros(self.w + 1, dtype=np.int64)
-        np.add.at(d, a[:, 1] - self.x, 1)
-        np.add.at(d, a[:, 2] - self.x, -1)
+        n = self.w + 1
+        d = np.bincount(a[:, 1] - self.x, minlength=n) - np.bincount(
+            a[:, 2] - self.x, minlength=n
+        )
         t = np.cumsum(d[:-1])
         inked = t[t > 0]
         return float(np.median(inked)) if inked.size else 0.0
 
     def column_ys(self, x_abs: int) -> np.ndarray:
         """All ink rows of this component at absolute column ``x_abs``."""
-        a = self.runs_arr
+        a = self.runs
         sel = (a[:, 1] <= x_abs) & (x_abs < a[:, 2])
         return np.sort(a[sel, 0]).astype(np.int32)
 
@@ -94,37 +106,36 @@ def _all_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All ink runs of a {0,1} mask in one vectorized pass.
 
     Returns (rows, starts, ends) sorted by (row, start); ends exclusive.
-    One np.diff over the zero-padded mask replaces a per-row Python
-    loop — the CC hot path at page scale.
+    The mask is copied into a uint8 buffer with one zero column on each
+    side, so in the flattened buffer every run is bounded by a 0->1 and
+    a 1->0 transition inside its own row. One ``f[1:] != f[:-1]`` and one
+    nonzero scan find them all; transitions alternate start, end.
     """
     h, w = mask.shape
     W = w + 2
-    padded = np.zeros((h, W), dtype=np.int8)
+    padded = np.zeros((h, W), dtype=np.uint8)
     padded[:, 1:-1] = mask
-    # one flattened diff + ONE nonzero scan (the zero pad columns keep
-    # row boundaries transition-free); start at (r, x) appears at flat
-    # index r*W + x with value +1, exclusive end at r*W + x1 with -1
-    d = np.diff(padded.ravel())
-    nz = np.flatnonzero(d)
-    vals = d[nz]
-    starts = nz[vals == 1]
-    ends = nz[vals == -1]
-    # starts/ends align pairwise in flat (row-major) order
-    return starts // W, starts % W, ends % W
+    f = padded.reshape(-1)
+    # a transition between flat k and k+1 sits at k: a run over mask
+    # columns [x0, x1) of row r starts at r*W + x0 and ends at r*W + x1
+    nz = np.flatnonzero(f[1:] != f[:-1])
+    rows, starts = np.divmod(nz[0::2], W)
+    return rows, starts, nz[1::2] - rows * W
 
 
 def connected_components(mask: np.ndarray) -> list[Component]:
     """Label a {0,1} mask; returns components sorted bottom-to-top.
 
     Fully vectorized run-based labeling: runs from one flattened
-    diff/nonzero pass; the run adjacency graph from two batched
+    transition/nonzero pass; the run adjacency graph from two batched
     ``searchsorted`` calls over composite (row, x) keys (within a row
     both starts and exclusive ends are strictly increasing, so the
     prev-row runs touching a given run — 8-connectivity, diagonal touch
     included — form a contiguous index window); components from
-    min-label propagation with pointer doubling (O(log n) rounds);
-    per-component bbox/area via grouped reductions. The partition is
-    identical to the classic two-pass union-find this replaces.
+    root hooking with pointer jumping, each component labelled by its
+    smallest run index; per-component bbox/area by segment reductions
+    over one run table grouped by component. The partition, the order
+    and the runs are identical to the classic two-pass union-find.
     """
     h, w = mask.shape
     rr, rs, re = _all_runs(mask)
@@ -145,53 +156,59 @@ def connected_components(mask: np.ndarray) -> list[Component]:
     if total:
         ii = np.repeat(np.arange(n), cnt)
         jj = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt) + np.repeat(jlo, cnt)
+        # label[i] <= i always points into i's own component, so a
+        # component's smallest run index is its only fixpoint: hook the
+        # roots of every split edge onto the smaller root, jump pointers
+        # to the roots, repeat until no edge joins two trees
         while True:
-            m = label.copy()
-            np.minimum.at(m, ii, label[jj])
-            np.minimum.at(m, jj, label[ii])
-            while True:  # pointer doubling to the round's fixpoint
-                mm = m[m]
-                if np.array_equal(mm, m):
-                    break
-                m = mm
-            if np.array_equal(m, label):
+            li = label[ii]
+            lj = label[jj]
+            split = li != lj
+            if not split.any():
                 break
-            label = m
+            li = li[split]
+            lj = lj[split]
+            np.minimum.at(label, li, lj)
+            np.minimum.at(label, lj, li)
+            while True:
+                nxt = label[label]
+                if np.array_equal(nxt, label):
+                    break
+                label = nxt
 
-    uniq, inv = np.unique(label, return_inverse=True)
-    k = uniq.size
-    xmin = np.full(k, W, dtype=np.int64)
-    np.minimum.at(xmin, inv, rs)
-    xmax = np.zeros(k, dtype=np.int64)
-    np.maximum.at(xmax, inv, re)
-    ymin = np.full(k, h, dtype=np.int64)
-    np.minimum.at(ymin, inv, rr)
-    ymax = np.full(k, -1, dtype=np.int64)
-    np.maximum.at(ymax, inv, rr)
-    area = np.bincount(inv, weights=(re - rs).astype(np.float64)).astype(np.int64)
-
+    roots = np.flatnonzero(label == np.arange(n))  # ascending, as np.unique
+    k = roots.size
+    cid = np.empty(n, dtype=np.int64)
+    cid[roots] = np.arange(k)
+    inv = cid[label]
     # stable group-by keeps each component's runs row-major, matching the
     # insertion order of the two-pass labeling
     order = np.argsort(inv, kind="stable")
-    bounds = np.concatenate(([0], np.cumsum(np.bincount(inv))))
-    run_tuples = list(zip(rr.tolist(), rs.tolist(), re.tolist()))
-    ol = order.tolist()
-    comps: list[Component] = []
-    for ci in range(k):
-        idxs = ol[bounds[ci] : bounds[ci + 1]]
-        comps.append(
-            Component(
-                runs=[run_tuples[t] for t in idxs],
-                x=int(xmin[ci]),
-                y=int(ymin[ci]),
-                w=int(xmax[ci] - xmin[ci]),
-                h=int(ymax[ci] - ymin[ci] + 1),
-                area=int(area[ci]),
-            )
-        )
+    table = np.stack((rr, rs, re), axis=1)[order]
+    table.flags.writeable = False
+    bounds = np.zeros(k + 1, dtype=np.int64)
+    np.cumsum(np.bincount(inv, minlength=k), out=bounds[1:])
+    first = bounds[:-1]
+    ymin = table[first, 0]
+    ymax = table[bounds[1:] - 1, 0]
+    xmin = np.minimum.reduceat(table[:, 1], first)
+    xmax = np.maximum.reduceat(table[:, 2], first)
+    area = np.add.reduceat(table[:, 2] - table[:, 1], first)
     # bottom-to-top, then left-to-right — OpenCV-like discovery order
-    comps.sort(key=lambda c: (-c.y, c.x))
-    return comps
+    # (lexsort is stable: ties keep the smallest-run-index order)
+    disc = np.lexsort((xmin, -ymin)).tolist()
+    b = bounds.tolist()
+    xs, ys, ws, hs, areas = (
+        xmin.tolist(), ymin.tolist(), (xmax - xmin).tolist(),
+        (ymax - ymin + 1).tolist(), area.tolist(),
+    )
+    return [
+        Component(
+            runs=table[b[ci] : b[ci + 1]],
+            x=xs[ci], y=ys[ci], w=ws[ci], h=hs[ci], area=areas[ci],
+        )
+        for ci in disc
+    ]
 
 
 def filter_area(comps: list[Component], min_area: float) -> list[Component]:
@@ -255,13 +272,11 @@ def get_text_area(
             max(c.y + c.h for c in cs),
         )
 
-    best = max(
-        clusters.values(),
-        key=lambda cs: (
-            (bbox_of(cs)[2] - bbox_of(cs)[0]) * (bbox_of(cs)[3] - bbox_of(cs)[1])
-        ),
+    # each cluster's bbox once; max() keeps the first of equal areas
+    x0, y0, x1, y1 = max(
+        (bbox_of(cs) for cs in clusters.values()),
+        key=lambda b: (b[2] - b[0]) * (b[3] - b[1]),
     )
-    x0, y0, x1, y1 = bbox_of(best)
     return (x0, y0, x1 - 1, y1 - 1)
 
 

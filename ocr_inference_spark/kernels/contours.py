@@ -28,7 +28,7 @@ def component_contour(comp: Component) -> np.ndarray:
     implicitly, like an OpenCV contour)."""
     # runs are row-major with disjoint ascending runs per row, so each
     # row's min x0 is its FIRST run and max x1 its LAST run
-    a = comp.runs_arr
+    a = comp.runs
     rows = a[:, 0]
     urows, first = np.unique(rows, return_index=True)
     last = np.append(first[1:], rows.size) - 1

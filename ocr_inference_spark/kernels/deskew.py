@@ -20,16 +20,29 @@ from .components import Component
 
 MAX_ANGLE = 5.0  # reference: BDRC/line_detection.py:110 max_angle
 ROTATE_THRESHOLD = 0.5  # reference: BDRC/line_detection.py:228
+_EPS = np.finfo(np.float64).eps
 
 
 def component_angle(comp: Component) -> float:
-    """Angle (degrees) of the component's top edge via least squares."""
-    top = comp.top_profile().astype(np.float64)
-    xs = np.arange(comp.w, dtype=np.float64)
+    """Angle (degrees) of the component's top edge via least squares.
+
+    The line fit is ``np.polyfit(xs, top, 1)`` written out: the same
+    column-scaled Vandermonde matrix and the same ``lstsq`` call with
+    polyfit's ``rcond``, so the slope is bit-identical without the
+    wrapper's per-call overhead (the columns are distinct, so the
+    2-column matrix always has full rank and polyfit would not warn)."""
+    top = comp.top_profile()
     valid = top >= 0
-    if valid.sum() < 2:
+    xs = np.flatnonzero(valid).astype(np.float64)
+    if xs.size < 2:
         return 0.0
-    slope = np.polyfit(xs[valid], top[valid], 1)[0]
+    lhs = np.empty((xs.size, 2))
+    lhs[:, 0] = xs
+    lhs[:, 1] = 1.0
+    scale = np.sqrt((lhs * lhs).sum(axis=0))
+    lhs /= scale
+    coef = np.linalg.lstsq(lhs, top[valid].astype(np.float64), xs.size * _EPS)[0]
+    slope = coef[0] / scale[0]
     return math.degrees(math.atan(slope))
 
 

@@ -44,21 +44,22 @@ def line_slice_stats(
     row - shift(slice center) — so the dewarp gate sees post-deskew
     geometry without the ink ever being re-materialized.
     """
-    centers = np.full(len(SLICE_FRACTIONS), np.nan)
-    heights = np.full(len(SLICE_FRACTIONS), np.nan)
-    a = comp.runs_arr  # (m, 3) [row, x0, x1) — one vector overlap test per slice
-    rows, x0s, x1s = a[:, 0], a[:, 1], a[:, 2]
-    for i, frac in enumerate(SLICE_FRACTIONS):
-        x_start = comp.x + int(frac * max(comp.w - slice_width, 0))
-        sel = (x0s < x_start + slice_width) & (x1s > x_start)
-        if sel.any():
-            hit = rows[sel]
-            lo, hi = int(hit.min()), int(hit.max())
-            s = 0.0
-            if base_shift is not None:
-                s = float(base_shift[min(x_start + slice_width // 2, len(base_shift) - 1)])
-            centers[i] = (lo + hi) / 2.0 - s
-            heights[i] = hi - lo + 1
+    x_starts = np.array(
+        [comp.x + int(frac * max(comp.w - slice_width, 0)) for frac in SLICE_FRACTIONS]
+    )
+    a = comp.runs  # (m, 3) [row, x0, x1) — one (5, m) overlap test
+    sel = (a[None, :, 1] < x_starts[:, None] + slice_width) & (a[None, :, 2] > x_starts[:, None])
+    hit = sel.any(axis=1)
+    rows = a[None, :, 0]
+    big = np.iinfo(np.int64).max
+    lo = np.where(sel, rows, big).min(axis=1, initial=big)
+    hi = np.where(sel, rows, -1).max(axis=1, initial=-1)
+    s = 0.0
+    if base_shift is not None:
+        s = base_shift[np.minimum(x_starts + slice_width // 2, len(base_shift) - 1)]
+        s = s.astype(np.float64)
+    centers = np.where(hit, (lo + hi) / 2.0 - s, np.nan)
+    heights = np.where(hit, hi - lo + 1, np.nan)
     return centers, heights
 
 

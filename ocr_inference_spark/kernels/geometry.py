@@ -128,7 +128,7 @@ def min_area_rect(
 def component_rotated_bbox(comp: Component) -> dict:
     """RotatedBBox row for a run-based component: hull of the run
     extreme pixels (same point set a contour walk visits)."""
-    a = comp.runs_arr
+    a = comp.runs
     pts = np.empty((2 * a.shape[0], 2), dtype=np.int64)
     pts[0::2, 0] = a[:, 1]
     pts[0::2, 1] = a[:, 0]

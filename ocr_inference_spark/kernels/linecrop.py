@@ -56,7 +56,7 @@ def extract_line(
     x1 = min(comp.x + comp.w, w)
     window = ink[y0:y1, x0:x1]
     region = np.zeros_like(window)
-    for row, rx0, rx1 in comp.runs:
+    for row, rx0, rx1 in comp.runs.tolist():
         ry = row - y0
         if 0 <= ry < region.shape[0]:
             region[ry, max(rx0 - x0, 0) : max(rx1 - x0, 0)] = 1

@@ -107,8 +107,8 @@ def split_merged_components(
         return comps
     out: list[Component] = []
     for c in comps:
-        by_band: dict[int, list[tuple[int, int, int]]] = {}
-        for run in c.runs:
+        by_band: dict[int, list[list[int]]] = {}
+        for run in c.runs.tolist():
             by_band.setdefault(band_of(run[0], bands), []).append(run)
         if len(by_band) <= 1:
             out.append(c)

@@ -30,28 +30,32 @@ def get_line_threshold(comps: list[Component], mask_shape, slice_width: int = 20
         return 0.0
     xmin = min(c.x for c in comps)
     xmax = max(c.x + c.w for c in comps)
-    ymin = min(c.y for c in comps)
-    ymax = max(c.y + c.h for c in comps)
     w = xmax - xmin
     x_steps = (w // slice_width) // 2
-    best: tuple[int, list[float]] = (0, [])
-    arrs = [c.runs_arr for c in comps]  # vector overlap test per comp/slice
-    for step in range(1, x_steps + 1):
-        x_start = xmin + x_steps * step
-        x_end = x_start + slice_width
-        y_centers = []
-        for a in arrs:
-            sel = (a[:, 1] < x_end) & (a[:, 2] > x_start)
-            # every run row lies inside the union bbox's [ymin, ymax] by
-            # construction, so the original row-range test is implied
-            if sel.any():
-                ys = a[sel, 0]
-                y_centers.append((int(ys.min()) + int(ys.max())) / 2.0)
-        if len(y_centers) > best[0]:
-            best = (len(y_centers), y_centers)
-    n, y_points = best
-    if n == 0 or not y_points:
+    if x_steps == 0:
         return 0.0
+    # every slice against one run table for the page: a (steps, runs)
+    # overlap matrix, then per-component row extremes by segment
+    # reductions. Every run row lies inside the union bbox's [ymin, ymax]
+    # by construction, so the original row-range test is implied; a
+    # component without runs never counts, and the median ignores order.
+    tables = [c.runs for c in comps if len(c.runs)]
+    if not tables:
+        return 0.0
+    a = np.concatenate(tables)
+    first = np.cumsum([0] + [len(t) for t in tables[:-1]])
+    x_start = xmin + x_steps * np.arange(1, x_steps + 1)[:, None]
+    sel = (a[:, 1] < x_start + slice_width) & (a[:, 2] > x_start)
+    big = np.iinfo(np.int64).max
+    lo = np.minimum.reduceat(np.where(sel, a[:, 0], big), first, axis=1)
+    hi = np.maximum.reduceat(np.where(sel, a[:, 0], -1), first, axis=1)
+    hit = hi >= 0
+    counts = hit.sum(axis=1)
+    best = int(np.argmax(counts))  # the first densest slice
+    n = int(counts[best])
+    if n == 0:
+        return 0.0
+    y_points = (lo[best, hit[best]] + hi[best, hit[best]]) / 2.0
     return float(np.median(y_points) // n)
 
 
@@ -85,13 +89,12 @@ def merge_row(comps: list[Component]) -> Component:
     """Merge same-row components into one (union of runs/bbox)."""
     if len(comps) == 1:
         return comps[0]
-    runs = [r for c in comps for r in c.runs]
     xmin = min(c.x for c in comps)
     ymin = min(c.y for c in comps)
     xmax = max(c.x + c.w for c in comps)
     ymax = max(c.y + c.h for c in comps)
     return Component(
-        runs=runs,
+        runs=np.concatenate([c.runs for c in comps]),
         x=xmin,
         y=ymin,
         w=xmax - xmin,

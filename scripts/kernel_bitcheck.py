@@ -1,12 +1,20 @@
-"""Bit-equality gate for kernel micro-optimization (round 6).
+"""Bit-equality gate for page-kernel changes.
 
 Hashes EVERY field process_page emits (texts, confs, contours, angle,
 dewarp flag, n_lines, status) over N real bench-corpus pages plus the
 detect_page surface (q34's output shape). Usage:
 
-    python scripts/kernel_bitcheck.py [n_pages]    # prints one md5
+    SPARK_GRAFT_SF_DIR=<sf dir> python scripts/kernel_bitcheck.py [n_pages]
 
-Run before and after a kernel edit; the md5 must not move.
+It prints one md5. The pages are synthesized from ``documents.parquet``
+in ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 table under
+``perfbench/data``). Run it before and after a kernel edit; the md5 must
+not move. The value to keep at sf0.1 and the default 400 pages is
+
+    md5=cd7801d8de07626b372b253b1dced3f0
+
+``tests/test_kernel_bitcheck.py`` pins the same fields on rendered
+pages without Spark.
 """
 
 from __future__ import annotations
@@ -17,13 +25,20 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", str(ROOT / "perfbench" / "data" / "sf0.1"))
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 400
 
 
 def main() -> None:
+    local = "://" not in SF_DIR
+    if local and not os.path.isfile(os.path.join(SF_DIR, "documents.parquet")):
+        sys.exit(
+            f"kernel_bitcheck: no documents.parquet in {SF_DIR}; "
+            "set SPARK_GRAFT_SF_DIR to a scale-factor directory"
+        )
     from ocr_inference_spark.model import get_session, serialize_weights
     from ocr_inference_spark.page import detect_page, process_page
     from ocr_inference_spark.session import get_spark
