@@ -299,7 +299,7 @@ def embedding_near_dup(
         #      checkpoint pins the width AND lets BOTH self-join sides
         #      reuse the same hash partitioning: zero further exchange.
         # assume_spread: the caller already balanced the scan across the
-        # cluster (e.g. queries._spread from parquet footer metadata —
+        # cluster (e.g. queries._t(..., spread=True) from io.footer_stats —
         # ~2ms); the generic fallback asks the planner, whose first
         # .rdd conversion on a fresh DataFrame costs ~100ms+ of plan
         # translation that a per-bench-sample construction repays.

@@ -218,13 +218,3 @@ def apply_column_shift(img: np.ndarray, shift: np.ndarray, fill: int = 0) -> np.
             out[y0:y1, c0:c1] = img[y0 + s : y1 + s, c0:c1]
     return out
 
-
-def rectify_page(
-    ink: np.ndarray, comps: list[Component]
-) -> tuple[np.ndarray, bool, float]:
-    """Gate + global rectification. Returns (ink', applied, ratio)."""
-    ratio, dys = distortion_ratio(comps)
-    if ratio <= TPS_THRESHOLD or not comps:
-        return ink, False, ratio
-    shift = fit_page_shift(comps, ink.shape[1])
-    return apply_column_shift(ink, shift), True, ratio

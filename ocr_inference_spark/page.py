@@ -57,9 +57,18 @@ class PipelineOptions:
 
     - ``k_factor``: vertical slack multiplier around each line crop
       (reference --k-factor / extract_line's dilation factor).
-    - ``tps_mode``: 'global' | 'global2d' | 'local' (reference --dewarp
-      + TPSMode, BDRC/data.py:74-78).
-    - ``line_sorting``: 'threshold' | 'peaks' (LineSorting enum).
+    - ``tps_mode`` (reference --dewarp + TPSMode, BDRC/data.py:74-78):
+      'global' applies the page-level polynomial rectification
+      (apply_global_tps analogue, vertical column shift); 'global2d'
+      uses the true 2-D thin-plate-spline warp (I21, kernels/tps.py)
+      through the best line's control points, materializing the deskew
+      first like the reference's rotate-then-TPS order; 'local' skips
+      page rectification and rectifies each extracted line individually.
+    - ``line_sorting`` (LineSorting enum): 'threshold' is the
+      reference's sort_lines_by_threshold ordering (fixture equality
+      depends on it); 'peaks' orders by projection-profile bands
+      (reference BDRC/data.py:53-64 — enum only there) and additionally
+      splits CC-fused touching lines at profile valleys.
     - ``dewarp``: False disables the TPS/dewarp stage entirely
       (reference runs dewarping only when --dewarp is passed).
     - ``merge_lines``: group same-row chunks into one line (reference
@@ -158,30 +167,16 @@ def process_page(
     content: bytes,
     session: RecognitionSession,
     eval_mode: bool = False,
-    tps_mode: str = "global",
-    line_sorting: str = "threshold",
     options: PipelineOptions | None = None,
 ) -> PageResult:
-    """``tps_mode``: 'global' applies the page-level polynomial
-    rectification (apply_global_tps analogue, vertical column shift);
-    'global2d' uses the true 2-D thin-plate-spline warp (I21,
-    kernels/tps.py) through the best line's control points, materializing
-    the deskew first like the reference's rotate-then-TPS order; 'local'
-    skips page rectification and rectifies each extracted line
-    individually (TPSMode.LOCAL, BDRC/data.py:74-78).
-
-    ``line_sorting``: 'threshold' is the reference's
-    sort_lines_by_threshold ordering (fixture equality depends on it);
-    'peaks' orders by projection-profile bands (LineSorting.PEAKS,
-    reference BDRC/data.py:53-64 — enum only there) and additionally
-    splits CC-fused touching lines at profile valleys.
-
-    ``options`` (a :class:`PipelineOptions`) overrides the individual
-    kwargs and adds k_factor / dewarp / merge_lines."""
+    """One page through decode -> detect -> deskew -> dewarp -> extract
+    -> recognize. ``options`` (a :class:`PipelineOptions`, default
+    ``PipelineOptions()``) selects tps mode, line sorting, k_factor,
+    dewarp, merge_lines and contours; ``eval_mode`` adds the top-k beams
+    per line."""
     from time import perf_counter
 
-    if options is None:
-        options = PipelineOptions(tps_mode=tps_mode, line_sorting=line_sorting)
+    options = options or PipelineOptions()
     tps_mode = options.tps_mode
     line_sorting = options.line_sorting
 

@@ -50,6 +50,10 @@ from .page import PipelineOptions, process_page
 from .schemas import DOCUMENTS_SCHEMA, OCR_LINES_SCHEMA
 from .worker import worker_init
 
+# Kernel partitions per core (4 waves): variable per-page cost
+# (deskew/dewarp redetects) balances out without a long straggler tail.
+WAVES_PER_CORE = 4
+
 
 def exploded_spans(docs_df: DataFrame) -> DataFrame:
     """documents -> one row per span (kind-null sentinel row for
@@ -142,12 +146,23 @@ def _make_ocr_kernel(weight_bc, options=None):
     return ocr_kernel
 
 
+def _shuffled_pages(
+    spark: SparkSession, docs_df: DataFrame, pages_df: DataFrame
+) -> DataFrame:
+    """Media spans joined to their page bytes on media_ref, then
+    exchanged at page granularity (``WAVES_PER_CORE`` partitions per
+    core) so a hot multi-page document cannot skew a partition."""
+    joined = media_spans(docs_df).join(
+        pages_df.select("media_ref", "content"), "media_ref"
+    )
+    n = spark.sparkContext.defaultParallelism * WAVES_PER_CORE
+    return joined.repartition(n, "media_ref")
+
+
 def recognize_pages(
     spark: SparkSession,
     docs_df: DataFrame,
     pages_df: DataFrame,
-    n_partitions: int | None = None,
-    repartition: bool = True,
     strategy: str = "shuffle",
     options=None,
 ) -> DataFrame:
@@ -164,8 +179,6 @@ def recognize_pages(
       document cannot skew a partition) at a partition count AQE will
       not coalesce — AQE sizes partitions by bytes, not the CPU cost
       that dominates this stage. Page bytes cross the network twice.
-      ``repartition=False`` drops the second exchange and reuses the
-      join's partitioning (once).
     - ``"broadcast"``: broadcast the SPAN side onto the pages relation —
       page bytes never move. This is the 100-TB-correct shape whenever
       the pages table is already well-distributed (bucketed by
@@ -178,21 +191,12 @@ def recognize_pages(
       (caller ensures it; see jobs/ and scripts/bench_scaling.py).
     """
     weight_bc = weights_broadcast(spark)
-    media = media_spans(docs_df)
     if strategy == "broadcast":
         joined = pages_df.select("media_ref", "content").join(
-            F.broadcast(media), "media_ref"
+            F.broadcast(media_spans(docs_df)), "media_ref"
         )
-        return joined.mapInPandas(
-            _make_ocr_kernel(weight_bc, options), schema=OCR_LINES_SCHEMA
-        )
-    joined = media.join(pages_df.select("media_ref", "content"), "media_ref")
-    if repartition:
-        if n_partitions is None:
-            # 4 waves per core: variable per-page cost (deskew/dewarp
-            # redetects) balances out without a long straggler tail
-            n_partitions = spark.sparkContext.defaultParallelism * 4
-        joined = joined.repartition(n_partitions, "media_ref")
+    else:
+        joined = _shuffled_pages(spark, docs_df, pages_df)
     return joined.mapInPandas(
         _make_ocr_kernel(weight_bc, options), schema=OCR_LINES_SCHEMA
     )
@@ -212,7 +216,6 @@ def recognize_pages_eval(
     spark: SparkSession,
     docs_df: DataFrame,
     pages_df: DataFrame,
-    n_partitions: int | None = None,
     options=None,
 ) -> DataFrame:
     """Eval-mode recognition: beam decode with top-k, emitting the
@@ -269,12 +272,9 @@ def recognize_pages_eval(
                     )
             yield pd.DataFrame(rows)
 
-    media = media_spans(docs_df)
-    joined = media.join(pages_df.select("media_ref", "content"), "media_ref")
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism * 4
-    joined = joined.repartition(n_partitions, "media_ref")
-    return joined.mapInPandas(kernel, schema=OCR_LINES_EVAL_SCHEMA)
+    return _shuffled_pages(spark, docs_df, pages_df).mapInPandas(
+        kernel, schema=OCR_LINES_EVAL_SCHEMA
+    )
 
 
 def reassemble_spans(docs_df: DataFrame, ocr_df: DataFrame) -> DataFrame:
@@ -333,15 +333,13 @@ def extract_spans(
     spark: SparkSession,
     docs_df: DataFrame,
     pages_df: DataFrame,
-    n_partitions: int | None = None,
     strategy: str = "shuffle",
     options=None,
 ) -> DataFrame:
     """End-to-end: documents + pages -> output documents (same schema).
     Output spans carry no contours, so the kernel runs ``text_only``."""
     ocr = recognize_pages(
-        spark, docs_df, pages_df, n_partitions, strategy=strategy,
-        options=text_only(options),
+        spark, docs_df, pages_df, strategy=strategy, options=text_only(options)
     )
     out = reassemble_spans(docs_df, ocr)
     # pin the declared output schema
@@ -392,7 +390,7 @@ def detect_lines(spark: SparkSession, pages_df: DataFrame) -> DataFrame:
                 rows["status"].append(d["status"])
             yield pd.DataFrame(rows)
 
-    n = spark.sparkContext.defaultParallelism * 4
+    n = spark.sparkContext.defaultParallelism * WAVES_PER_CORE
     return (
         pages_df.select("media_ref", "content")
         .repartition(n, "media_ref")

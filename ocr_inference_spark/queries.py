@@ -20,71 +20,56 @@ from pyspark.sql import functions as F
 
 from . import dedup as dd
 from . import similarity as sim
+from .io import footer_stats
 from .text import analysis as tx
 
 DEC = "decimal(18,4)"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+def _path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir}/{name}.parquet"
 
 
-def _parquet_row_count(sf_dir: str, name: str) -> int:
-    """Row count from parquet FOOTER metadata only — no Spark job, no
-    data scan. At 10^12 rows a ``df.count()`` just to size LSH planes
-    would be a second full pass over the table; footers (or catalog
-    stats on a real Iceberg table) carry the exact count for free."""
-    import pyarrow.dataset as ds
+def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
+    """Read table ``name``. ``spread=True`` is the scale-adaptive
+    scan-parallelism guard for COMPUTE-DENSE per-row paths (regex / md5
+    / higher-order-function projections), guide §2.5 "input skew" + §2
+    scale-adaptive partitioning.
 
-    return ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()
-
-
-def _scan_tasks(sf_dir: str, name: str, parallelism: int) -> int:
-    """Effective scan-task count Spark will give this parquet file, from
-    footer metadata only: splits are min(maxPartitionBytes,
-    max(openCostInBytes, bytes/defaultParallelism)) wide
-    (FilePartition.maxSplitBytes), and a split only yields rows for the
-    row groups whose midpoint falls inside it — so a single-row-group
-    file is ONE task no matter how it is split."""
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    path = f"{sf_dir}/{name}.parquet"
-    size = _os.path.getsize(path)
-    split = min(128 << 20, max(4 << 20, size // max(parallelism, 1)))
-    n_splits = max(1, -(-size // split))
-    n_rowgroups = _pq.ParquetFile(path).metadata.num_row_groups
-    return min(n_splits, n_rowgroups)
-
-
-def _spread(df: DataFrame, spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scale-adaptive scan-parallelism guard for COMPUTE-DENSE per-row
-    paths (regex / md5 / higher-order-function projections), guide §2.5
-    "input skew" + §2 scale-adaptive partitioning.
-
-    A small parquet table written as one row group planes into ONE scan
+    A small parquet table written as one row group plans into ONE scan
     task, so a downstream expression costing ~ms/row runs on one core
     while the rest of the cluster idles (measured: the q76 feature
     explode and q36 bucket projection ran 1-2 of 32 cores at sf1.0).
-    When footer metadata says the scan will produce fewer tasks than the
+    When the footer stats say the scan will produce fewer tasks than the
     session has cores, round-robin the (by construction tiny) input
     across the cores first; at real scale the input splits into far more
-    tasks than cores and this is a no-op — no exchange is added.
+    tasks than cores and this is a no-op — no exchange is added. An
+    unreadable footer means no spread.
 
     Only worth it when per-row compute dwarfs the repartition cost of a
     few MB; plain column scans and aggregations-over-bytes paths (e.g.
     lineitem) are NOT spread — measured slower (exp: 0.96s stock vs
     1.43s repartitioned for the q01 aggregate shape).
     """
-    par = spark.sparkContext.defaultParallelism
-    try:
-        tasks = _scan_tasks(sf_dir, name, par)
-    except OSError:
+    path = _path(sf_dir, name)
+    df = spark.read.parquet(path)
+    if not spread:
         return df
-    if tasks >= par:
+    par = spark.sparkContext.defaultParallelism
+    stats = footer_stats(path)
+    if stats is None or stats.scan_tasks(par) >= par:
         return df
     return df.repartition(par)
+
+
+def _rows(sf_dir: str, name: str) -> int:
+    """Exact row count from the footer stats; raises when the footer is
+    unreadable, because the caller sizes its plan from the count."""
+    path = _path(sf_dir, name)
+    stats = footer_stats(path)
+    if stats is None:
+        raise FileNotFoundError(f"no readable parquet footer at {path}")
+    return stats.rows
 
 
 def _money(col):
@@ -146,11 +131,9 @@ def q02_top_orders(spark, sf_dir):
     # discipline as dedup.BROADCAST_VECTORS_MAX_ROWS) broadcast it; at
     # real scale the count exceeds the cutoff and the shuffle join
     # stands. Output is join-strategy-invariant (same inner equi-join).
-    try:
-        if _parquet_row_count(sf_dir, "orders") <= 5_000_000:
-            orders = F.broadcast(orders)
-    except OSError:
-        pass
+    stats = footer_stats(_path(sf_dir, "orders"))
+    if stats is not None and stats.rows <= 5_000_000:
+        orders = F.broadcast(orders)
     rev = (
         li.groupBy("l_orderkey")
         .agg(
@@ -469,7 +452,7 @@ GROUP BY p_brand
 
 def q16_word_topk(spark, sf_dir):
     """Explode/UDTF-direction analogue (§2.11): word histogram top 20."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     words = docs.select(
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
     ).where(F.length("word") > 0)
@@ -491,7 +474,7 @@ GROUP BY word ORDER BY n DESC, word ASC LIMIT 20
 
 def q17_clean_hash(spark, sf_dir):
     """C1-C3 cleanup analogue: normalize + md5 + length."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     clean = tx.clean_text(F.col("text"))
     return docs.select(
         "doc_id",
@@ -530,7 +513,7 @@ GROUP BY event_type
 def q19_fingerprint(spark, sf_dir):
     """C-rolling-hash document fingerprint (text/analysis.py) — identical
     polynomial recurrence in both engines."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return docs.select("doc_id", tx.fingerprint(F.col("text")).alias("fp"))
 
 
@@ -546,7 +529,7 @@ FROM documents
 
 def q20_quality(spark, sf_dir):
     """Quality scoring (training-data op): composite prose score."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return docs.select(
         "doc_id", F.round(tx.quality_score(F.col("text")), 6).alias("quality")
     )
@@ -567,7 +550,7 @@ FROM documents
 
 def q21_langid(spark, sf_dir):
     """Language-ID heuristic (training-data op)."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return (
         docs.select(tx.lang_id(F.col("text")).alias("lang"))
         .groupBy("lang")
@@ -590,7 +573,7 @@ SELECT lang, count(*) AS n_docs FROM (
 
 def q22_token_counts(spark, sf_dir):
     """Token counting (training-data op): whitespace + BPE-ish regex."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return docs.select(
         "doc_id",
         tx.token_count(F.col("text")).cast("long").alias("ws_tokens"),
@@ -614,7 +597,7 @@ FROM documents
 
 def q23_exact_dup_keys(spark, sf_dir):
     """Exact dedup (hash-groupBy): md5 content keys + group sizes."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return (
         docs.select(F.md5(dd.normalize(F.col("text"))).alias("dup_key"))
         .groupBy("dup_key")
@@ -659,7 +642,8 @@ def q24_jaccard_pairs(spark, sf_dir):
     partition (round 6): a single-partition child satisfies every
     required distribution, which strips the 32-task exchange latency
     from each of the pipeline's stages — measured ~2x on the fixed
-    slice. Not applicable to corpus-shaped inputs (those use _spread)."""
+    slice. Not applicable to corpus-shaped inputs (those read with
+    _t(..., spread=True))."""
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).coalesce(1)
     return dd.jaccard_pairs(docs, "doc_id", "text", k=5, threshold=0.25)
 
@@ -765,13 +749,15 @@ ORACLE_Q26 = _oracle_q26()
 
 def q27_ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-3 for 5 query vectors (exact baseline)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = corpus.where(F.col("vec_id") < 5)
+
+    def vectors(emb):
+        return emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+
     # spread the corpus side only: the per-row HOF cosine against the
     # broadcast queries is the cost, and a 1-row-group embeddings file
     # otherwise runs it on one core
-    corpus = _spread(corpus, spark, sf_dir, "embeddings")
+    corpus = vectors(_t(spark, sf_dir, "embeddings", spread=True))
+    queries = vectors(_t(spark, sf_dir, "embeddings")).where(F.col("vec_id") < 5)
     return sim.cosine_topk(corpus, queries, k=3)
 
 
@@ -798,7 +784,7 @@ def q28_ann_lsh_topk(spark, sf_dir):
     (pinned in tests/test_dedup_similarity.py). Plane count scales with
     log(corpus size) in production; 3 planes x 16 tables suits ~10^3
     rows."""
-    emb = _spread(_t(spark, sf_dir, "embeddings"), spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings", spread=True)
     corpus = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     queries = corpus.where(F.col("vec_id") < 5)
     return sim.lsh_topk(corpus, queries, k=3, n_planes=3, n_tables=16, dim=64)
@@ -959,7 +945,7 @@ def q32_cer(spark, sf_dir):
     """A10 CER-evaluation analogue (OCREvaluator.evaluate_distribution,
     BDRC/inference.py:1013-1040): edit distance between raw and cleaned
     text as prediction/label pairs, averaged per source 'distribution'."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     label = tx.clean_text(F.col("text"))
     pred = F.trim(F.lower(F.col("text")))
     cer = F.levenshtein(pred, label) / F.greatest(F.length(label), F.lit(1))
@@ -987,7 +973,7 @@ def q33_encoding_roundtrip(spark, sf_dir):
     reversible; outputs per-doc md5 of translit + a roundtrip flag."""
     from .text.encodings import from_translit, to_translit
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     tr = to_translit(F.col("text"))
     return docs.select(
         "doc_id",
@@ -1034,8 +1020,8 @@ def q36_embedding_near_dup_lsh(spark, sf_dir):
     metadata (catalog stats in a real deployment) — no extra scan."""
     import math
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"), spark, sf_dir, "embeddings")
-    n = _parquet_row_count(sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings", spread=True)
+    n = _rows(sf_dir, "embeddings")
     n_planes = max(3, int(math.ceil(math.log2(max(n, 64) / 64))))
     return dd.embedding_near_dup(
         emb, "vec_id", "embedding", threshold=0.4, n_planes=n_planes, n_tables=12,
@@ -1050,7 +1036,7 @@ def q40_ann_ivf_topk(spark, sf_dir):
     over a literal centroid matrix, queries probe 4 cells, exact
     re-rank. Approximate by design -> rows-only; recall vs the exact
     q27 is pinned in tests/test_dedup_similarity.py."""
-    emb = _spread(_t(spark, sf_dir, "embeddings"), spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings", spread=True)
     corpus = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1062,7 +1048,7 @@ def q40_ann_ivf_topk(spark, sf_dir):
     # sample scan instead of TakeOrdered-ing the whole corpus.
     return sim.ivf_topk(
         corpus, queries_df, "vec_id", "embedding", k=3, n_cells=16, nprobe=10,
-        n_rows=_parquet_row_count(sf_dir, "embeddings"),
+        n_rows=_rows(sf_dir, "embeddings"),
     )
 
 
@@ -1117,7 +1103,7 @@ def q39_training_selection(spark, sf_dir):
     the join plan had an aggregate exchange plus a join exchange.
     Identical output: min(doc_id) over the dup_key partition is exactly
     groupBy(dup_key).min(doc_id) attached back to every row."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     keyed = docs.select(
         "doc_id",
         F.md5(dd.normalize(F.col("text"))).alias("dup_key"),
@@ -2326,7 +2312,7 @@ def q60_gopher_quality(spark, sf_dir):
     no shuffle: the 100-TB posture is a map-only scan."""
     from .text.analysis import gopher_quality
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return gopher_quality(docs.select("doc_id", "text")).select(
         "doc_id",
         "word_count",
@@ -2526,7 +2512,7 @@ def q63_substring_dup_windows(spark, sf_dir):
     8-byte keys before the agg — both documented reductions of the
     same semantics, which this gate pins exactly."""
     W = 32
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     wins = (
         docs.select("doc_id", "text")
         .where(F.length(F.coalesce(F.col("text"), F.lit(""))) >= W)
@@ -2575,7 +2561,7 @@ def q64_gopher_repetition(spark, sf_dir):
     pruned scan."""
     from .text.analysis import gopher_repetition
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return gopher_repetition(docs.select("doc_id", "text")).select(
         "doc_id",
         "top_word_cnt",
@@ -2642,7 +2628,7 @@ def q65_c4_line_filter(spark, sf_dir):
     it."""
     from .text.c4 import c4_filter, synth_c4_pages
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return c4_filter(synth_c4_pages(docs)).select(
         "doc_id", "n_lines", "kept_lines", "page_kept", "clean_md5"
     )
@@ -2721,7 +2707,7 @@ def q66_url_filter(spark, sf_dir):
     folding), and the only shuffles carry (doc_id, bool/int) pairs."""
     from .text.urlfilter import synth_frontier_urls, url_filter
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return url_filter(spark, synth_frontier_urls(docs))
 
 
@@ -2778,7 +2764,7 @@ def q67_bm25_topk(spark, sf_dir):
     constants broadcast, TakeOrderedAndProject for the cut."""
     from .text.retrieval import bm25_topk
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return bm25_topk(
         docs.select("doc_id", "text"), BM25_QUERY_TERMS, k=20
     )
@@ -2879,7 +2865,7 @@ def q69_html_metadata(spark, sf_dir):
     hash. Shuffle-free mapInPandas — the q44 extraction shape."""
     from .text.html_extract import html_metadata, synth_metadata_corpus
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return html_metadata(synth_metadata_corpus(spark, docs, n_docs=64))
 
 
@@ -2928,7 +2914,7 @@ def q70_quality_funnel(spark, sf_dir):
     from .text.analysis import gopher_quality, gopher_repetition
     from .text.c4 import c4_filter, synth_c4_pages
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents").select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     base = c4_filter(synth_c4_pages(docs, keep_text=True)).select(
         "doc_id", "text", F.col("page_kept").alias("c4_ok")
     )
@@ -3124,7 +3110,7 @@ def q71_stratified_sample(spark, sf_dir):
     so the sort input is ~quota-sized, then ranks exactly."""
     from .text.mixing import stratified_sample
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return stratified_sample(
         docs.select("lang", "doc_id"), quota=SAMPLE_QUOTA
     )
@@ -3156,7 +3142,7 @@ def q72_sequence_packing(spark, sf_dir):
     sort (documented in text/mixing.py)."""
     from .text.mixing import pack_sequences
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     return pack_sequences(
         docs.select("lang", "doc_id", "text"), budget=PACK_BUDGET
     )
@@ -3197,7 +3183,7 @@ def q73_decontamination(spark, sf_dir):
     (dedup.py) applied to contamination."""
     from .text.decontam import contamination_scan, synth_eval_set
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents").select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     return contamination_scan(docs, synth_eval_set(docs))
 
 
@@ -3250,7 +3236,7 @@ def q74_perplexity_buckets(spark, sf_dir):
     text/decontam.py)."""
     from .text.decontam import perplexity_buckets
 
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents").select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     return perplexity_buckets(docs)
 
 
@@ -3314,7 +3300,7 @@ def q75_bpe_pair_stats(spark, sf_dir):
     pair subtlety (a word contributes freq x occurrences for a pair
     appearing twice in it, e.g. 'aaa' -> ('a','a') x2) matches the
     published algorithm."""
-    docs = _spread(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", spread=True)
     words = (
         docs.select(
             F.explode(
@@ -3389,9 +3375,7 @@ def q76_dsir_selection(spark, sf_dir):
     (doc_id, int) agg, TakeOrderedAndProject."""
     from .text.mixing import dsir_select
 
-    docs = _spread(
-        _t(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    ).select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     return dsir_select(docs, top_k=DSIR_TOPK)
 
 
@@ -3457,9 +3441,7 @@ def q77_pii_scrub(spark, sf_dir):
     Map-only, zero-exchange, whole-stage-codegen regex scan."""
     from .text.pii import pii_scrub, synth_pii_pages
 
-    docs = _spread(
-        _t(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    ).select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     return pii_scrub(synth_pii_pages(docs))
 
 
@@ -3522,7 +3504,7 @@ def q78_semdedup(spark, sf_dir):
     cluster_id (sum n_c² not n²), one (id_b, min) agg."""
     from .dedup import semdedup
 
-    emb = _spread(_t(spark, sf_dir, "embeddings"), spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings", spread=True)
     return semdedup(
         emb, k=SEMDEDUP_K, threshold=SEMDEDUP_THRESHOLD
     )

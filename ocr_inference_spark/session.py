@@ -12,8 +12,7 @@ from pyspark.sql import SparkSession
 # DataLoader step, infer_lines_cli.py:58-62). 32 measured best in the
 # round-2 sweep (16/32/64/128/256) — small batches keep the Python
 # workers streaming behind the JVM scan instead of bursting.
-# Env-overridable for sweeps (round 6): SPARK_GRAFT_ARROW_BATCH.
-ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "32"))
+ARROW_BATCH_ROWS = 32
 
 
 def get_spark(

@@ -364,7 +364,7 @@ def train_ivf_centroids(
     is a bounded driver pull (default 4096 rows).
 
     When ``n_rows`` is known (e.g. from parquet footer metadata — see
-    queries._parquet_row_count), a hash-VALUE threshold predicate is
+    io.footer_stats), a hash-VALUE threshold predicate is
     applied before the TakeOrdered: xxhash64 is uniform over int64, so
     keeping only rows with hash below ``min + 4*sample/n_rows * range``
     passes ~4x the needed rows and provably contains the global

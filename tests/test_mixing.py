@@ -127,8 +127,8 @@ def test_bpe_pair_counting_semantics(spark, monkeypatch, tmp_path):
     )
     real_t = Q._t
     monkeypatch.setattr(
-        Q, "_t", lambda spark, sf, name: docs if name == "documents"
-        else real_t(spark, sf, name)
+        Q, "_t", lambda spark, sf, name, spread=False: docs
+        if name == "documents" else real_t(spark, sf, name, spread)
     )
     got = {
         (r["left"], r["right"]): r["pair_count"]

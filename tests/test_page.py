@@ -6,7 +6,7 @@ import pytest
 
 from ocr_inference_spark.imgcodec import png_encode
 from ocr_inference_spark.model import RecognitionSession, serialize_weights
-from ocr_inference_spark.page import process_page
+from ocr_inference_spark.page import PipelineOptions, process_page
 from ocr_inference_spark.render import render_page
 
 SESSION = RecognitionSession(serialize_weights())
@@ -70,7 +70,8 @@ def test_local_tps_mode():
     tolerance; the global mode covers the extreme-warp fixtures."""
     for kw in ({"warp_amp": 36, "warp_period": 250}, {"warp_amp": 48, "warp_period": 200}, {}):
         res = process_page(
-            png_encode(render_page(LINES, **kw)), SESSION, tps_mode="local"
+            png_encode(render_page(LINES, **kw)), SESSION,
+            options=PipelineOptions(tps_mode="local"),
         )
         assert res.status == "success"
         assert res.texts == LINES

@@ -79,13 +79,13 @@ def test_peaks_matches_threshold_on_clean_page():
     order (texts), so PEAKS is a drop-in mode."""
     from ocr_inference_spark.imgcodec import png_encode
     from ocr_inference_spark.model import RecognitionSession, serialize_weights
-    from ocr_inference_spark.page import process_page
+    from ocr_inference_spark.page import PipelineOptions, process_page
     from ocr_inference_spark.render import render_page
 
     lines = ["the quick brown fox", "jumps over the dog", "a third line"]
     content = png_encode(render_page(lines))
     sess = RecognitionSession(serialize_weights())
     a = process_page(content, sess)
-    b = process_page(content, sess, line_sorting="peaks")
+    b = process_page(content, sess, options=PipelineOptions(line_sorting="peaks"))
     assert a.status == b.status == "success"
     assert a.texts == b.texts == lines

@@ -61,14 +61,15 @@ def test_tps_corrects_horizontal_shear():
 def test_process_page_global2d_extracts_exact_text():
     from ocr_inference_spark.imgcodec import png_encode
     from ocr_inference_spark.model import RecognitionSession, serialize_weights
-    from ocr_inference_spark.page import process_page
+    from ocr_inference_spark.page import PipelineOptions, process_page
     from ocr_inference_spark.render import render_page
 
+    global2d = PipelineOptions(tps_mode="global2d")
     lines = ["hello world again", "the quick brown fox", "final content line"]
     sess = RecognitionSession(serialize_weights())
     for kw in ({}, {"skew_deg": 2.0}):
         res = process_page(
-            png_encode(render_page(lines, **kw)), sess, tps_mode="global2d"
+            png_encode(render_page(lines, **kw)), sess, options=global2d
         )
         assert res.status == "success", (kw, res.error)
         assert res.texts == lines, kw
@@ -79,7 +80,7 @@ def test_process_page_global2d_extracts_exact_text():
     # exact text (the default column-shift mode, which jointly fits ALL
     # lines, stays the exact path — see test_page.py)
     res = process_page(
-        png_encode(render_page(lines, warp_amp=40)), sess, tps_mode="global2d"
+        png_encode(render_page(lines, warp_amp=40)), sess, options=global2d
     )
     assert res.status == "success", res.error
     assert res.dewarp_applied
