@@ -167,13 +167,3 @@ def corpus_to_spark(spark, documents, pages):
     docs_df = spark.createDataFrame(doc_rows, schema=DOCUMENTS_SCHEMA)
     pages_df = spark.createDataFrame(page_rows, schema=PAGES_SCHEMA)
     return docs_df, pages_df
-
-
-def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 7, **kw) -> None:
-    """Materialize a corpus as parquet (documents/, pages/, expected/)."""
-    documents, pages, expected = build_corpus(n_docs=n_docs, seed=seed, **kw)
-    docs_df, pages_df = corpus_to_spark(spark, documents, pages)
-    exp_df, _ = corpus_to_spark(spark, expected, [])
-    docs_df.write.mode("overwrite").parquet(f"{out_dir}/documents")
-    pages_df.write.mode("overwrite").parquet(f"{out_dir}/pages")
-    exp_df.write.mode("overwrite").parquet(f"{out_dir}/expected")

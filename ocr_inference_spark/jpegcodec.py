@@ -212,15 +212,6 @@ def _packed_lut(tbl: _DecodeTable) -> list[int]:
     return lut
 
 
-def _extend(value: int, size: int) -> int:
-    """T.81 F.12 EXTEND: map a `size`-bit magnitude to its signed value."""
-    if size == 0:
-        return 0
-    if value < (1 << (size - 1)):
-        return value - (1 << size) + 1
-    return value
-
-
 # ---------------------------------------------------------------------------
 # Decoder
 # ---------------------------------------------------------------------------

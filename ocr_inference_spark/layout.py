@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .imgcodec import decode_image
+from .kernels.binarize import binarize, to_gray
 from .kernels.components import (
     Component,
     filter_in_text_area,
@@ -29,6 +31,8 @@ from .kernels.components import (
     get_text_area,
 )
 from .kernels.morphology import H_RADIUS, V_RADIUS
+from .page import _detect
+from .pipeline import by_page, map_pages
 
 LAYOUT_CLASSES = ("line", "caption", "margin", "header", "pagenr", "text")
 
@@ -103,40 +107,19 @@ def detect_layout(
     """Pages -> one row per region (image_name, cls, bbox). The F5
     class filter (``filter_classes``, BDRC/inference.py:868-888) is a
     relational ``isin`` AFTER the kernel so Catalyst can prune it."""
-    import pandas as pd
 
-    def kernel(batches):
-        from .imgcodec import decode_image
-        from .kernels.binarize import binarize, to_gray
-        from .page import _detect
+    def rows(r):
+        try:
+            ink = binarize(to_gray(decode_image(bytes(r.content))))
+        except Exception:
+            yield r.media_ref, None, 0, 0, 0, 0, "decode_failed"
+            return
+        mask, comps = _detect(ink)
+        for cls, c in classify_regions(comps, mask.shape, ink.shape[1]):
+            yield r.media_ref, cls, c.x, c.y, c.w, c.h, "success"
 
-        for pdf in batches:
-            rows = {k: [] for k in ("image_name", "cls", "x", "y", "w", "h", "status")}
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                try:
-                    ink = binarize(to_gray(decode_image(bytes(content))))
-                except Exception:
-                    rows["image_name"].append(ref)
-                    rows["cls"].append(None)
-                    rows["x"].append(0); rows["y"].append(0)
-                    rows["w"].append(0); rows["h"].append(0)
-                    rows["status"].append("decode_failed")
-                    continue
-                mask, comps = _detect(ink)
-                for cls, c in classify_regions(comps, mask.shape, ink.shape[1]):
-                    rows["image_name"].append(ref)
-                    rows["cls"].append(cls)
-                    rows["x"].append(c.x); rows["y"].append(c.y)
-                    rows["w"].append(c.w); rows["h"].append(c.h)
-                    rows["status"].append("success")
-            yield pd.DataFrame(rows)
-
-    n = spark.sparkContext.defaultParallelism * 4
-    out = (
-        pages_df.select("media_ref", "content")
-        .repartition(n, "media_ref")
-        .mapInPandas(kernel, schema=LAYOUT_OUT_SCHEMA)
-    )
+    pages = by_page(spark, pages_df.select("media_ref", "content"))
+    out = map_pages(pages, LAYOUT_OUT_SCHEMA, lambda: rows)
     if filter_classes:
         out = out.where(F.col("cls").isin(filter_classes))
     return out
@@ -178,56 +161,49 @@ def render_layout_pages(spark: SparkSession, spec_df: DataFrame) -> DataFrame:
     n_lines text-line bands, plus a caption band / margin-header-pagenr
     furniture when the spec says so — the region inventory the layout
     kernel must recover class-for-class."""
-    import pandas as pd
+    from .bmpcodec import bmp_encode, pnm_encode
+    from .gifcodec import gif_encode
+    from .imgcodec import png_encode, tiff_encode
+    from .jpegcodec import jpeg_encode, jpeg_encode_progressive
+    from .render import render_page
 
-    def kernel(batches):
-        from .bmpcodec import bmp_encode, pnm_encode
-        from .gifcodec import gif_encode
-        from .imgcodec import png_encode, tiff_encode
-        from .jpegcodec import jpeg_encode, jpeg_encode_progressive
-        from .render import render_page
+    # rotate container formats per doc so the driver's own
+    # correctness gate (q34/q38 vs the DuckDB spec oracle) exercises
+    # the real ingestion codecs, not just PNG. The lossless slots
+    # are GEOMETRY-exact (G4 rethresholds {25,235} -> {0,255}, which
+    # shifts the adaptive-binarization operating point but not the
+    # detected geometry); the two JPEG slots (baseline q95 +
+    # progressive q95 — the hardest decoder in the repo) are lossy
+    # but provably quantization-invariant for spec pages: worst-case
+    # pixel error is < 20 levels against a 210-level ink/paper
+    # separation, so binarize recovers the identical mask
+    # (tests/test_layout.py::test_jpeg_slots_geometry_invariant
+    # pins region equality across every spec shape)
+    encoders = [
+        png_encode,
+        lambda im: tiff_encode(im, compression="g4"),
+        lambda im: tiff_encode(im, compression="lzw", predictor=2),
+        lambda im: tiff_encode(im, compression="deflate", predictor=2),
+        lambda im: tiff_encode(im, compression="packbits"),
+        lambda im: jpeg_encode(im, quality=95),
+        lambda im: jpeg_encode_progressive(im, quality=95),
+        bmp_encode,  # cv2.imread --image surface (bit-exact)
+        pnm_encode,  # netpbm P5 (bit-exact)
+        gif_encode,  # web still-image surface (256-gray GCT, bit-exact)
+    ]
 
-        # rotate container formats per doc so the driver's own
-        # correctness gate (q34/q38 vs the DuckDB spec oracle) exercises
-        # the real ingestion codecs, not just PNG. The lossless slots
-        # are GEOMETRY-exact (G4 rethresholds {25,235} -> {0,255}, which
-        # shifts the adaptive-binarization operating point but not the
-        # detected geometry); the two JPEG slots (baseline q95 +
-        # progressive q95 — the hardest decoder in the repo) are lossy
-        # but provably quantization-invariant for spec pages: worst-case
-        # pixel error is < 20 levels against a 210-level ink/paper
-        # separation, so binarize recovers the identical mask
-        # (tests/test_layout.py::test_jpeg_slots_geometry_invariant
-        # pins region equality across every spec shape)
-        encoders = [
-            png_encode,
-            lambda im: tiff_encode(im, compression="g4"),
-            lambda im: tiff_encode(im, compression="lzw", predictor=2),
-            lambda im: tiff_encode(im, compression="deflate", predictor=2),
-            lambda im: tiff_encode(im, compression="packbits"),
-            lambda im: jpeg_encode(im, quality=95),
-            lambda im: jpeg_encode_progressive(im, quality=95),
-            bmp_encode,  # cv2.imread --image surface (bit-exact)
-            pnm_encode,  # netpbm P5 (bit-exact)
-            gif_encode,  # web still-image surface (256-gray GCT, bit-exact)
-        ]
-        for pdf in batches:
-            rows = {k: [] for k in ("media_ref", "content", "width", "height")}
-            for doc_id, n_lines, caption, noise in zip(
-                pdf["doc_id"], pdf["n_lines"], pdf["caption"], pdf["noise"]
-            ):
-                img = render_page(
-                    list(_SPEC_LINE_POOL[: int(n_lines)]),
-                    caption=bool(caption),
-                    noise=bool(noise),
-                )
-                rows["media_ref"].append(str(doc_id))
-                rows["content"].append(encoders[int(doc_id) % len(encoders)](img))
-                rows["width"].append(int(img.shape[1]))
-                rows["height"].append(int(img.shape[0]))
-            yield pd.DataFrame(rows)
+    def rows(r):
+        img = render_page(
+            list(_SPEC_LINE_POOL[: int(r.n_lines)]),
+            caption=bool(r.caption),
+            noise=bool(r.noise),
+        )
+        content = encoders[int(r.doc_id) % len(encoders)](img)
+        yield str(r.doc_id), content, int(img.shape[1]), int(img.shape[0])
 
     n = spark.sparkContext.defaultParallelism
-    return spec_df.repartition(n, "doc_id").mapInPandas(
-        kernel, schema="media_ref string, content binary, width int, height int"
+    return map_pages(
+        spec_df.repartition(n, "doc_id"),
+        "media_ref string, content binary, width int, height int",
+        lambda: rows,
     )

@@ -13,7 +13,9 @@ Stage order mirrors the reference pipeline (BDRC/pipeline.py:30-195):
   3. dewarp (distortion gate at ratio > 0.25, polynomial baseline fit)
   4. reading-order sort + line extraction
   5. CTC text recognition
-Every stage carries an (OpStatus, payload) error channel like the
+Stages 1-4 (after decode) are written once, in ``page_stages``:
+``process_page`` runs them and recognizes, and the debug sink
+(artifacts.py) serialises the state they leave. Every stage carries an (OpStatus, payload) error channel like the
 reference (BDRC/pipeline.py:83-85) — a failed page yields status !=
 'success' instead of failing the task.
 """
@@ -163,22 +165,140 @@ def detect_page(content: bytes) -> dict:
     }
 
 
+@dataclass
+class PageState:
+    """What the page stages leave behind, filled in as each one
+    finishes (:func:`page_stages`). ``process_page`` recognizes from it
+    and the debug sink (artifacts.py) serialises it."""
+
+    stage: str = "decode"  # the stage running, or the last one finished
+    ink: np.ndarray | None = None  # binarized page; rectified by dewarp
+    mask: np.ndarray | None = None  # segmentation mask of ``ink``
+    angle: float = 0.0
+    candidates: list = field(default_factory=list)  # lines the dewarp gate measured
+    ratio: float = 0.0
+    dys: list = field(default_factory=list)
+    applied: bool = False  # the dewarp gate fired
+    rectified: bool = False  # ink was shifted/warped and re-detected
+    ordered: list = field(default_factory=list)  # lines in reading order
+    threshold: float | None = None  # None under 'peaks' sorting
+    line_imgs: list = field(default_factory=list)
+    contours: list = field(default_factory=list)
+
+
+def page_stages(content: bytes, options: PipelineOptions, st: PageState):
+    """Run decode, detect, deskew, dewarp and extract over one page,
+    filling ``st`` (a fresh :class:`PageState`) in and yielding each
+    stage's name as it finishes.
+    ``st.stage`` names the stage running, so a caller that catches an
+    exception knows which stage raised."""
+    tps_mode = options.tps_mode
+
+    gray = to_gray(decode_image(content))
+    yield st.stage
+
+    # stage 1: detection
+    st.stage = "detect"
+    ink = binarize(gray)
+    width = ink.shape[1]
+    mask, comps = _detect(ink)
+    st.ink, st.mask = ink, mask
+    yield st.stage
+
+    # stage 2: deskew (reference: BDRC/line_detection.py:212-244) — the
+    # correction is a per-column shift, SCHEDULED here and composed with
+    # the dewarp shift below so the ink is re-materialized (and
+    # re-detected) at most once
+    st.stage = "deskew"
+    angle = estimate_page_angle(comps, mask.shape)
+    base = shear_shift(width, angle) if abs(angle) > ROTATE_THRESHOLD else None
+    st.angle = angle
+    yield st.stage
+
+    # stage 3: dewarp gate + fit on analytically-deskewed geometry
+    # (reference: BDRC/inference.py:535-589)
+    st.stage = "dewarp"
+    line_comps = _line_comps(comps, width)
+    ratio, dys = distortion_ratio(line_comps, base)
+    applied = (
+        options.dewarp
+        and ratio > TPS_THRESHOLD
+        and bool(line_comps)
+        and tps_mode in ("global", "global2d")
+    )
+    st.candidates, st.ratio, st.dys, st.applied = line_comps, ratio, dys, applied
+    if tps_mode == "global2d":
+        # reference order (BDRC/inference.py:535-589): materialize the
+        # rotation, re-detect, then thin-plate-spline on the rotated ink
+        from .kernels.dewarp import apply_global_tps_2d
+
+        if base is not None:
+            ink = apply_column_shift(ink, base)
+            mask, comps = _detect(ink)
+            line_comps = _line_comps(comps, width)
+        if applied:
+            _, dys2 = distortion_ratio(line_comps)
+            if line_comps:
+                ink = apply_global_tps_2d(ink, line_comps, dys2)
+        rectified = base is not None or applied
+    else:
+        total = base
+        if applied:
+            s2 = fit_page_shift(line_comps, width, base_shift=base)
+            total = s2 if base is None else base + s2
+        if total is not None:
+            ink = apply_column_shift(ink, total)
+        rectified = total is not None
+    if rectified:
+        mask, comps = _detect(ink)
+        line_comps = _line_comps(comps, width)
+        st.ink, st.mask = ink, mask
+    st.rectified = rectified
+    yield st.stage
+
+    # stage 4: reading order + extraction
+    st.stage = "extract"
+    if options.line_sorting == "peaks":
+        # LineSorting.PEAKS (reference enum BDRC/data.py:53-64, no
+        # reference implementation): projection-profile bands order
+        # the lines and split CC-fused touching lines first
+        from .kernels.projection import peaks_sort_lines, split_merged_components
+        from .kernels.reading_order import merge_row
+
+        # profile over the segmentation MASK (solid per line) — the
+        # raw glyph ink has sparse rows that would fracture bands
+        split = split_merged_components(line_comps, mask)
+        rows = peaks_sort_lines(split, mask)
+        if options.merge_lines:
+            st.ordered = [merge_row(r) for r in rows if r]
+        else:
+            st.ordered = [c for r in rows for c in r]
+    else:
+        st.ordered, st.threshold = sort_lines_by_threshold(
+            line_comps, mask.shape, group_lines=options.merge_lines
+        )
+    st.line_imgs = extract_line_images(
+        ink, st.ordered, local_tps=tps_mode == "local", k_factor=options.k_factor
+    )
+    if options.emit_contours:
+        from .kernels.contours import contour_points
+
+        st.contours = [contour_points(c) for c in st.ordered]
+    yield st.stage
+
+
 def process_page(
     content: bytes,
     session: RecognitionSession,
     eval_mode: bool = False,
     options: PipelineOptions | None = None,
 ) -> PageResult:
-    """One page through decode -> detect -> deskew -> dewarp -> extract
-    -> recognize. ``options`` (a :class:`PipelineOptions`, default
-    ``PipelineOptions()``) selects tps mode, line sorting, k_factor,
-    dewarp, merge_lines and contours; ``eval_mode`` adds the top-k beams
-    per line."""
+    """One page through :func:`page_stages` (decode -> detect -> deskew
+    -> dewarp -> extract), then recognize. ``options`` (a
+    :class:`PipelineOptions`, default ``PipelineOptions()``) selects tps
+    mode, line sorting, k_factor, dewarp, merge_lines and contours;
+    ``eval_mode`` adds the top-k beams per line."""
     from time import perf_counter
-
-    options = options or PipelineOptions()
-    tps_mode = options.tps_mode
-    line_sorting = options.line_sorting
 
     stage_ms: dict[str, float] = {}
     t0 = perf_counter()
@@ -189,105 +309,16 @@ def process_page(
         stage_ms[stage] = stage_ms.get(stage, 0.0) + (t1 - t0) * 1000.0
         t0 = t1
 
-    stage = "decode"
+    st = PageState()
     try:
-        gray = to_gray(decode_image(content))
-    except Exception as exc:  # malformed media payload -> failed row
-        _mark("decode")  # partial time of the failing stage -> audit row
-        return PageResult(status="failed:decode", error=str(exc)[:200], stage_ms=stage_ms)
-    _mark("decode")
-    try:
-        stage = "detect"
-        ink = binarize(gray)
-        width = ink.shape[1]
-        # stage 1: detection
-        mask, comps = _detect(ink)
-        _mark("detect")
+        for stage in page_stages(content, options or PipelineOptions(), st):
+            _mark(stage)
 
-        # stage 2: deskew (reference: BDRC/line_detection.py:212-244) —
-        # the correction is a per-column shift, SCHEDULED here and
-        # composed with the dewarp shift below so the ink is
-        # re-materialized (and re-detected) at most once
-        stage = "deskew"
-        angle = estimate_page_angle(comps, mask.shape)
-        base = shear_shift(width, angle) if abs(angle) > ROTATE_THRESHOLD else None
-        _mark("deskew")
-
-        # stage 3: dewarp gate + fit on analytically-deskewed geometry
-        # (reference: BDRC/inference.py:535-589)
-        stage = "dewarp"
-        line_comps = _line_comps(comps, width)
-        ratio, _dys = distortion_ratio(line_comps, base)
-        applied = (
-            options.dewarp
-            and ratio > TPS_THRESHOLD
-            and bool(line_comps)
-            and tps_mode in ("global", "global2d")
-        )
-        if tps_mode == "global2d":
-            # reference order (BDRC/inference.py:535-589): materialize the
-            # rotation, re-detect, then thin-plate-spline on the rotated ink
-            from .kernels.dewarp import apply_global_tps_2d
-
-            if base is not None:
-                ink = apply_column_shift(ink, base)
-                mask, comps = _detect(ink)
-                line_comps = _line_comps(comps, width)
-            if applied:
-                ratio2, dys2 = distortion_ratio(line_comps)
-                if line_comps:
-                    ink = apply_global_tps_2d(ink, line_comps, dys2)
-            if base is not None or applied:
-                mask, comps = _detect(ink)
-                line_comps = _line_comps(comps, width)
-        else:
-            total = base
-            if applied:
-                s2 = fit_page_shift(line_comps, width, base_shift=base)
-                total = s2 if base is None else base + s2
-            if total is not None:
-                ink = apply_column_shift(ink, total)
-                mask, comps = _detect(ink)
-                line_comps = _line_comps(comps, width)
-        _mark("dewarp")
-
-        # stage 4: reading order + extraction
-        stage = "extract"
-        if line_sorting == "peaks":
-            # LineSorting.PEAKS (reference enum BDRC/data.py:53-64, no
-            # reference implementation): projection-profile bands order
-            # the lines and split CC-fused touching lines first
-            from .kernels.projection import peaks_sort_lines, split_merged_components
-            from .kernels.reading_order import merge_row
-
-            # profile over the segmentation MASK (solid per line) — the
-            # raw glyph ink has sparse rows that would fracture bands
-            split = split_merged_components(line_comps, mask)
-            rows = peaks_sort_lines(split, mask)
-            if options.merge_lines:
-                ordered = [merge_row(r) for r in rows if r]
-            else:
-                ordered = [c for r in rows for c in r]
-        else:
-            ordered, _thr = sort_lines_by_threshold(
-                line_comps, mask.shape, group_lines=options.merge_lines
-            )
-        line_imgs = extract_line_images(
-            ink, ordered, local_tps=tps_mode == "local", k_factor=options.k_factor
-        )
-        if options.emit_contours:
-            from .kernels.contours import contour_points
-
-            line_contours = [contour_points(c) for c in ordered]
-        else:
-            line_contours = []
-        _mark("extract")
-
-        stage = "recognize"
         # stage 5: recognition (eval_mode switches to beam decode with
         # top-k + confidences, cf. run_text_recognition_eval,
         # BDRC/inference.py:668-726)
-        logits_list = session.forward_batch(line_imgs)
+        st.stage = "recognize"
+        logits_list = session.forward_batch(st.line_imgs)
         texts: list[str] = []
         confs: list[float] = []
         beams_out: list[list[tuple[str, float]]] = []
@@ -309,17 +340,17 @@ def process_page(
             beams=beams_out,
             texts=texts,
             confs=confs,
-            contours=line_contours,
-            angle=float(angle),
-            dewarp_applied=bool(applied),
-            distortion_ratio=float(ratio),
+            contours=st.contours,
+            angle=float(st.angle),
+            dewarp_applied=bool(st.applied),
+            distortion_ratio=float(st.ratio),
             n_lines=len(texts),
             stage_ms=stage_ms,
         )
-    except Exception as exc:
+    except Exception as exc:  # malformed media or a failing stage -> failed row
         # stage-tagged failure, mirroring AuditLogger.log_stage_error
         # (reference: BDRC/audit_logger.py:41-64); partial stage time kept
-        _mark(stage)
+        _mark(st.stage)
         return PageResult(
-            status=f"failed:{stage}", error=str(exc)[:200], stage_ms=stage_ms
+            status=f"failed:{st.stage}", error=str(exc)[:200], stage_ms=stage_ms
         )

@@ -31,22 +31,23 @@ Scale notes (100 TB / 10^12 docs):
   the import caches at every task start, and on CPython 3.11 each
   ``zipimporter`` then re-reads its archive (pyspark.zip, the
   spark-core jar, py4j), ~58 ms of worker CPU per task on a 4-vCPU
-  box. ``worker.worker_init`` (installed by ``get_session``) skips the
-  re-read of unchanged archives in the reused worker, so page-granular
-  partitioning (4 waves per core) stays cheap.
+  box. ``worker.worker_init`` (installed by every page kernel's driver,
+  ``map_pages``) skips the re-read of unchanged archives in the reused
+  worker, so page-granular partitioning (4 waves per core) stays cheap.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import replace
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .model import get_session, serialize_weights
-from .page import PipelineOptions, process_page
+from .page import PipelineOptions, detect_page, process_page
 from .schemas import DOCUMENTS_SCHEMA, OCR_LINES_SCHEMA
 from .worker import worker_init
 
@@ -99,64 +100,83 @@ def text_only(options: PipelineOptions | None) -> PipelineOptions:
     return replace(options or PipelineOptions(), emit_contours=False)
 
 
-def _make_ocr_kernel(weight_bc, options=None):
-    """Build the mapInPandas kernel closing over broadcast weights and
-    the (picklable) per-run PipelineOptions."""
+def page_kernel(columns: list[str], setup: Callable[[], Callable]):
+    """The ``mapInPandas`` function of :func:`map_pages`. ``setup()``
+    runs once per task, after ``worker.worker_init``, and returns the
+    row function. That gets each input row (a namedtuple over the input
+    columns) and yields output rows as tuples in ``columns`` order; each
+    Arrow batch in gives one frame out, an empty batch an empty frame."""
 
-    def ocr_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        session = get_session(weight_bc.value)  # executor-global, warm
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
+        row_fn = setup()
         for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in OCR_LINES_SCHEMA.fields}
-            for doc_id, media_offset, media_ref, content in zip(
-                pdf["doc_id"], pdf["media_offset"], pdf["media_ref"], pdf["content"]
-            ):
-                res = process_page(bytes(content), session, options=options)
-                if res.status == "success" and res.texts:
-                    for rank, (text, conf) in enumerate(zip(res.texts, res.confs)):
-                        out["doc_id"].append(doc_id)
-                        out["media_offset"].append(media_offset)
-                        out["media_ref"].append(media_ref)
-                        out["line_rank"].append(rank)
-                        out["text"].append(text)
-                        out["ctc_conf"].append(conf)
-                        out["page_angle"].append(res.angle)
-                        out["dewarp_applied"].append(res.dewarp_applied)
-                        out["n_lines"].append(res.n_lines)
-                        out["status"].append(res.status)
-                        out["stage_ms"].append(res.stage_ms)
-                        out["contour"].append(
-                            res.contours[rank] if rank < len(res.contours) else None
-                        )
-                else:
-                    # keep one row per failed/empty page for lineage metrics
-                    out["doc_id"].append(doc_id)
-                    out["media_offset"].append(media_offset)
-                    out["media_ref"].append(media_ref)
-                    out["line_rank"].append(-1)
-                    out["text"].append(None)
-                    out["ctc_conf"].append(None)
-                    out["page_angle"].append(res.angle)
-                    out["dewarp_applied"].append(res.dewarp_applied)
-                    out["n_lines"].append(0)
-                    out["status"].append(res.status if res.status != "success" else "empty")
-                    out["stage_ms"].append(res.stage_ms)
-                    out["contour"].append(None)
+            out: dict[str, list] = {c: [] for c in columns}
+            cols = list(out.values())
+            for row in pdf.itertuples(index=False):
+                for rec in row_fn(row):
+                    for col, v in zip(cols, rec):
+                        col.append(v)
             yield pd.DataFrame(out)
 
-    return ocr_kernel
+    return kernel
+
+
+def map_pages(df: DataFrame, schema, setup: Callable[[], Callable]) -> DataFrame:
+    """The one Arrow driver of the page kernels: ``df`` -> ``schema`` (a
+    StructType or DDL string) through :func:`page_kernel`."""
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    return df.mapInPandas(page_kernel(struct.fieldNames(), setup), schema=schema)
+
+
+def by_page(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` exchanged at page granularity on media_ref,
+    ``WAVES_PER_CORE`` partitions per core, so a hot multi-page document
+    cannot skew a partition."""
+    n = spark.sparkContext.defaultParallelism * WAVES_PER_CORE
+    return df.repartition(n, "media_ref")
+
+
+def _ocr_rows(weight_bc, options):
+    """``map_pages`` setup of the OCR kernel: per page, one row per
+    recognized line, or one row for a failed or empty page (the lineage
+    metrics count it). ``options`` is the picklable per-run
+    PipelineOptions."""
+
+    def setup():
+        session = get_session(weight_bc.value)  # executor-global, warm
+
+        def rows(r):
+            res = process_page(bytes(r.content), session, options=options)
+            page = (r.doc_id, r.media_offset, r.media_ref)
+            if res.status == "success" and res.texts:
+                for rank, (text, conf) in enumerate(zip(res.texts, res.confs)):
+                    contour = res.contours[rank] if rank < len(res.contours) else None
+                    yield page + (
+                        rank, text, conf, res.angle, res.dewarp_applied,
+                        res.n_lines, res.status, res.stage_ms, contour,
+                    )
+            else:
+                status = res.status if res.status != "success" else "empty"
+                yield page + (
+                    -1, None, None, res.angle, res.dewarp_applied,
+                    0, status, res.stage_ms, None,
+                )
+
+        return rows
+
+    return setup
 
 
 def _shuffled_pages(
     spark: SparkSession, docs_df: DataFrame, pages_df: DataFrame
 ) -> DataFrame:
     """Media spans joined to their page bytes on media_ref, then
-    exchanged at page granularity (``WAVES_PER_CORE`` partitions per
-    core) so a hot multi-page document cannot skew a partition."""
+    exchanged :func:`by_page`."""
     joined = media_spans(docs_df).join(
         pages_df.select("media_ref", "content"), "media_ref"
     )
-    n = spark.sparkContext.defaultParallelism * WAVES_PER_CORE
-    return joined.repartition(n, "media_ref")
+    return by_page(spark, joined)
 
 
 def recognize_pages(
@@ -197,9 +217,7 @@ def recognize_pages(
         )
     else:
         joined = _shuffled_pages(spark, docs_df, pages_df)
-    return joined.mapInPandas(
-        _make_ocr_kernel(weight_bc, options), schema=OCR_LINES_SCHEMA
-    )
+    return map_pages(joined, OCR_LINES_SCHEMA, _ocr_rows(weight_bc, options))
 
 
 # reference OCR-lines schema (save_ocr_lines_parquet, BDRC/utils.py:1273-1285);
@@ -224,56 +242,35 @@ def recognize_pages_eval(
     run_text_recognition_eval, BDRC/inference.py:668-726)."""
     import hashlib
 
+    from .kernels.ctc import ctc_confidence
+
     weight_bc = weights_broadcast(spark)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernels.ctc import ctc_confidence
-        from .page import process_page
-
+    def setup():
         session = get_session(weight_bc.value)
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "guid", "doc_id", "media_ref", "line_rank", "text",
-                    "encoding", "ctc_conf", "norm_logp", "n_beams",
-                    "logits", "lm_scores",
-                )
-            }
-            for doc_id, media_ref, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"]
-            ):
-                res = process_page(
-                    bytes(content), session, eval_mode=True, options=options
-                )
-                if res.status != "success":
-                    continue
-                for rank, (text, conf, beams) in enumerate(
-                    zip(res.texts, res.confs, res.beams)
-                ):
-                    guid = hashlib.md5(
-                        f"{doc_id}/{media_ref}/{rank}/{text}".encode()
-                    ).hexdigest()
-                    best_lp = beams[0][1]
-                    rows["guid"].append(guid)
-                    rows["doc_id"].append(doc_id)
-                    rows["media_ref"].append(media_ref)
-                    rows["line_rank"].append(rank)
-                    rows["text"].append(text)
-                    rows["encoding"].append("UNICODE")
-                    rows["ctc_conf"].append(conf)
-                    rows["norm_logp"].append(
-                        best_lp / max(len(text), 1)
-                    )
-                    rows["n_beams"].append(len(beams))
-                    rows["logits"].append([lp for _, lp in beams])
-                    rows["lm_scores"].append(
-                        [ctc_confidence(lp, max(len(t), 1)) for t, lp in beams]
-                    )
-            yield pd.DataFrame(rows)
 
-    return _shuffled_pages(spark, docs_df, pages_df).mapInPandas(
-        kernel, schema=OCR_LINES_EVAL_SCHEMA
+        def rows(r):
+            res = process_page(bytes(r.content), session, eval_mode=True, options=options)
+            if res.status != "success":
+                return
+            for rank, (text, conf, beams) in enumerate(
+                zip(res.texts, res.confs, res.beams)
+            ):
+                guid = hashlib.md5(
+                    f"{r.doc_id}/{r.media_ref}/{rank}/{text}".encode()
+                ).hexdigest()
+                yield (
+                    guid, r.doc_id, r.media_ref, rank, text, "UNICODE", conf,
+                    beams[0][1] / max(len(text), 1),
+                    len(beams),
+                    [lp for _, lp in beams],
+                    [ctc_confidence(lp, max(len(t), 1)) for t, lp in beams],
+                )
+
+        return rows
+
+    return map_pages(
+        _shuffled_pages(spark, docs_df, pages_df), OCR_LINES_EVAL_SCHEMA, setup
     )
 
 
@@ -366,36 +363,16 @@ def detect_lines(spark: SparkSession, pages_df: DataFrame) -> DataFrame:
     """Detection-only job (EP3, infer_lines_cli.py): pages -> per-page
     line contours + bboxes in reading order (LINE_DETECTION_SCHEMA
     analogue, write_result_parquet BDRC/utils.py:1119-1139)."""
-    import pandas as pd  # noqa: F811
 
-    def kernel(batches):
-        from .page import detect_page
+    def rows(r):
+        d = detect_page(bytes(r.content))
+        yield (
+            r.media_ref, d["width"], d["height"], len(d["bboxes"]),
+            d["contours"], d["bboxes"], d["rbboxes"], d["status"],
+        )
 
-        worker_init()
-        for pdf in batches:
-            rows = {
-                "image_name": [], "image_width": [], "image_height": [],
-                "num_contours": [], "contours": [], "bboxes": [],
-                "rbboxes": [], "status": [],
-            }
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                d = detect_page(bytes(content))
-                rows["image_name"].append(ref)
-                rows["image_width"].append(d["width"])
-                rows["image_height"].append(d["height"])
-                rows["num_contours"].append(len(d["bboxes"]))
-                rows["contours"].append(d["contours"])
-                rows["bboxes"].append(d["bboxes"])
-                rows["rbboxes"].append(d["rbboxes"])
-                rows["status"].append(d["status"])
-            yield pd.DataFrame(rows)
-
-    n = spark.sparkContext.defaultParallelism * WAVES_PER_CORE
-    return (
-        pages_df.select("media_ref", "content")
-        .repartition(n, "media_ref")
-        .mapInPandas(kernel, schema=DETECTION_OUT_SCHEMA)
-    )
+    pages = by_page(spark, pages_df.select("media_ref", "content"))
+    return map_pages(pages, DETECTION_OUT_SCHEMA, lambda: rows)
 
 
 def page_metrics(ocr_df: DataFrame) -> DataFrame:

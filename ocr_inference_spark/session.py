@@ -20,7 +20,8 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # the cores this process may run on, unless SPARK_GRAFT_CPUS says
+    cores = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cores}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")]

@@ -138,24 +138,6 @@ def _plane_signs(plane_seed: int, dim: int) -> tuple:
     )
 
 
-def _hyperplane_sign(vec, plane_seed: int, dim: int):
-    """Sign bit of <v, h_seed> for a deterministic pseudo-random
-    hyperplane: component j of h = xxhash64(j, seed) mapped to ±1.
-    The plane is a driver-side literal array; per row this is one
-    zip_with dot product. (Kept for single-plane callers/tests — the
-    hot paths use :func:`table_buckets`, which folds ALL planes into
-    one expression so the Catalyst tree stays small.)"""
-    signs = F.array(*[F.lit(s) for s in _plane_signs(plane_seed, dim)])
-    return (
-        F.aggregate(
-            F.zip_with(vec, signs, lambda x, s: x * s),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-        > 0
-    ).cast("int")
-
-
 def plane_matrix(n_planes_total: int, dim: int):
     """Literal ``array<array<double>>`` of ±1 plane components for seeds
     ``0..n_planes_total-1``, parsed from ONE SQL string. Building the
@@ -263,12 +245,6 @@ def table_bucket_rows(
     return df.select("id", "v").mapInPandas(
         gen, schema=f"id {id_type}, t int, bucket long"
     )
-
-
-def lsh_bucket(vec, n_planes: int, dim: int):
-    """Concatenated hyperplane sign bits -> integer bucket id
-    (single-table convenience wrapper over :func:`table_buckets`)."""
-    return F.element_at(table_buckets(vec, 1, n_planes, dim), 1)
 
 
 def lsh_topk(

@@ -28,12 +28,6 @@ def clean_text(col) -> Column:
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
-def strip_brackets(col) -> Column:
-    """Remove [...] and (...) groups (cf. bracket removal,
-    BDRC/label_encoder.py:10-32)."""
-    return F.regexp_replace(col, r"[\[\(][^\]\)]*[\]\)]", "")
-
-
 def token_count(col) -> Column:
     """Whitespace token count; empty string counts 0."""
     trimmed = F.trim(col)
@@ -48,17 +42,6 @@ def bpe_ish_token_count(col) -> Column:
     each count separately)."""
     arr = F.regexp_extract_all(col, F.lit(r"([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s])"), 1)
     return F.size(arr)
-
-
-def char_count(col) -> Column:
-    return F.length(col)
-
-
-def word_lengths_avg(col) -> Column:
-    words = F.split(F.trim(col), r"\s+")
-    return F.aggregate(
-        words, F.lit(0.0), lambda acc, w: acc + F.length(w)
-    ) / F.greatest(F.size(words), F.lit(1))
 
 
 def punct_ratio(col) -> Column:

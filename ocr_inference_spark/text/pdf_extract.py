@@ -373,11 +373,6 @@ def _walk_pages(objects, resolve, node, out: list, depth=0) -> None:
 # Content-stream interpreter (text state machine, ISO 32000 §9.4)
 # ---------------------------------------------------------------------------
 
-_CONTENT_TOKEN_RE = re.compile(
-    rb"\(|<<|<|\[|\]|/[^\s()<>\[\]{}/%]*|[+-]?(?:\d+\.?\d*|\.\d+)|[A-Za-z'\"*]{1,3}"
-)
-
-
 def _decode_pdf_text(raw: bytes) -> str:
     # our corpus and fixtures are ASCII/latin-1 single-byte encodings
     return raw.decode("latin-1")

@@ -6,10 +6,11 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from ocr_inference_spark.queries import ORACLES, QUERIES  # noqa: E402
 from ocr_inference_spark.session import get_spark  # noqa: E402
@@ -39,7 +40,7 @@ def normalize(rows, cols):
 
 
 def main(selected=None):
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

@@ -8,10 +8,12 @@ detect_page surface (q34's output shape). Usage:
 
 It prints one md5. The pages are synthesized from ``documents.parquet``
 in ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 table under
-``perfbench/data``). Run it before and after a kernel edit; the md5 must
-not move. The value to keep at sf0.1 and the default 400 pages is
+``perfbench/data``), one page for each of the first n_pages source
+documents, at any session width. Run it before and after a kernel edit;
+the md5 must not move. The value to keep at sf0.1 and the default 400
+pages is
 
-    md5=cd7801d8de07626b372b253b1dced3f0
+    md5=d486da6256e2fed1feaa3e9f70b6abde
 
 ``tests/test_kernel_bitcheck.py`` pins the same fields on rendered
 pages without Spark.
@@ -44,9 +46,11 @@ def main() -> None:
     from ocr_inference_spark.session import get_spark
     from ocr_inference_spark.synth import synth_corpus
 
-    spark = get_spark(app_name="bitcheck", master="local[8]")
-    docs, pages, _ = synth_corpus(spark, SF_DIR)
-    sample = pages.limit(N).collect()
+    # the pages of the first N source documents, hashed in media_ref
+    # order: the sample does not depend on the session's width
+    spark = get_spark(app_name="bitcheck")
+    _, pages, _ = synth_corpus(spark, SF_DIR, n_docs=N)
+    sample = sorted(pages.collect(), key=lambda r: r.media_ref)
     spark.stop()
 
     session = get_session(serialize_weights())

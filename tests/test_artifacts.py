@@ -4,7 +4,12 @@ from __future__ import annotations
 
 import json
 
-from ocr_inference_spark.imgcodec import png_decode, png_encode
+import pytest
+
+from ocr_inference_spark.bmpcodec import bmp_encode, pnm_encode
+from ocr_inference_spark.gifcodec import gif_encode
+from ocr_inference_spark.imgcodec import png_decode, png_encode, tiff_encode
+from ocr_inference_spark.jpegcodec import jpeg_encode
 from ocr_inference_spark.render import render_page
 
 LINES = ["hello world", "second line here"]
@@ -13,7 +18,7 @@ LINES = ["hello world", "second line here"]
 def test_debug_page_artifacts_stage_coverage():
     from ocr_inference_spark.artifacts import debug_page_artifacts
 
-    arts = debug_page_artifacts(png_encode(render_page(LINES, skew_deg=2.0)), None)
+    arts = debug_page_artifacts(png_encode(render_page(LINES, skew_deg=2.0)))
     names = {(a["stage"], a["name"]) for a in arts}
     assert ("detection", "line_mask.png") in names
     assert ("detection", "contours.json") in names
@@ -34,6 +39,39 @@ def test_debug_page_artifacts_stage_coverage():
     assert prev.ndim == 3 and prev.shape[2] == 3  # RGB overlay
     # line regions are red-blended: red channel exceeds green there
     assert (prev[:, :, 0].astype(int) - prev[:, :, 1].astype(int)).max() > 80
+
+
+CONTAINERS = {
+    "tiff": (tiff_encode, True),
+    "jpeg_q95": (lambda im: jpeg_encode(im, quality=95), False),
+    "gif": (gif_encode, True),
+    "bmp": (bmp_encode, True),
+    "pnm": (pnm_encode, True),
+}
+
+
+@pytest.mark.parametrize("container", list(CONTAINERS))
+def test_debug_page_artifacts_every_container(container):
+    """The sink decodes like process_page: a page in any container gives
+    the PNG page's artifacts, byte-equal for the lossless ones."""
+    from ocr_inference_spark.artifacts import debug_page_artifacts
+
+    img = render_page(LINES, skew_deg=2.0)
+    encode, lossless = CONTAINERS[container]
+    want = debug_page_artifacts(png_encode(img))
+    got = debug_page_artifacts(encode(img))
+    names = [(a["stage"], a["name"]) for a in got]
+    assert ("results", "error.txt") not in names
+    assert set(names) == {(a["stage"], a["name"]) for a in want}
+    if lossless:
+        assert [a["payload"] for a in got] == [a["payload"] for a in want]
+
+
+def test_debug_page_artifacts_bad_payload_is_an_error_artifact():
+    from ocr_inference_spark.artifacts import debug_page_artifacts
+
+    arts = debug_page_artifacts(b"not an image")
+    assert [(a["stage"], a["name"]) for a in arts] == [("results", "error.txt")]
 
 
 def test_debug_artifacts_table_and_job_dir(spark, tmp_path):

@@ -2,11 +2,11 @@
 
 Renders bench-shaped pages in-process (the synthesizer's line split and
 per-page style draw: skew, warp, noise, captions) from fixed text, runs
-every ``process_page`` option family and ``detect_page`` over them, and
-hashes every output field with the formatting of
-``scripts/kernel_bitcheck.py``. A kernel rewrite that is meant to leave
-the output alone must leave this md5 where it is; a deliberate output
-change re-pins it and says why.
+every ``process_page`` option family, ``detect_page`` and the debug
+sink's ``debug_page_artifacts`` over them, and hashes every output
+field with the formatting of ``scripts/kernel_bitcheck.py``. A kernel
+rewrite that is meant to leave the output alone must leave this md5
+where it is; a deliberate output change re-pins it and says why.
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ import hashlib
 
 import pytest
 
+from ocr_inference_spark.artifacts import debug_page_artifacts
 from ocr_inference_spark.imgcodec import png_encode
 from ocr_inference_spark.model import RecognitionSession, serialize_weights
 from ocr_inference_spark.page import PipelineOptions, detect_page, process_page
@@ -39,7 +40,9 @@ OPTIONS = (
 )
 
 # md5 of every field below over the pages above, per option family and
-# for detect_page; computed on the kernel before its array-native rewrite
+# for detect_page; computed on the kernel before its array-native rewrite.
+# The artifact pin was computed on the sink's own stage copy, before it
+# was folded into ``page.page_stages``.
 PINNED = {
     "default": "536f7b2ad3565c744cdd2c212130e9c5",
     "no_contours": "4ad9302df9722746ea3a25631a088468",
@@ -47,6 +50,7 @@ PINNED = {
     "global2d": "f3545815a8ee3c8c187ecf90fde9ddc1",
     "local": "a37cd314329f3c4d61387514e1bd9c13",
     "detect": "7357a65bebfa1cd24af6c03468fc66e2",
+    "artifacts": "8855c7529e3244afc984ab7788ded5f0",
 }
 
 
@@ -73,6 +77,10 @@ def _page_record(res) -> bytes:
     ).encode()
 
 
+def _artifacts_record(arts: list[dict]) -> bytes:
+    return b"".join(repr((a["stage"], a["name"], a["payload"])).encode() for a in arts)
+
+
 def _detect_record(d: dict) -> bytes:
     return repr(
         (d["status"], d["width"], d["height"], d["bboxes"], d["contours"], d["rbboxes"])
@@ -88,12 +96,15 @@ def results() -> dict:
         for name, opts in OPTIONS
     }
     out["detect"] = [detect_page(p) for p in pages]
+    out["artifacts"] = [debug_page_artifacts(p) for p in pages]
     return out
 
 
 @pytest.mark.parametrize("name", list(PINNED))
 def test_kernel_output_pinned(results, name):
-    record = _detect_record if name == "detect" else _page_record
+    record = {"detect": _detect_record, "artifacts": _artifacts_record}.get(
+        name, _page_record
+    )
     h = hashlib.md5()
     for r in results[name]:
         h.update(record(r))
