@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from .imgcodec import png_encode
 from .kernels.contours import contour_points
 from .page import PageState, PipelineOptions, page_stages
-from .pipeline import map_pages
+from .worker import map_rows
 
 ARTIFACT_SCHEMA = (
     "media_ref string, stage string, name string, type string, payload binary"
@@ -117,7 +117,7 @@ def debug_artifacts(spark: SparkSession, pages_df: DataFrame) -> DataFrame:
         for a in debug_page_artifacts(bytes(r.content)):
             yield r.media_ref, a["stage"], a["name"], a["type"], a["payload"]
 
-    return map_pages(pages_df.select("media_ref", "content"), ARTIFACT_SCHEMA, lambda: rows)
+    return map_rows(pages_df.select("media_ref", "content"), ARTIFACT_SCHEMA, lambda: rows)
 
 
 def manifest(art_df: DataFrame) -> DataFrame:

@@ -32,7 +32,8 @@ from .kernels.components import (
 )
 from .kernels.morphology import H_RADIUS, V_RADIUS
 from .page import _detect
-from .pipeline import by_page, map_pages
+from .pipeline import by_page
+from .worker import map_rows
 
 LAYOUT_CLASSES = ("line", "caption", "margin", "header", "pagenr", "text")
 
@@ -112,14 +113,14 @@ def detect_layout(
         try:
             ink = binarize(to_gray(decode_image(bytes(r.content))))
         except Exception:
-            yield r.media_ref, None, 0, 0, 0, 0, "decode_failed"
+            yield r.media_ref, None, 0, 0, 0, 0, "failed:decode"
             return
         mask, comps = _detect(ink)
         for cls, c in classify_regions(comps, mask.shape, ink.shape[1]):
             yield r.media_ref, cls, c.x, c.y, c.w, c.h, "success"
 
     pages = by_page(spark, pages_df.select("media_ref", "content"))
-    out = map_pages(pages, LAYOUT_OUT_SCHEMA, lambda: rows)
+    out = map_rows(pages, LAYOUT_OUT_SCHEMA, lambda: rows)
     if filter_classes:
         out = out.where(F.col("cls").isin(filter_classes))
     return out
@@ -202,7 +203,7 @@ def render_layout_pages(spark: SparkSession, spec_df: DataFrame) -> DataFrame:
         yield str(r.doc_id), content, int(img.shape[1]), int(img.shape[0])
 
     n = spark.sparkContext.defaultParallelism
-    return map_pages(
+    return map_rows(
         spec_df.repartition(n, "doc_id"),
         "media_ref string, content binary, width int, height int",
         lambda: rows,

@@ -1,5 +1,5 @@
 """Multimodal media columns: images, audio, video as opaque binary +
-typed metadata, processed by Arrow-batched ``mapInPandas`` kernels.
+typed metadata, processed by Arrow-batched ``worker.map_rows`` kernels.
 
 Images are fully real (imgcodec + jpegcodec + faxcodec). Audio and
 video are real for the classic RIFF containers, implemented from the
@@ -25,15 +25,14 @@ behind identical signatures for the formats that need external codecs.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .imgcodec import png_decode, png_encode
+from .worker import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -198,46 +197,30 @@ def decode_audio(content: bytes) -> tuple[np.ndarray, int]:
 
 
 def audio_features(media_df: DataFrame) -> DataFrame:
-    """Audio binary column -> per-clip acoustic features (vectorized
-    mapInPandas; one Arrow batch = one decode+feature pass)."""
+    """Audio binary column -> per-clip acoustic features (a
+    ``worker.map_rows`` kernel: one decode+feature pass per clip)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "n_samples", "sample_rate", "duration_s",
-                "rms", "peak", "zero_crossings", "status",
-            )}
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                try:
-                    x, rate = decode_audio(bytes(content))
-                    out["media_ref"].append(ref)
-                    out["n_samples"].append(len(x))
-                    out["sample_rate"].append(rate)
-                    out["duration_s"].append(len(x) / rate if rate else 0.0)
-                    out["rms"].append(float(np.sqrt(np.mean(x**2))) if len(x) else 0.0)
-                    out["peak"].append(float(np.abs(x).max()) if len(x) else 0.0)
-                    out["zero_crossings"].append(
-                        int(np.count_nonzero(np.diff(np.signbit(x))))
-                    )
-                    out["status"].append("success")
-                except (NotImplementedError, ValueError, struct.error) as exc:
-                    out["media_ref"].append(ref)
-                    for k in ("n_samples", "sample_rate", "zero_crossings"):
-                        out[k].append(0)
-                    for k in ("duration_s", "rms", "peak"):
-                        out[k].append(0.0)
-                    out["status"].append(
-                        "unsupported_codec"
-                        if isinstance(exc, NotImplementedError)
-                        else "decode_failed"
-                    )
-            yield pd.DataFrame(out)
+    def rows(r):
+        try:
+            x, rate = decode_audio(r.content)
+            feats = (
+                len(x),
+                rate,
+                len(x) / rate if rate else 0.0,
+                float(np.sqrt(np.mean(x**2))) if len(x) else 0.0,
+                float(np.abs(x).max()) if len(x) else 0.0,
+                int(np.count_nonzero(np.diff(np.signbit(x)))),
+                "success",
+            )
+        except (NotImplementedError, ValueError, struct.error) as exc:
+            status = (
+                "unsupported_codec" if isinstance(exc, NotImplementedError) else "decode_failed"
+            )
+            feats = (0, 0, 0.0, 0.0, 0.0, 0, status)
+        yield (r.media_ref, *feats)
 
-    return (
-        media_df.where(F.col("modality") == "audio")
-        .select("media_ref", "content")
-        .mapInPandas(kernel, schema=AUDIO_FEATURES_SCHEMA)
-    )
+    audio = media_df.where(F.col("modality") == "audio").select("media_ref", "content")
+    return map_rows(audio, AUDIO_FEATURES_SCHEMA, lambda: rows)
 
 
 # ------------------------------------------------------------------ video
@@ -345,69 +328,46 @@ def iter_video_frames(content: bytes):
 
 def sample_video_frames(media_df: DataFrame, every_nth: int = 2) -> DataFrame:
     """Video binary column -> sampled frames with per-frame stats
-    (frame-sample as a mapInPandas kernel; frames re-encoded as PNG so
-    downstream image operators — including the OCR page kernel — apply
-    unchanged)."""
+    (frame-sample as a ``worker.map_rows`` kernel; frames re-encoded as
+    PNG so downstream image operators — including the OCR page kernel —
+    apply unchanged)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "frame_idx", "width", "height",
-                "mean_luma", "frame_png", "status",
-            )}
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                # per-media rows commit ATOMICALLY: a clip whose Nth
-                # frame is corrupt yields ONE failure row, never a mix
-                # of success frames and a failure row for the same ref
-                pending: list[tuple] = []
-                status = "success"
-                try:
-                    for i, frame in enumerate(iter_video_frames(bytes(content))):
-                        if i % every_nth:
-                            continue
-                        pending.append(
-                            (
-                                i,
-                                int(frame.shape[1]),
-                                int(frame.shape[0]),
-                                float(frame.mean()),
-                                png_encode(frame),
-                            )
-                        )
-                except (NotImplementedError, ValueError, struct.error) as exc:
-                    pending = []
-                    status = (
-                        "unsupported_codec"
-                        if isinstance(exc, NotImplementedError)
-                        else "decode_failed"
+    def rows(r):
+        # per-media rows commit ATOMICALLY: a clip whose Nth frame is
+        # corrupt yields ONE failure row, never a mix of success frames
+        # and a failure row for the same ref
+        pending: list[tuple] = []
+        status = "empty"
+        try:
+            for i, frame in enumerate(iter_video_frames(r.content)):
+                if i % every_nth:
+                    continue
+                pending.append(
+                    (
+                        r.media_ref,
+                        i,
+                        int(frame.shape[1]),
+                        int(frame.shape[0]),
+                        float(frame.mean()),
+                        png_encode(frame),
+                        "success",
                     )
-                if status == "success" and pending:
-                    for i, w, h, luma, png in pending:
-                        out["media_ref"].append(ref)
-                        out["frame_idx"].append(i)
-                        out["width"].append(w)
-                        out["height"].append(h)
-                        out["mean_luma"].append(luma)
-                        out["frame_png"].append(png)
-                        out["status"].append("success")
-                else:
-                    out["media_ref"].append(ref)
-                    out["frame_idx"].append(-1)
-                    out["width"].append(0)
-                    out["height"].append(0)
-                    out["mean_luma"].append(0.0)
-                    out["frame_png"].append(b"")
-                    out["status"].append(
-                        status if status != "success" else "empty"
-                    )
-            yield pd.DataFrame(out)
+                )
+        except (NotImplementedError, ValueError, struct.error) as exc:
+            pending = []
+            status = (
+                "unsupported_codec"
+                if isinstance(exc, NotImplementedError)
+                else "decode_failed"
+            )
+        yield from pending or [(r.media_ref, -1, 0, 0, 0.0, b"", status)]
 
-    return (
+    video = (
         media_df.where(F.col("modality") == "video")
         .select("media_ref", "content")
         .repartition("media_ref")
-        .mapInPandas(kernel, schema=VIDEO_FRAMES_SCHEMA)
     )
+    return map_rows(video, VIDEO_FRAMES_SCHEMA, lambda: rows)
 
 
 # ---------------------------------------------- oracle-checkable corpora
@@ -423,29 +383,21 @@ def synth_wav_corpus(spark, docs_df: DataFrame, n_docs: int = 32) -> DataFrame:
     over  n = 1000 + 10*doc_id  samples — every acoustic feature
     (duration, rms, zero crossings) is then closed-form in SQL."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_ref", "modality", "content", "mime", "meta")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 1000 + 10 * d
-                i = np.arange(n, dtype=np.int64)
-                v = (d * 7919 + i * 31) % 20001 - 10000
-                # scale by 1/32767 so wav_encode's rint(x*32767) lands
-                # exactly back on v: the container carries v verbatim
-                rows["media_ref"].append(f"wav_{d:08d}")
-                rows["modality"].append("audio")
-                rows["content"].append(wav_encode(v / 32767.0, 8000, bits=16))
-                rows["mime"].append("audio/wav")
-                rows["meta"].append({})
-            yield pd.DataFrame(rows)
+    def rows(r):
+        d = int(r.doc_id)
+        n = 1000 + 10 * d
+        i = np.arange(n, dtype=np.int64)
+        v = (d * 7919 + i * 31) % 20001 - 10000
+        # scale by 1/32767 so wav_encode's rint(x*32767) lands
+        # exactly back on v: the container carries v verbatim
+        yield f"wav_{d:08d}", "audio", wav_encode(v / 32767.0, 8000, bits=16), "audio/wav", {}
 
     src = (
         docs_df.select(F.col("doc_id").cast("long").alias("doc_id"))
         .where(F.col("doc_id") < n_docs)
     )
     n_parts = spark.sparkContext.defaultParallelism
-    return src.repartition(n_parts, "doc_id").mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return map_rows(src.repartition(n_parts, "doc_id"), MEDIA_SCHEMA, lambda: rows)
 
 
 def synth_mjpeg_corpus(spark, spec_df: DataFrame) -> DataFrame:
@@ -458,33 +410,28 @@ def synth_mjpeg_corpus(spark, spec_df: DataFrame) -> DataFrame:
     per clip, so frames pad right to the widest page with paper — the
     GIF canvas model; q42's oracle mirrors both width rules)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
         from .gifcodec import gif_encode_frames
         from .layout import _SPEC_LINE_POOL
         from .render import PAPER, render_page
 
-        for pdf in batches:
-            rows = {k: [] for k in ("media_ref", "modality", "content", "mime", "meta")}
-            for doc_id, n_lines in zip(pdf["doc_id"], pdf["n_lines"]):
-                frames = [
-                    render_page([_SPEC_LINE_POOL[j]]) for j in range(int(n_lines))
+        def rows(r):
+            d = int(r.doc_id)
+            frames = [render_page([_SPEC_LINE_POOL[j]]) for j in range(int(r.n_lines))]
+            if d % 2 == 0:
+                ref, mime = f"avi_{d:08d}", "video/x-msvideo"
+                content = avi_encode_mjpeg(frames, fps=10, quality=95)
+            else:
+                wmax = max(f.shape[1] for f in frames)
+                padded = [
+                    np.pad(f, ((0, 0), (0, wmax - f.shape[1])), constant_values=PAPER)
+                    for f in frames
                 ]
-                if int(doc_id) % 2 == 0:
-                    rows["media_ref"].append(f"avi_{int(doc_id):08d}")
-                    rows["content"].append(avi_encode_mjpeg(frames, fps=10, quality=95))
-                    rows["mime"].append("video/x-msvideo")
-                else:
-                    wmax = max(f.shape[1] for f in frames)
-                    padded = [
-                        np.pad(f, ((0, 0), (0, wmax - f.shape[1])), constant_values=PAPER)
-                        for f in frames
-                    ]
-                    rows["media_ref"].append(f"gif_{int(doc_id):08d}")
-                    rows["content"].append(gif_encode_frames(padded, delay_cs=10))
-                    rows["mime"].append("image/gif")
-                rows["modality"].append("video")
-                rows["meta"].append({})
-            yield pd.DataFrame(rows)
+                ref, mime = f"gif_{d:08d}", "image/gif"
+                content = gif_encode_frames(padded, delay_cs=10)
+            yield ref, "video", content, mime, {}
+
+        return rows
 
     n_parts = spark.sparkContext.defaultParallelism
-    return spec_df.repartition(n_parts, "doc_id").mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    return map_rows(spec_df.repartition(n_parts, "doc_id"), MEDIA_SCHEMA, setup)

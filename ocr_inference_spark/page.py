@@ -3,9 +3,9 @@
 This is the engine's per-partition kernel contract (SURVEY.md EP2):
 ``(page_bytes, weights) -> (texts, confs, angle, dewarp_applied,
 status)`` — pure, no I/O, no wall clock. The Spark pipeline
-(pipeline.py) calls it from a single ``mapInPandas`` so stages 1-5 run
-fused per Arrow batch (one Python worker round trip, not five —
-SURVEY.md §4 "operator fusion").
+(pipeline.py) calls it once per page from one ``worker.map_rows``
+kernel, so stages 1-5 run fused per Arrow batch (one Python worker
+round trip, not five — SURVEY.md §4 "operator fusion").
 
 Stage order mirrors the reference pipeline (BDRC/pipeline.py:30-195):
   1. line detection (binarize -> segmentation mask -> components)
@@ -15,9 +15,10 @@ Stage order mirrors the reference pipeline (BDRC/pipeline.py:30-195):
   5. CTC text recognition
 Stages 1-4 (after decode) are written once, in ``page_stages``:
 ``process_page`` runs them and recognizes, and the debug sink
-(artifacts.py) serialises the state they leave. Every stage carries an (OpStatus, payload) error channel like the
-reference (BDRC/pipeline.py:83-85) — a failed page yields status !=
-'success' instead of failing the task.
+(artifacts.py) serialises the state they leave. Every stage carries an
+(OpStatus, payload) error channel like the reference
+(BDRC/pipeline.py:83-85) — a failed page yields status
+``failed:<stage>`` instead of failing the task.
 """
 
 from __future__ import annotations
@@ -144,7 +145,7 @@ def detect_page(content: bytes) -> dict:
     try:
         gray = to_gray(decode_image(content))
     except Exception as exc:
-        return {"status": "decode_failed", "error": str(exc)[:200], "bboxes": [],
+        return {"status": "failed:decode", "error": str(exc)[:200], "bboxes": [],
                 "contours": [], "rbboxes": [], "width": 0, "height": 0}
     ink = binarize(gray)
     mask, comps = _detect(ink)

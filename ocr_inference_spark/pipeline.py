@@ -31,25 +31,23 @@ Scale notes (100 TB / 10^12 docs):
   the import caches at every task start, and on CPython 3.11 each
   ``zipimporter`` then re-reads its archive (pyspark.zip, the
   spark-core jar, py4j), ~58 ms of worker CPU per task on a 4-vCPU
-  box. ``worker.worker_init`` (installed by every page kernel's driver,
-  ``map_pages``) skips the re-read of unchanged archives in the reused
-  worker, so page-granular partitioning (4 waves per core) stays cheap.
+  box. ``worker.worker_init`` (installed by ``worker.map_rows``, the
+  driver of every page kernel) skips the re-read of unchanged archives
+  in the reused worker, so page-granular partitioning (4 waves per
+  core) stays cheap.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
 from dataclasses import replace
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .model import get_session, serialize_weights
 from .page import PipelineOptions, detect_page, process_page
 from .schemas import DOCUMENTS_SCHEMA, OCR_LINES_SCHEMA
-from .worker import worker_init
+from .worker import map_rows
 
 # Kernel partitions per core (4 waves): variable per-page cost
 # (deskew/dewarp redetects) balances out without a long straggler tail.
@@ -100,35 +98,6 @@ def text_only(options: PipelineOptions | None) -> PipelineOptions:
     return replace(options or PipelineOptions(), emit_contours=False)
 
 
-def page_kernel(columns: list[str], setup: Callable[[], Callable]):
-    """The ``mapInPandas`` function of :func:`map_pages`. ``setup()``
-    runs once per task, after ``worker.worker_init``, and returns the
-    row function. That gets each input row (a namedtuple over the input
-    columns) and yields output rows as tuples in ``columns`` order; each
-    Arrow batch in gives one frame out, an empty batch an empty frame."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        worker_init()
-        row_fn = setup()
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in columns}
-            cols = list(out.values())
-            for row in pdf.itertuples(index=False):
-                for rec in row_fn(row):
-                    for col, v in zip(cols, rec):
-                        col.append(v)
-            yield pd.DataFrame(out)
-
-    return kernel
-
-
-def map_pages(df: DataFrame, schema, setup: Callable[[], Callable]) -> DataFrame:
-    """The one Arrow driver of the page kernels: ``df`` -> ``schema`` (a
-    StructType or DDL string) through :func:`page_kernel`."""
-    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    return df.mapInPandas(page_kernel(struct.fieldNames(), setup), schema=schema)
-
-
 def by_page(spark: SparkSession, df: DataFrame) -> DataFrame:
     """``df`` exchanged at page granularity on media_ref,
     ``WAVES_PER_CORE`` partitions per core, so a hot multi-page document
@@ -138,7 +107,7 @@ def by_page(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 
 def _ocr_rows(weight_bc, options):
-    """``map_pages`` setup of the OCR kernel: per page, one row per
+    """``map_rows`` setup of the OCR kernel: per page, one row per
     recognized line, or one row for a failed or empty page (the lineage
     metrics count it). ``options`` is the picklable per-run
     PipelineOptions."""
@@ -217,7 +186,7 @@ def recognize_pages(
         )
     else:
         joined = _shuffled_pages(spark, docs_df, pages_df)
-    return map_pages(joined, OCR_LINES_SCHEMA, _ocr_rows(weight_bc, options))
+    return map_rows(joined, OCR_LINES_SCHEMA, _ocr_rows(weight_bc, options))
 
 
 # reference OCR-lines schema (save_ocr_lines_parquet, BDRC/utils.py:1273-1285);
@@ -269,7 +238,7 @@ def recognize_pages_eval(
 
         return rows
 
-    return map_pages(
+    return map_rows(
         _shuffled_pages(spark, docs_df, pages_df), OCR_LINES_EVAL_SCHEMA, setup
     )
 
@@ -372,7 +341,7 @@ def detect_lines(spark: SparkSession, pages_df: DataFrame) -> DataFrame:
         )
 
     pages = by_page(spark, pages_df.select("media_ref", "content"))
-    return map_pages(pages, DETECTION_OUT_SCHEMA, lambda: rows)
+    return map_rows(pages, DETECTION_OUT_SCHEMA, lambda: rows)
 
 
 def page_metrics(ocr_df: DataFrame) -> DataFrame:

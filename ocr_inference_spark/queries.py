@@ -1414,7 +1414,7 @@ def q46_web_doc_ocr_fusion(spark, sf_dir):
     resolution, render, decode, detect, order, recognize, and
     reassembly agree character-for-character in one relational plan."""
     from .pipeline import extract_spans
-    from .synth import PAGES_GEN_SCHEMA, _render_kernel
+    from .synth import render_pages
     from .text.html_extract import html_extract_spans, synth_html_corpus
 
     n_docs = 48
@@ -1441,7 +1441,7 @@ def q46_web_doc_ocr_fusion(spark, sf_dir):
     # page_lines_for golden lines + md5-styled furniture to strip);
     # has_img is the SAME md5 bit the HTML generator uses
     h = F.md5(F.col("doc_id").cast("string"))
-    pages = (
+    media = (
         docs.where(F.col("doc_id") < n_docs)
         .where(F.ascii(F.substring(h, 2, 1)) % 2 == 0)
         .select(
@@ -1450,9 +1450,8 @@ def q46_web_doc_ocr_fusion(spark, sf_dir):
             F.lit(3).alias("n_lines"),
         )
         .repartition(spark.sparkContext.defaultParallelism, "media_ref")
-        .mapInPandas(_render_kernel, schema=PAGES_GEN_SCHEMA)
-        .select("media_ref", "content", "width", "height")
     )
+    pages = render_pages(media).select("media_ref", "content", "width", "height")
 
     out = extract_spans(spark, web_docs, pages, strategy="broadcast")
     return out.select("doc_id", F.posexplode("spans").alias("pos", "s")).select(
@@ -1534,6 +1533,7 @@ def q47_pdf_doc_ocr_fusion(spark, sf_dir):
         pdf_extract_spans_df,
         synth_pdf_corpus,
     )
+    from .worker import map_rows
 
     n_docs = 48
     docs = _t(spark, sf_dir, "documents")
@@ -1554,21 +1554,14 @@ def q47_pdf_doc_ocr_fusion(spark, sf_dir):
         ).alias("spans")
     )
 
-    import pandas as pd
+    def media_rows(r):
+        for name, arr in pdf_extract_media(r.pdf).items():
+            yield name, png_encode(arr), int(arr.shape[1]), int(arr.shape[0])
 
-    def media_kernel(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "content", "width", "height")}
-            for blob in pdf["pdf"]:
-                for name, arr in pdf_extract_media(bytes(blob)).items():
-                    out["media_ref"].append(name)
-                    out["content"].append(png_encode(arr))
-                    out["width"].append(int(arr.shape[1]))
-                    out["height"].append(int(arr.shape[0]))
-            yield pd.DataFrame(out)
-
-    pages = corpus.select("pdf").mapInPandas(
-        media_kernel, schema="media_ref string, content binary, width int, height int"
+    pages = map_rows(
+        corpus.select("pdf"),
+        "media_ref string, content binary, width int, height int",
+        lambda: media_rows,
     )
 
     out = extract_spans(spark, pdf_docs, pages, strategy="broadcast")

@@ -2,9 +2,10 @@
 
 Builds an interleaved (documents, pages) pair from the driver-provided
 ``documents.parquet`` testdata: each source row's text seeds one
-document whose media pages are *rendered inside executors* (mapInPandas
-over the text rows), so corpus generation scales with the cluster the
-same way the pipeline does — nothing materializes on the driver.
+document whose media pages are *rendered inside executors*
+(``render_pages``, a ``worker.map_rows`` kernel over the text rows), so
+corpus generation scales with the cluster the same way the pipeline
+does — nothing materializes on the driver.
 
 Deterministic: page content depends only on (doc text, doc index);
 distortion style derives from a hash of the doc id, not an RNG stream
@@ -14,9 +15,7 @@ shared across partitions.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -24,6 +23,7 @@ from pyspark.sql import types as T
 from .glyphs import CHARSET
 from .imgcodec import png_encode
 from .render import render_page
+from .worker import map_rows
 
 _ALLOWED = set(CHARSET)
 
@@ -74,18 +74,16 @@ def _style_for(ref: str) -> dict:
     return kw
 
 
-def _render_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {k: [] for k in ("media_ref", "content", "width", "height", "page_lines")}
-        for ref, text, n_lines in zip(pdf["media_ref"], pdf["text"], pdf["n_lines"]):
-            lines = page_lines_for(text, int(n_lines))
-            img = render_page(lines, **_style_for(ref))
-            rows["media_ref"].append(ref)
-            rows["content"].append(png_encode(img))
-            rows["width"].append(int(img.shape[1]))
-            rows["height"].append(int(img.shape[0]))
-            rows["page_lines"].append(lines)
-        yield pd.DataFrame(rows)
+def _render_rows(r):
+    lines = page_lines_for(r.text, int(r.n_lines))
+    img = render_page(lines, **_style_for(r.media_ref))
+    yield r.media_ref, png_encode(img), int(img.shape[1]), int(img.shape[0]), lines
+
+
+def render_pages(media: DataFrame) -> DataFrame:
+    """(media_ref, text, n_lines) rows -> PAGES_GEN_SCHEMA pages, each
+    rendered executor-side from its text."""
+    return map_rows(media, PAGES_GEN_SCHEMA, lambda: _render_rows)
 
 
 def synth_corpus(
@@ -116,10 +114,8 @@ def synth_corpus(
     # matter how many pages it synthesizes; page rendering is
     # embarrassingly parallel, so spread it across the cluster first
     render_parts = spark.sparkContext.defaultParallelism * 2
-    pages_full = (
-        media.select("media_ref", "text", "n_lines")
-        .repartition(render_parts, "media_ref")
-        .mapInPandas(_render_kernel, schema=PAGES_GEN_SCHEMA)
+    pages_full = render_pages(
+        media.select("media_ref", "text", "n_lines").repartition(render_parts, "media_ref")
     )
     pages_df = pages_full.select("media_ref", "content", "width", "height")
 

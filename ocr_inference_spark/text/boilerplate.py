@@ -30,10 +30,10 @@ frequency rule is its web-corpus generalization.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..worker import map_rows
 
 
 def strip_template_blocks(
@@ -109,28 +109,18 @@ def synth_boiler_corpus(
     """documents -> (doc_id, url, html) pages where every page carries
     its site's two template blocks inside the content div. Rendered
     executor-side, zero extra shuffle beyond the doc_id spread."""
-    import pandas as pd
-
     from .html_extract import synth_html_for
     from .warc import url_of
 
     src = docs_df.select("doc_id", "text").where(F.col("doc_id") < n_docs)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "url": [url_of(d) for d in ids],
-                    "html": [
-                        synth_html_for(d, t or "", template_blocks_for(d % 7))
-                        for d, t in zip(ids, pdf["text"])
-                    ],
-                }
-            )
+    def rows(r):
+        d = int(r.doc_id)
+        yield d, url_of(d), synth_html_for(d, r.text or "", template_blocks_for(d % 7))
 
     n_parts = spark.sparkContext.defaultParallelism
-    return src.repartition(n_parts, "doc_id").mapInPandas(
-        kernel, schema="doc_id long, url string, html string"
+    return map_rows(
+        src.repartition(n_parts, "doc_id"),
+        "doc_id long, url string, html string",
+        lambda: rows,
     )

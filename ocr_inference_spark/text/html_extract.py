@@ -27,9 +27,9 @@ deterministic simplification of those:
 4. `<img src=...>` inside kept regions emits a media span at its
    document-order position.
 
-Spark-side, extraction is a mapInPandas kernel over (doc_id, html) —
-embarrassingly parallel, no shuffle, the same 100-TB shape as page
-decode. The tokenizer is a single linear scan (no backtracking), so
+Spark-side, extraction is a ``worker.map_rows`` kernel over (doc_id,
+html) — embarrassingly parallel, no shuffle, the same 100-TB shape as
+page decode. The tokenizer is a single linear scan (no backtracking), so
 cost is O(bytes) per document.
 """
 
@@ -37,9 +37,10 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..worker import map_rows
 
 # elements whose entire subtree is never content
 _DROP_TAGS = frozenset(
@@ -292,25 +293,17 @@ def _meta_charset(body: bytes) -> str | None:
 
 
 def html_extract_spans(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """(doc_id, html) -> flat ordered span rows, one mapInPandas kernel:
-    linear parse per document, no shuffle, no driver round-trips — the
-    same embarrassingly-parallel shape as page decode, so throughput
-    scales with executors at 10^12-document scale."""
-    import pandas as pd
+    """(doc_id, html) -> flat ordered span rows, one ``worker.map_rows``
+    kernel: linear parse per document, no shuffle, no driver round-trips
+    — the same embarrassingly-parallel shape as page decode, so
+    throughput scales with executors at 10^12-document scale."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "kind", "text", "media_ref", "offset")}
-            for doc_id, doc in zip(pdf["doc_id"], pdf[html_col]):
-                for off, (kind, text, ref) in enumerate(parse_html_spans(doc)):
-                    out["doc_id"].append(str(doc_id))
-                    out["kind"].append(kind)
-                    out["text"].append(text)
-                    out["media_ref"].append(ref)
-                    out["offset"].append(off)
-            yield pd.DataFrame(out)
+    def rows(r):
+        doc_id, doc = r
+        for off, (kind, text, ref) in enumerate(parse_html_spans(doc)):
+            yield str(doc_id), kind, text, ref, off
 
-    return df.select("doc_id", html_col).mapInPandas(kernel, schema=SPAN_ROWS_SCHEMA)
+    return map_rows(df.select("doc_id", html_col), SPAN_ROWS_SCHEMA, lambda: rows)
 
 
 # ---------------------------------------------------------------------------
@@ -408,26 +401,16 @@ def synth_html_for(
 
 def synth_html_corpus(spark: SparkSession, docs_df: DataFrame, n_docs: int = 64) -> DataFrame:
     """documents -> (doc_id, html) pages, rendered executor-side."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     src = docs_df.select("doc_id", "text").where(F.col("doc_id") < n_docs)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(d) for d in pdf["doc_id"]],
-                    "html": [
-                        synth_html_for(int(d), t or "")
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
+    def rows(r):
+        yield int(r.doc_id), synth_html_for(int(r.doc_id), r.text or "")
 
     n_parts = spark.sparkContext.defaultParallelism
-    return src.repartition(n_parts, "doc_id").mapInPandas(
-        kernel, schema="doc_id long, html string"
+    return map_rows(
+        src.repartition(n_parts, "doc_id"), "doc_id long, html string", lambda: rows
     )
 
 
@@ -489,31 +472,25 @@ def extract_metadata(doc: str) -> dict[str, str | None]:
 
 
 def html_metadata(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """(doc_id, html) -> one metadata row per page. mapInPandas,
+    """(doc_id, html) -> one metadata row per page. ``worker.map_rows``,
     shuffle-free — the same embarrassingly-parallel 100-TB shape as
     span extraction."""
-    import pandas as pd
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = [extract_metadata(h or "") for h in pdf[html_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "title": [r["title"] for r in rows],
-                    "description": [r["description"] for r in rows],
-                    "og_title": [r["og_title"] for r in rows],
-                    "canonical": [r["canonical"] for r in rows],
-                    "pub_date": [r["pub_date"] for r in rows],
-                }
-            )
+    def rows(r):
+        doc_id, doc = r
+        m = extract_metadata(doc or "")
+        yield (
+            int(doc_id), m["title"], m["description"], m["og_title"],
+            m["canonical"], m["pub_date"],
+        )
 
-    return df.mapInPandas(
-        kernel,
-        schema=(
+    return map_rows(
+        df.select("doc_id", html_col),
+        (
             "doc_id long, title string, description string,"
             " og_title string, canonical string, pub_date string"
         ),
+        lambda: rows,
     )
 
 
@@ -555,24 +532,18 @@ def synth_metadata_corpus(
     """documents -> (doc_id, html) pages whose head carries the messy
     metadata block (spliced after the <title> line of the standard
     q44 page)."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     src = docs_df.select("doc_id", "text").where(F.col("doc_id") < n_docs)
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, pages = [], []
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                page = synth_html_for(d, t or "").split("\n")
-                # line 1 is the <head><title> line of the template
-                page[2:2] = synth_metadata_head(d)
-                ids.append(d)
-                pages.append("\n".join(page))
-            yield pd.DataFrame({"doc_id": ids, "html": pages})
+    def rows(r):
+        d = int(r.doc_id)
+        page = synth_html_for(d, r.text or "").split("\n")
+        # line 1 is the <head><title> line of the template
+        page[2:2] = synth_metadata_head(d)
+        yield d, "\n".join(page)
 
     n_parts = spark.sparkContext.defaultParallelism
-    return src.repartition(n_parts, "doc_id").mapInPandas(
-        kernel, schema="doc_id long, html string"
+    return map_rows(
+        src.repartition(n_parts, "doc_id"), "doc_id long, html string", lambda: rows
     )

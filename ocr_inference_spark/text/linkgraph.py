@@ -43,11 +43,11 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..worker import map_rows
 from .html_extract import _tokenize  # in-package reuse of the tolerant tokenizer
 from .urlnorm import normalize_url
 
@@ -119,28 +119,23 @@ def resolve_href(base_url: str, href: str) -> str | None:
 
 def extract_links(pages_df: DataFrame, url_col: str = "url", html_col: str = "html") -> DataFrame:
     """(url, html) pages -> (src, dst, anchor, nofollow) link rows.
-    src/dst are canonical URLs; one zero-shuffle mapInPandas kernel."""
-    import pandas as pd
+    src/dst are canonical URLs; one zero-shuffle ``worker.map_rows``
+    kernel."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"src": [], "dst": [], "anchor": [], "nofollow": []}
-            for base, doc in zip(pdf[url_col], pdf[html_col]):
-                src = normalize_url(base) if base else None
-                if src is None or doc is None:
-                    continue
-                for href, anchor, nofollow in parse_html_links(doc):
-                    dst = resolve_href(src, href)
-                    if dst is None:
-                        continue
-                    out["src"].append(src)
-                    out["dst"].append(dst)
-                    out["anchor"].append(anchor)
-                    out["nofollow"].append(nofollow)
-            yield pd.DataFrame(out)
+    def rows(r):
+        base, doc = r
+        src = normalize_url(base) if base else None
+        if src is None or doc is None:
+            return
+        for href, anchor, nofollow in parse_html_links(doc):
+            dst = resolve_href(src, href)
+            if dst is not None:
+                yield src, dst, anchor, nofollow
 
-    return pages_df.select(url_col, html_col).mapInPandas(
-        kernel, schema="src string, dst string, anchor string, nofollow boolean"
+    return map_rows(
+        pages_df.select(url_col, html_col),
+        "src string, dst string, anchor string, nofollow boolean",
+        lambda: rows,
     )
 
 
@@ -244,63 +239,47 @@ def synth_link_corpus(
     spark: SparkSession, docs_df: DataFrame, n_docs: int = 64
 ) -> DataFrame:
     """documents -> (doc_id, url, html) hub pages per the rule above."""
-    import pandas as pd
-
     src = docs_df.select("doc_id").where(F.col("doc_id") < n_docs)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, urls, htmls = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                url = f"http://site{d % 7}.example/doc/{d:08d}"
-                body = [
-                    "<!DOCTYPE html>",
-                    f"<html><head><title>hub {d % 7}</title>",
-                    "<script>var decoy = '<a href=\"/from-script\">no</a>';"
-                    "</script>",
-                    f"</head><body><h1>Document {d:08d}</h1>",
-                ]
-                if d % 13 != 0:
-                    t0 = (3 * d + 1) % n_docs
-                    href0 = (
-                        f"HTTP://SITE{t0 % 7}.EXAMPLE:80/doc/{t0:08d}"
-                        "?utm_source=syn#ref"
-                    )
-                    body.append(
-                        f'<p>See <a href="{href0}">study {t0}</a> '
-                        "for background.</p>"
-                    )
-                    if d % 3 >= 1:
-                        t1 = (5 * d + 2) % n_docs
-                        body.append(
-                            f'<p>Also <a href="../doc/./{t1:08d}">'
-                            f"note &amp; appendix {t1}</a>.</p>"
-                        )
-                    if d % 3 == 2:
-                        t2 = (7 * d + 3) % n_docs
-                        body.append(
-                            f'<p>Vendor <a rel="nofollow sponsored" '
-                            f'href="//site{t2 % 7}.example/doc/{t2:08d}">'
-                            f"sponsor {t2}</a>.</p>"
-                        )
-                    if d % 11 == 0:
-                        body.append(
-                            f'<p>Revisit: <a href="{href0}">study {t0}</a>'
-                            "</p>"
-                        )
+    def rows(r):
+        d = int(r.doc_id)
+        url = f"http://site{d % 7}.example/doc/{d:08d}"
+        body = [
+            "<!DOCTYPE html>",
+            f"<html><head><title>hub {d % 7}</title>",
+            "<script>var decoy = '<a href=\"/from-script\">no</a>';</script>",
+            f"</head><body><h1>Document {d:08d}</h1>",
+        ]
+        if d % 13 != 0:
+            t0 = (3 * d + 1) % n_docs
+            href0 = f"HTTP://SITE{t0 % 7}.EXAMPLE:80/doc/{t0:08d}?utm_source=syn#ref"
+            body.append(f'<p>See <a href="{href0}">study {t0}</a> for background.</p>')
+            if d % 3 >= 1:
+                t1 = (5 * d + 2) % n_docs
                 body.append(
-                    '<p><a href="#top">back to top</a> '
-                    '<a href="mailto:ed@example.org">mail</a> '
-                    '<a href="">empty</a></p>'
+                    f'<p>Also <a href="../doc/./{t1:08d}">'
+                    f"note &amp; appendix {t1}</a>.</p>"
                 )
-                body.append("</body></html>")
-                ids.append(d)
-                urls.append(url)
-                htmls.append("\n".join(body))
-            yield pd.DataFrame({"doc_id": ids, "url": urls, "html": htmls})
+            if d % 3 == 2:
+                t2 = (7 * d + 3) % n_docs
+                body.append(
+                    f'<p>Vendor <a rel="nofollow sponsored" '
+                    f'href="//site{t2 % 7}.example/doc/{t2:08d}">'
+                    f"sponsor {t2}</a>.</p>"
+                )
+            if d % 11 == 0:
+                body.append(f'<p>Revisit: <a href="{href0}">study {t0}</a></p>')
+        body.append(
+            '<p><a href="#top">back to top</a> '
+            '<a href="mailto:ed@example.org">mail</a> '
+            '<a href="">empty</a></p>'
+        )
+        body.append("</body></html>")
+        yield d, url, "\n".join(body)
 
     n_parts = spark.sparkContext.defaultParallelism
-    return src.repartition(n_parts, "doc_id").mapInPandas(
-        kernel, schema="doc_id long, url string, html string"
+    return map_rows(
+        src.repartition(n_parts, "doc_id"),
+        "doc_id long, url string, html string",
+        lambda: rows,
     )

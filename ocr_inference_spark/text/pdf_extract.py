@@ -33,9 +33,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..worker import map_rows
 
 _OBJ_HEAD_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 _WS = b"\x00\t\n\x0c\r "
@@ -738,48 +739,29 @@ def synth_pdf_for(doc_id: int, text: str) -> bytes:
 
 
 def synth_pdf_corpus(spark: SparkSession, docs_df: DataFrame, n_docs: int = 64) -> DataFrame:
-    import pandas as pd
     from pyspark.sql import functions as F
 
     src = docs_df.select("doc_id", "text").where(F.col("doc_id") < n_docs)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(d) for d in pdf["doc_id"]],
-                    "pdf": [
-                        synth_pdf_for(int(d), t or "")
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
+    def rows(r):
+        yield int(r.doc_id), synth_pdf_for(int(r.doc_id), r.text or "")
 
     n_parts = spark.sparkContext.defaultParallelism
-    return src.repartition(n_parts, "doc_id").mapInPandas(
-        kernel, schema="doc_id long, pdf binary"
+    return map_rows(
+        src.repartition(n_parts, "doc_id"), "doc_id long, pdf binary", lambda: rows
     )
 
 
 def pdf_extract_spans_df(df: DataFrame, pdf_col: str = "pdf") -> DataFrame:
-    """(doc_id, pdf) -> flat ordered span rows; one mapInPandas kernel,
-    no shuffle — the page-decode 100-TB shape."""
-    import pandas as pd
+    """(doc_id, pdf) -> flat ordered span rows; one ``worker.map_rows``
+    kernel, no shuffle — the page-decode 100-TB shape."""
+    def rows(r):
+        doc_id, blob = r
+        for off, (kind, text, ref) in enumerate(pdf_extract_spans(blob)):
+            yield str(doc_id), kind, text, ref, off
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "kind", "text", "media_ref", "offset")}
-            for doc_id, blob in zip(pdf["doc_id"], pdf[pdf_col]):
-                for off, (kind, text, ref) in enumerate(
-                    pdf_extract_spans(bytes(blob))
-                ):
-                    out["doc_id"].append(str(doc_id))
-                    out["kind"].append(kind)
-                    out["text"].append(text)
-                    out["media_ref"].append(ref)
-                    out["offset"].append(off)
-            yield pd.DataFrame(out)
-
-    return df.select("doc_id", pdf_col).mapInPandas(
-        kernel, schema="doc_id string, kind string, text string, media_ref string, offset int"
+    return map_rows(
+        df.select("doc_id", pdf_col),
+        "doc_id string, kind string, text string, media_ref string, offset int",
+        lambda: rows,
     )

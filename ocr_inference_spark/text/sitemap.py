@@ -22,10 +22,11 @@ files are recognized and their <loc> children returned with
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..worker import map_rows
 
 _URL_BLOCK_RE = re.compile(r"<(url|sitemap)\b[^>]*>(.*?)</\1>", re.S | re.I)
 _LOC_RE = re.compile(r"<loc\b[^>]*>\s*(.*?)\s*</loc>", re.S | re.I)
@@ -71,42 +72,15 @@ def warc_extract_sitemaps(warc_df: DataFrame) -> DataFrame:
     """(warc_name, data) -> (loc, lastmod, is_index) for every URL
     advertised by a captured sitemap (200 application/xml or text/xml
     response at a path ending in .xml). Zero shuffle."""
-    import pandas as pd
+    from .warc import ok_responses
 
-    from .warc import _mime_of, decode_content, iter_warc_records, parse_http_response
+    def rows(r):
+        for url, _, body in ok_responses(r.data, ("application/xml", "text/xml")):
+            if url.endswith(".xml"):
+                yield from parse_sitemap(body.decode("utf-8", "replace"))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"loc": [], "lastmod": [], "is_index": []}
-            for data in pdf["data"]:
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    url = headers.get("warc-target-uri", "")
-                    if not url.endswith(".xml"):
-                        continue
-                    resp = parse_http_response(payload)
-                    if resp is None:
-                        continue
-                    status, hh, body = resp
-                    if status != 200 or _mime_of(hh) not in (
-                        "application/xml",
-                        "text/xml",
-                    ):
-                        continue
-                    body = decode_content(hh, body)
-                    if body is None:
-                        continue
-                    for loc, lastmod, is_index in parse_sitemap(
-                        body.decode("utf-8", "replace")
-                    ):
-                        out["loc"].append(loc)
-                        out["lastmod"].append(lastmod)
-                        out["is_index"].append(is_index)
-            yield pd.DataFrame(out)
-
-    return warc_df.select("data").mapInPandas(
-        kernel, schema="loc string, lastmod string, is_index boolean"
+    return map_rows(
+        warc_df.select("data"), "loc string, lastmod string, is_index boolean", lambda: rows
     )
 
 

@@ -36,6 +36,8 @@ from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..worker import map_rows
+
 _UNRESERVED = frozenset(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
 )
@@ -178,32 +180,21 @@ def synth_messy_urls(
     query-param sort. Variants 0-2 canonicalize to the clean document
     URL; variant 3 keeps a sorted surviving query. doc_id % 5 == 0
     documents live on a co.uk host (the PSL multi-label suffix path)."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     src = docs_df.select("doc_id").where(F.col("doc_id") < n_docs)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, urls = [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                k = d % 7
-                host = (
-                    f"media.site{k}.co.uk" if d % 5 == 0 else f"site{k}.example"
-                )
-                path = f"/doc/{d:08d}"
-                variants = [
-                    f"HTTP://{host.upper()}:80{path}#section-2",
-                    f"http://{host}/a/../doc/./{d:08d}",
-                    f"http://{host}/%64oc/{d:08d}?utm_source=feed&gclid=1",
-                    f"http://{host}{path}?b=2&a=1&utm_x=0#f",
-                ]
-                ids += [d] * len(variants)
-                urls += variants
-            yield pd.DataFrame({"doc_id": ids, "url": urls})
+    def rows(r):
+        d = int(r.doc_id)
+        k = d % 7
+        host = f"media.site{k}.co.uk" if d % 5 == 0 else f"site{k}.example"
+        path = f"/doc/{d:08d}"
+        yield d, f"HTTP://{host.upper()}:80{path}#section-2"
+        yield d, f"http://{host}/a/../doc/./{d:08d}"
+        yield d, f"http://{host}/%64oc/{d:08d}?utm_source=feed&gclid=1"
+        yield d, f"http://{host}{path}?b=2&a=1&utm_x=0#f"
 
     n_parts = spark.sparkContext.defaultParallelism
-    return src.repartition(n_parts, "doc_id").mapInPandas(
-        kernel, schema="doc_id long, url string"
+    return map_rows(
+        src.repartition(n_parts, "doc_id"), "doc_id long, url string", lambda: rows
     )

@@ -23,7 +23,7 @@ Public knowledge only:
 
 Scale posture: WARC files are the natural Spark split unit — one
 (warc_name, data) row per file, records decoded inside one
-``mapInPandas`` kernel (embarrassingly parallel, zero shuffle, the
+``worker.map_rows`` kernel (embarrassingly parallel, zero shuffle, the
 same shape as page decode). CDX indexing (the ``warc_cdx_index``
 operator) is the published access pattern for random record lookup
 over archived crawls; digests here are md5-hex of the transfer-decoded
@@ -46,6 +46,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..worker import map_rows
 from .html_extract import sniff_decode, synth_html_for
 
 CRLF = b"\r\n"
@@ -511,6 +512,27 @@ def _mime_of(headers: dict[str, str]) -> str:
     return headers.get("content-type", "").split(";")[0].strip().lower()
 
 
+def ok_responses(
+    data: bytes, mimes: tuple[str, ...]
+) -> Iterator[tuple[str, dict[str, str], bytes]]:
+    """WARC bytes -> (target URI, HTTP headers, body) for every response
+    record with status 200 and a content type in ``mimes``, its body
+    transfer- and content-decoded. Records that fail to parse or decode
+    are skipped (the tolerant record walk)."""
+    for headers, payload in iter_warc_records(data):
+        if headers.get("warc-type") != "response":
+            continue
+        resp = parse_http_response(payload)
+        if resp is None:
+            continue
+        status, hh, body = resp
+        if status != 200 or _mime_of(hh) not in mimes:
+            continue
+        body = decode_content(hh, body)
+        if body is not None:
+            yield headers.get("warc-target-uri", ""), hh, body
+
+
 # ---------------------------------------------------------------------------
 # Spark operators
 # ---------------------------------------------------------------------------
@@ -570,37 +592,15 @@ def warc_extract_html(warc_df: DataFrame) -> DataFrame:
     """(warc_name, data) -> (doc_id, url, html): gunzip members, walk
     records, keep type=response with an HTML content type and a 200
     status, transfer-decode the body. Zero shuffle."""
-    import pandas as pd
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "url": [], "html": []}
-            for data in pdf["data"]:
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    resp = parse_http_response(payload)
-                    if resp is None:
-                        continue
-                    status, hh, body = resp
-                    if status != 200 or _mime_of(hh) != "text/html":
-                        continue
-                    body = decode_content(hh, body)
-                    if body is None:
-                        continue
-                    url = headers.get("warc-target-uri", "")
-                    m = _DOC_URL_RE.search(url)
-                    if not m:
-                        continue
-                    out["doc_id"].append(int(m.group(1)))
-                    out["url"].append(url)
-                    out["html"].append(
-                        sniff_decode(body, hh.get("content-type", ""))
-                    )
-            yield pd.DataFrame(out)
+    def rows(r):
+        for url, hh, body in ok_responses(r.data, ("text/html",)):
+            m = _DOC_URL_RE.search(url)
+            if m:
+                yield int(m.group(1)), url, sniff_decode(body, hh.get("content-type", ""))
 
-    return warc_df.select("data").mapInPandas(
-        kernel, schema="doc_id long, url string, html string"
+    return map_rows(
+        warc_df.select("data"), "doc_id long, url string, html string", lambda: rows
     )
 
 
@@ -610,31 +610,12 @@ def warc_extract_captures(warc_df: DataFrame) -> DataFrame:
     canonicalization) — the input shape for URL-canonicalization dedup
     over a crawl that archived the same page under variant URIs. Zero
     shuffle."""
-    import pandas as pd
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "html": []}
-            for data in pdf["data"]:
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    resp = parse_http_response(payload)
-                    if resp is None:
-                        continue
-                    status, hh, body = resp
-                    if status != 200 or _mime_of(hh) != "text/html":
-                        continue
-                    body = decode_content(hh, body)
-                    if body is None:
-                        continue
-                    out["url"].append(headers.get("warc-target-uri", ""))
-                    out["html"].append(
-                        sniff_decode(body, hh.get("content-type", ""))
-                    )
-            yield pd.DataFrame(out)
+    def rows(r):
+        for url, hh, body in ok_responses(r.data, ("text/html",)):
+            yield url, sniff_decode(body, hh.get("content-type", ""))
 
-    return warc_df.select("data").mapInPandas(kernel, schema="url string, html string")
+    return map_rows(warc_df.select("data"), "url string, html string", lambda: rows)
 
 
 def warc_extract_robots(warc_df: DataFrame) -> DataFrame:
@@ -642,34 +623,14 @@ def warc_extract_robots(warc_df: DataFrame) -> DataFrame:
     response captured at a /robots.txt path. One row per CAPTURE (a
     crawl re-fetches robots constantly); dedupe by host downstream
     (bodies are deterministic here, so ``max`` works). Zero shuffle."""
-    import pandas as pd
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"host": [], "robots_txt": []}
-            for data in pdf["data"]:
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    url = headers.get("warc-target-uri", "")
-                    if not url.endswith("/robots.txt"):
-                        continue
-                    resp = parse_http_response(payload)
-                    if resp is None:
-                        continue
-                    status, hh, body = resp
-                    if status != 200 or _mime_of(hh) != "text/plain":
-                        continue
-                    body = decode_content(hh, body)
-                    if body is None:
-                        continue
-                    host = url.split("/", 3)[2].lower()
-                    out["host"].append(host)
-                    out["robots_txt"].append(body.decode("utf-8", "replace"))
-            yield pd.DataFrame(out)
+    def rows(r):
+        for url, _, body in ok_responses(r.data, ("text/plain",)):
+            if url.endswith("/robots.txt"):
+                yield url.split("/", 3)[2].lower(), body.decode("utf-8", "replace")
 
-    return warc_df.select("data").mapInPandas(
-        kernel, schema="host string, robots_txt string"
+    return map_rows(
+        warc_df.select("data"), "host string, robots_txt string", lambda: rows
     )
 
 
@@ -682,47 +643,30 @@ def warc_cdx_index(warc_df: DataFrame) -> DataFrame:
     Location target of a 3xx capture, made absolute against the
     capture URI (RFC 9110 allows relative Location). Zero shuffle;
     md5-hex digest so a relational oracle can recompute it."""
-    import pandas as pd
     from urllib.parse import urljoin
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "url": [],
-                "status": [],
-                "mime": [],
-                "length": [],
-                "digest": [],
-                "redirect": [],
-            }
-            for name, data in zip(pdf["warc_name"], pdf["data"]):
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    resp = parse_http_response(payload)
-                    if resp is None:
-                        continue
-                    status, hh, body = resp
-                    url = headers.get("warc-target-uri", "")
-                    loc = hh.get("location")
-                    out["url"].append(url)
-                    out["status"].append(status)
-                    out["mime"].append(_mime_of(hh))
-                    out["length"].append(len(body))
-                    out["digest"].append(hashlib.md5(body).hexdigest())
-                    out["redirect"].append(
-                        urljoin(url, loc)
-                        if loc and 300 <= status < 400
-                        else None
-                    )
-            yield pd.DataFrame(out)
+    def rows(r):
+        for headers, payload in iter_warc_records(r.data):
+            if headers.get("warc-type") != "response":
+                continue
+            resp = parse_http_response(payload)
+            if resp is None:
+                continue
+            status, hh, body = resp
+            url = headers.get("warc-target-uri", "")
+            loc = hh.get("location")
+            yield (
+                url, status, _mime_of(hh), len(body), hashlib.md5(body).hexdigest(),
+                urljoin(url, loc) if loc and 300 <= status < 400 else None,
+            )
 
-    return warc_df.select("warc_name", "data").mapInPandas(
-        kernel,
-        schema=(
+    return map_rows(
+        warc_df.select("warc_name", "data"),
+        (
             "url string, status int, mime string, length long, "
             "digest string, redirect string"
         ),
+        lambda: rows,
     )
 
 
@@ -794,19 +738,11 @@ def wet_export(texts_df: DataFrame, docs_per_file: int = 8) -> DataFrame:
 def wet_extract_text(wet_df: DataFrame) -> DataFrame:
     """(wet_name, data) -> (url, text) from conversion records. Zero
     shuffle; tolerant of damaged members via the shared record walk."""
-    import pandas as pd
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "text": []}
-            for data in pdf["data"]:
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get("warc-type") != "conversion":
-                        continue
-                    out["url"].append(headers.get("warc-target-uri", ""))
-                    out["text"].append(payload.decode("utf-8", "replace"))
-            yield pd.DataFrame(out)
+    def rows(r):
+        for headers, payload in iter_warc_records(r.data):
+            if headers.get("warc-type") == "conversion":
+                text = payload.decode("utf-8", "replace")
+                yield headers.get("warc-target-uri", ""), text
 
-    return wet_df.select("data").mapInPandas(
-        kernel, schema="url string, text string"
-    )
+    return map_rows(wet_df.select("data"), "url string, text string", lambda: rows)

@@ -1,4 +1,12 @@
-"""Once-per-process setup for the Python workers that run OCR kernels.
+"""The one Arrow driver of every row kernel, and the once-per-process
+setup of the Python workers that run it.
+
+``map_rows(df, schema, setup)`` runs a row function over ``df`` inside
+one ``mapInPandas``: each input row gives zero or more output rows.
+The page kernels (pipeline, layout, artifacts) and the text, media and
+corpus-synthesis kernels all go through it; only the kernels that work
+on a whole batch at once (``urlnorm.normalize_urls``, ``robots``, the
+``similarity`` LSH) keep their own ``mapInPandas``.
 
 pyspark's worker calls ``importlib.invalidate_caches()`` at the start of
 every task (``worker_util.setup_spark_files``). On CPython 3.11 each
@@ -17,6 +25,11 @@ import functools
 import os
 import sys
 import zipimport
+from collections.abc import Callable, Iterator
+
+import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 _GUARD_MARK = "_ocr_stamp_guard"
 
@@ -59,3 +72,32 @@ def worker_init() -> None:
     for importer in list(sys.path_importer_cache.values()):
         if isinstance(importer, zipimport.zipimporter):
             importer.invalidate_caches()
+
+
+def row_kernel(columns: list[str], setup: Callable[[], Callable]):
+    """The ``mapInPandas`` function of :func:`map_rows`. ``setup()``
+    runs once per task, after :func:`worker_init`, and returns the row
+    function. That gets each input row (a namedtuple over the input
+    columns) and yields output rows as tuples in ``columns`` order; each
+    Arrow batch in gives one frame out, an empty batch an empty frame."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
+        row_fn = setup()
+        for pdf in batches:
+            out: dict[str, list] = {c: [] for c in columns}
+            cols = list(out.values())
+            for row in pdf.itertuples(index=False):
+                for rec in row_fn(row):
+                    for col, v in zip(cols, rec):
+                        col.append(v)
+            yield pd.DataFrame(out)
+
+    return kernel
+
+
+def map_rows(df: DataFrame, schema, setup: Callable[[], Callable]) -> DataFrame:
+    """The one Arrow driver of the row kernels: ``df`` -> ``schema`` (a
+    StructType or DDL string) through :func:`row_kernel`."""
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    return df.mapInPandas(row_kernel(struct.fieldNames(), setup), schema=schema)

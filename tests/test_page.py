@@ -55,6 +55,20 @@ def test_garbage_bytes_fail_soft():
     assert res.texts == []
 
 
+def test_undecodable_page_has_one_status_tag_on_every_entry_point(spark):
+    """process_page, detect_page (detect_lines) and detect_layout tag an
+    undecodable page the same way, so a bad page's status does not
+    depend on which job ran it."""
+    from ocr_inference_spark.layout import detect_layout
+    from ocr_inference_spark.page import detect_page
+
+    pages = spark.createDataFrame([("bad", b"junk")], "media_ref string, content binary")
+    (layout_row,) = detect_layout(spark, pages).collect()
+    assert process_page(b"junk", SESSION).status == "failed:decode"
+    assert detect_page(b"junk")["status"] == "failed:decode"
+    assert layout_row["status"] == "failed:decode"
+
+
 def test_doubled_chars_roundtrip():
     lines = ["aabb ccdd", "zzz 1100"]
     res = process_page(png_encode(render_page(lines)), SESSION)
