@@ -1,5 +1,6 @@
-"""Deduplication operators for training-data pipelines — all pure
-DataFrame compositions (no Python UDFs), shuffle-conscious:
+"""Deduplication operators for training-data pipelines — DataFrame
+compositions (no per-row Python UDFs; the LSH bucket projection is the
+batched numpy kernel ``similarity.table_bucket_rows``), shuffle-conscious:
 
 - exact:        hash-groupBy on normalized text (one shuffle)
 - n-gram Jaccard: shingle explode -> self-equi-join on shingle ->
@@ -11,6 +12,12 @@ DataFrame compositions (no Python UDFs), shuffle-conscious:
                 O(n²) cross join.
 - SimHash:      sign-aggregated word-hash bits -> 64-bit key; near-dup
                 iff Hamming distance <= k (bit_count(xor)).
+- embedding near-dup: all-pairs or hyperplane-LSH-blocked candidates ->
+                exact cosine verify (the similarity.py cosine convention).
+- clusters:     connected components over near-dup pairs by min-label
+                propagation (cluster id = min reachable id).
+- SemDeDup:     cluster embeddings, then prune within-cluster pairs by
+                cosine (min-id survivor).
 
 Determinism: every hash is a deterministic function of the text
 (xxhash64 with literal seeds / md5), so results are stable across runs
@@ -93,6 +100,23 @@ SMALL_GRAPH_EDGES = 1 << 17
 BROADCAST_VECTORS_MAX_ROWS = 2_000_000
 
 
+def _jaccard_verify(sh: DataFrame, inter: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) from (id_a, id_b, n_inter) intersection
+    counts over the (id, shingle) relation ``sh``: |A∪B| = |A|+|B|-|A∩B|,
+    pairs at or above ``threshold`` kept, Jaccard rounded to 6 places."""
+    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
+    return (
+        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
+        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -137,7 +161,6 @@ def jaccard_pairs(
             raise ValueError("n_docs required with max_doc_freq_frac")
         sh = drop_hot_shingles(sh, n_docs, max_doc_freq_frac)
     sh = sh.cache()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -146,17 +169,7 @@ def jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("n_inter"))
     )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return out
+    return _jaccard_verify(sh, inter, threshold)
 
 
 def minhash_signatures(
@@ -226,24 +239,13 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # exact verify: intersect/union over shingles of candidate pairs only
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     inter = (
         candidates.join(sh.withColumnRenamed("id", "id_a"), "id_a")
         .join(sh.withColumnRenamed("id", "id_b"), ["id_b", "shingle"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return out
+    return _jaccard_verify(sh, inter, threshold)
 
 
 def embedding_near_dup(
@@ -254,7 +256,6 @@ def embedding_near_dup(
     n_planes: int = 0,
     dim: int = 64,
     n_tables: int = 1,
-    assume_spread: bool = False,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine) with
@@ -266,8 +267,10 @@ def embedding_near_dup(
     hyperplane-LSH tables via an exploded (table, bucket) EQUI-join
     (hash-join-plannable — never a nested-loop pair scan), deduped, then
     exact-cosine verified. Multi-table blocking recovers near pairs a
-    single table splits across a plane."""
-    from .similarity import _dot, _norm
+    single table splits across a plane. The caller's scan decides how
+    widely the plane-dot projection is spread (``queries._t(...,
+    spread=True)`` for a corpus-shaped input)."""
+    from .similarity import _cosine, _norm, table_bucket_rows
 
     base = (
         df.select(
@@ -286,36 +289,20 @@ def embedding_near_dup(
         # the self-join + dropDuplicates multiplies shuffle volume by
         # the vector width — at 10^12 rows that is the whole job.)
         #
-        # Round-6 parallelism discipline (guide §2.5 input skew + §2.2):
-        #   1. the n_tables*n_planes plane-dot projection is the heavy
-        #      map work; a small single-row-group input planes into ONE
-        #      scan task, so spread it across the cluster first when the
-        #      scan is under-parallel (no-op at real scale);
-        #   2. the self-join output is |bucket|^2-shaped — orders of
-        #      magnitude wider than its input bytes — so the join must
-        #      NOT run at AQE-coalesced width (AQE sizes partitions by
-        #      the tiny shuffle input bytes, not the pair-explosion
-        #      cost). An explicit repartition by the join key before the
-        #      checkpoint pins the width AND lets BOTH self-join sides
-        #      reuse the same hash partitioning: zero further exchange.
-        # assume_spread: the caller already balanced the scan across the
-        # cluster (e.g. queries._t(..., spread=True) from io.footer_stats —
-        # ~2ms); the generic fallback asks the planner, whose first
-        # .rdd conversion on a fresh DataFrame costs ~100ms+ of plan
-        # translation that a per-bench-sample construction repays.
-        spark = df.sparkSession
-        par = spark.sparkContext.defaultParallelism
-        pre = base
-        if not assume_spread and pre.rdd.getNumPartitions() < par:
-            pre = pre.repartition(par)
+        # The self-join output is |bucket|^2-shaped — orders of
+        # magnitude wider than its input bytes — so the join must NOT
+        # run at AQE-coalesced width (AQE sizes partitions by the tiny
+        # shuffle input bytes, not the pair-explosion cost). An explicit
+        # repartition by the join key before the checkpoint pins the
+        # width AND lets BOTH self-join sides reuse the same hash
+        # partitioning: zero further exchange (guide §2.2).
+        par = df.sparkSession.sparkContext.defaultParallelism
         # Bucket projection via the batched numpy kernel (guide §4.2) —
         # bit-identical to posexplode(table_buckets(...)), see
         # similarity.table_bucket_rows; measured 1.00s -> 0.60s for the
         # 200k x 108-plane projection at sf1.0.
-        from .similarity import table_bucket_rows
-
         blocked = (
-            table_bucket_rows(pre, n_tables, n_planes, dim)
+            table_bucket_rows(base, n_tables, n_planes, dim)
             .repartition(par * 4, "t", "bucket")
             .localCheckpoint(eager=True)
         )
@@ -352,20 +339,17 @@ def embedding_near_dup(
         # Above the cutoff (or with no count supplied and no planner
         # pick of broadcast) the shuffle join stands — at 10^12 rows
         # that IS the right plan.
-        side_a = pre.select(
-            F.col("id").alias("id_a"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
-        side_b = pre.select(
-            F.col("id").alias("id_b"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        )
-        if n_rows is not None and n_rows <= BROADCAST_VECTORS_MAX_ROWS:
-            side_a = F.broadcast(side_a)
-            side_b = F.broadcast(side_b)
-        pairs = cand.join(side_a, "id_a").join(side_b, "id_b")
+        def side(s):
+            out = base.select(
+                F.col("id").alias(f"id_{s}"),
+                F.col("v").alias(f"v{s}"),
+                F.col("nrm").alias(f"n{s}"),
+            )
+            if n_rows is not None and n_rows <= BROADCAST_VECTORS_MAX_ROWS:
+                out = F.broadcast(out)
+            return out
+
+        pairs = cand.join(side("a"), "id_a").join(side("b"), "id_b")
     else:
         a = base.alias("a")
         b = base.alias("b")
@@ -378,11 +362,7 @@ def embedding_near_dup(
             F.col("b.nrm").alias("nb"),
         )
     scored = pairs.select(
-        "id_a",
-        "id_b",
-        F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6).alias(
-            "cosine"
-        ),
+        "id_a", "id_b", _cosine("va", "vb", "na", "nb").alias("cosine")
     ).where(F.col("cosine") >= threshold)
     if n_planes > 0:
         # collapse multi-table collisions (identical rows) post-filter
@@ -409,109 +389,22 @@ def _materialize(df: DataFrame, mode: str) -> DataFrame:
     raise ValueError(f"unknown checkpoint mode {mode!r} (use 'local' or 'reliable')")
 
 
-def _dup_clusters_star(
-    pairs: DataFrame, max_iters: int, checkpoint_mode: str
-) -> DataFrame:
-    """Large-star/small-star contraction (the published MapReduce-scale
-    CC algorithm: Kiveris et al., "Connected Components in MapReduce and
-    Beyond", ACM SoCC 2014): alternate
-
-    - large-star: every node connects its strictly-larger neighbors to
-      the minimum of its closed neighborhood;
-    - small-star: every edge hangs on its larger endpoint, which
-      connects its smaller neighbors (and itself) to their minimum;
-
-    each round is two groupBy-min + two equi-joins, and the edge graph
-    provably contracts to per-component stars rooted at the component
-    minimum in O(log n) rounds — the scale-proof shape for pathological
-    high-diameter duplicate chains where min-label propagation needs
-    O(diameter) rounds. Returns (id, cluster_id) like the propagation
-    path."""
-    raw = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    # nodes from the UNFILTERED pairs: an id appearing only in a
-    # self-pair (a == b) still names a 1-node component and must surface
-    # in the output exactly as the propagation path surfaces it
-    nodes = _materialize(
-        raw.select(F.col("a").alias("id"))
-        .unionByName(raw.select(F.col("b").alias("id")))
-        .distinct(),
-        checkpoint_mode,
-    )
-    src = raw.where(F.col("a") != F.col("b"))
-    e = _materialize(src.distinct(), checkpoint_mode)
-    prev_count = e.count()
-    converged = False
-    for _ in range(max_iters):
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mstar = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("u", "mn").alias("m"))
-        )
-        large = (
-            sym.join(mstar, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        hung = large.select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        mn2 = hung.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            hung.join(mn2, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(mn2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        small = _materialize(small, checkpoint_mode)
-        new_count = small.count()
-        if new_count == prev_count and small.exceptAll(e).limit(1).count() == 0:
-            e = small
-            converged = True
-            break
-        e = small
-        prev_count = new_count
-    if not converged:
-        raise RuntimeError(
-            f"dup_clusters(algorithm='star') did not converge in {max_iters} "
-            "rounds — pathological input; raise max_iters"
-        )
-    # at convergence every edge is (child, component-min root)
-    child_root = e.groupBy(F.col("a").alias("id")).agg(F.min("b").alias("root"))
-    return nodes.join(child_root, "id", "left").select(
-        "id", F.coalesce("root", F.col("id")).alias("cluster_id")
-    )
-
-
 def dup_clusters(
     pairs: DataFrame,
     max_iters: int = 50,
     checkpoint_mode: str = "local",
-    algorithm: str = "propagate",
 ) -> DataFrame:
     """Connected components over near-duplicate pairs: (id, cluster_id)
     where cluster_id = min id reachable through the pair graph — the
     canonicalization step of a dedup pipeline (keep one doc per
     cluster, drop the rest).
 
-    ``algorithm`` picks the iteration scheme:
-
-    - ``"propagate"`` (default): deterministic iterative min-label
-      propagation (the standard large-graph CC formulation, cf. Spark
-      GraphX CC) — each round joins every node's current label against
-      the (symmetrized) edge list and takes the min over neighbors.
-      Converges in O(diameter) rounds; dup clusters are near-cliques
-      (diameter 2-3) so this terminates in a handful of rounds on real
-      dedup graphs.
-    - ``"star"``: large-star/small-star contraction (Kiveris et al.,
-      SoCC 2014) — O(log n) rounds regardless of diameter, the
-      scale-proof choice for pathological >50-hop duplicate chains
-      (see :func:`_dup_clusters_star`). Identical output.
+    Deterministic iterative min-label propagation (the standard
+    large-graph CC formulation, cf. Spark GraphX CC): each round joins
+    every node's current label against the (symmetrized) edge list and
+    takes the min over neighbors. Converges in O(diameter) rounds; dup
+    clusters are near-cliques (diameter 2-3) so this terminates in a
+    handful of rounds on real dedup graphs.
 
     If ``max_iters`` is exhausted before convergence the function raises
     rather than silently returning split clusters. Each round is one
@@ -527,10 +420,6 @@ def dup_clusters(
 
     Input: (id_a, id_b) pairs (any extra columns ignored).
     """
-    if algorithm == "star":
-        return _dup_clusters_star(pairs, max_iters, checkpoint_mode)
-    if algorithm != "propagate":
-        raise ValueError(f"unknown algorithm {algorithm!r} (use 'propagate' or 'star')")
     edges = _materialize(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
@@ -614,39 +503,41 @@ def dup_clusters(
     if not converged:
         raise RuntimeError(
             f"dup_clusters did not converge in {max_iters} rounds "
-            "(component diameter exceeds max_iters); raise max_iters or "
-            "switch to algorithm='star' (large-star/small-star contraction)"
+            "(component diameter exceeds max_iters); raise max_iters"
         )
     return labels.select("id", "cluster_id")
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash): 64-bit SimHash over whitespace tokens.
-
-    Each token hashes to 64 bits (xxhash64); bit j of the document key is
-    1 iff more token-hashes have bit j set than unset. Pure expressions:
-    explode tokens -> per-bit sign sums -> reassemble the key.
-    """
+def _simhash(df: DataFrame, id_col: str, text_col: str, token_hash, bits: int) -> DataFrame:
+    """(id, simhash) over whitespace tokens: bit j of the document key is
+    1 iff more of its tokens have bit j of ``token_hash(token)`` set
+    than unset. Pure expressions: explode tokens -> per-bit sign sums
+    over the (id, h) relation -> reassemble the key."""
     words = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(normalize(F.col(text_col)), " ")).alias("w"),
     ).where(F.length("w") > 0)
-    hashed = words.select("id", F.xxhash64("w").alias("h"))
+    hashed = words.select("id", token_hash(F.col("w")).alias("h"))
     bit_cols = [
         F.sum(
             F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{j}")
-        for j in range(64)
+        for j in range(bits)
     ]
     sums = hashed.groupBy("id").agg(*bit_cols)
     key = None
-    for j in range(64):
+    for j in range(bits):
         bit = F.when(F.col(f"b{j}") > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         term = F.shiftleft(bit, j)
         key = term if key is None else key.bitwiseOR(term)
     return sums.select("id", key.alias("simhash"))
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, simhash): 64-bit SimHash, each token hashed by xxhash64."""
+    return _simhash(df, id_col, text_col, F.xxhash64, 64)
 
 
 def simhash_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3) -> DataFrame:
@@ -693,35 +584,17 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 
     )
 
 
-def simhash_md5(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFrame:
+def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash): md5-derived SimHash — same algorithm as
     :func:`simhash` but each token hashes to the top 15 hex chars of its
     md5 (60 bits, fits a signed BIGINT in every engine). Exists so the
     operator is ORACLE-CHECKABLE: DuckDB reproduces md5/bit arithmetic
     exactly, xxhash64 it cannot."""
-    words = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(normalize(F.col(text_col)), " ")).alias("w"),
-    ).where(F.length("w") > 0)
-    h = F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 15), 16, 10).cast(
-        "long"
-    )
-    hashed = words.select("id", h.alias("h"))
-    bit_cols = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(bits)
-    ]
-    sums = hashed.groupBy("id").agg(*bit_cols)
-    key = None
-    for j in range(bits):
-        bit = F.when(F.col(f"b{j}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, j)
-        key = term if key is None else key.bitwiseOR(term)
-    return sums.select("id", key.alias("simhash"))
+
+    def md5_prefix(w):
+        return F.conv(F.substring(F.md5(w.cast("binary")), 1, 15), 16, 10).cast("long")
+
+    return _simhash(df, id_col, text_col, md5_prefix, 60)
 
 
 def simhash_md5_pairs_exact(
@@ -793,7 +666,7 @@ def semdedup(
     executor-sized, and a mega-cluster is handled by the same salting
     the doc_id pipeline uses.
     """
-    from .similarity import _dot, _norm
+    from .similarity import _cosine, _norm
 
     base = df.select(
         F.col(id_col).alias("vec_id"),
@@ -834,29 +707,20 @@ def semdedup(
     clustered = assigned.join(base, "vec_id").withColumn(
         "nrm", _norm(F.col("e"))
     )
-    lhs = clustered.where(F.col("nrm") > 0).select(
-        "cluster_id",
-        F.col("vec_id").alias("id_a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    rhs = clustered.where(F.col("nrm") > 0).select(
-        "cluster_id",
-        F.col("vec_id").alias("id_b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    dups = (
-        lhs.join(rhs, "cluster_id")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos",
-            F.round(
-                _dot(F.col("ea"), F.col("eb"))
-                / (F.col("na") * F.col("nb")),
-                6,
-            ),
+
+    def side(s):
+        return clustered.where(F.col("nrm") > 0).select(
+            "cluster_id",
+            F.col("vec_id").alias(f"id_{s}"),
+            F.col("e").alias(f"e{s}"),
+            F.col("nrm").alias(f"n{s}"),
         )
+
+    dups = (
+        side("a")
+        .join(side("b"), "cluster_id")
+        .where(F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", _cosine("ea", "eb", "na", "nb"))
         .where(F.col("cos") >= threshold)
         .groupBy("id_b")
         .agg(F.min("id_a").alias("dup_of"))

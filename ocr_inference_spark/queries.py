@@ -1025,7 +1025,7 @@ def q36_embedding_near_dup_lsh(spark, sf_dir):
     n_planes = max(3, int(math.ceil(math.log2(max(n, 64) / 64))))
     return dd.embedding_near_dup(
         emb, "vec_id", "embedding", threshold=0.4, n_planes=n_planes, n_tables=12,
-        assume_spread=True, n_rows=n,
+        n_rows=n,
     )
 
 

@@ -8,6 +8,15 @@
   (deterministic planes from xxhash64 of the dimension index), candidate
   join within buckets, exact re-rank of candidates. At 10^12 rows the
   bucket join replaces the O(Q·N) scan.
+- ``ivf_topk``: the data-adaptive scale path — spherical-kmeans cells
+  from a deterministic sample, corpus rows in their nearest cell,
+  queries probing their ``nprobe`` nearest cells, exact re-rank.
+
+Every cosine here and in ``dedup`` follows one convention, the one the
+DuckDB oracles reproduce: zero-norm vectors are dropped, the dot is
+divided by precomputed norms, and the score is rounded to 6 places
+(:func:`_vectors`, :func:`_cosine`). Every top-k ranks by cosine
+descending, then neighbour id (:func:`_top_k`).
 """
 
 from __future__ import annotations
@@ -32,6 +41,38 @@ def _norm(a):
     )
 
 
+def _vectors(df, id_col, vec_col, id_as, vec_as, norm_as, *extra):
+    """(id_as, vec_as, norm_as, *extra) with zero-norm rows dropped:
+    cosine is undefined for a zero vector (ANSI div/0)."""
+    return df.select(
+        F.col(id_col).alias(id_as),
+        F.col(vec_col).alias(vec_as),
+        _norm(F.col(vec_col)).alias(norm_as),
+        *extra,
+    ).where(F.col(norm_as) > 0)
+
+
+def _cosine(a: str, b: str, norm_a: str, norm_b: str):
+    """round(<a, b> / (|a|·|b|), 6) over precomputed norms."""
+    return F.round(_dot(F.col(a), F.col(b)) / (F.col(norm_a) * F.col(norm_b)), 6)
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank) for the k best neighbours of
+    each query among candidate (query_id, qvec, qnorm, neighbor_id,
+    cvec, cnorm) pairs; ties broken by neighbor id for cross-engine
+    determinism."""
+    scored = pairs.withColumn(
+        "cosine", _cosine("qvec", "cvec", "qnorm", "cnorm")
+    ).select("query_id", "neighbor_id", "cosine")
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -42,38 +83,10 @@ def cosine_topk(
     """For every query vector: top-k corpus neighbours by cosine.
 
     Output: (query_id, neighbor_id, cosine, rank); self-matches excluded.
-    Ties broken by neighbor id for cross-engine determinism.
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cnorm"),
-    ).where(F.col("cnorm") > 0)  # cosine undefined for zero vectors (ANSI div/0)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-    ).where(F.col("qnorm") > 0)
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm")),
-                6,
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cvec", "cnorm")
+    q = _vectors(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
+    return _top_k(c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -138,19 +151,21 @@ def _plane_signs(plane_seed: int, dim: int) -> tuple:
     )
 
 
-def plane_matrix(n_planes_total: int, dim: int):
-    """Literal ``array<array<double>>`` of ±1 plane components for seeds
-    ``0..n_planes_total-1``, parsed from ONE SQL string. Building the
-    same matrix from ~n·dim individual ``F.lit`` nodes costs seconds of
-    py4j round-trips and Catalyst analysis on a 5k-node tree; one parsed
-    expression is ~20 ms and constant-folds to a single Literal."""
-    rows = ",".join(
-        "array("
-        + ",".join(("1.0D" if s > 0 else "-1.0D") for s in _plane_signs(seed, dim))
-        + ")"
-        for seed in range(n_planes_total)
+def _literal_matrix(rows):
+    """Literal ``array<array<double>>`` parsed from ONE SQL string.
+    Building the same matrix from ~n·dim individual ``F.lit`` nodes
+    costs seconds of py4j round-trips and Catalyst analysis on a
+    5k-node tree; one parsed expression is ~20 ms and constant-folds to
+    a single Literal."""
+    body = ",".join(
+        "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")" for row in rows
     )
-    return F.expr(f"array({rows})")
+    return F.expr(f"array({body})")
+
+
+def plane_matrix(n_planes_total: int, dim: int):
+    """±1 plane components for seeds ``0..n_planes_total-1``."""
+    return _literal_matrix(_plane_signs(seed, dim) for seed in range(n_planes_total))
 
 
 def table_buckets(vec, n_tables: int, n_planes: int, dim: int):
@@ -170,18 +185,7 @@ def table_buckets(vec, n_tables: int, n_planes: int, dim: int):
             F.sequence(F.lit(0), F.lit(n_planes - 1)),
             F.lit(0).cast("long"),
             lambda acc, p: acc.bitwiseOR(
-                (
-                    F.aggregate(
-                        F.zip_with(
-                            vec,
-                            F.element_at(P, t * n_planes + p + 1),
-                            lambda x, s: x * s,
-                        ),
-                        F.lit(0.0).cast("double"),
-                        lambda a, w: a + w,
-                    )
-                    > 0
-                ).cast("long")
+                (_dot(vec, F.element_at(P, t * n_planes + p + 1)) > 0).cast("long")
                 # bit << p, written as *2^p because shiftleft's shift
                 # operand must be a literal int, not a lambda variable
                 * F.pow(F.lit(2.0), p).cast("long")
@@ -287,28 +291,9 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cnorm"),
-    ).where(F.col("cnorm") > 0)  # cosine undefined for zero vectors
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-    ).where(F.col("qnorm") > 0)
-    scored = cand.join(cvecs, "neighbor_id").join(F.broadcast(qvecs), "query_id").withColumn(
-        "cosine",
-        F.round(
-            _dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")), 6
-        ),
-    ).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cvecs = _vectors(corpus, id_col, vec_col, "neighbor_id", "cvec", "cnorm")
+    qvecs = _vectors(queries, id_col, vec_col, "query_id", "qvec", "qnorm")
+    return _top_k(cand.join(cvecs, "neighbor_id").join(F.broadcast(qvecs), "query_id"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -387,24 +372,11 @@ def train_ivf_centroids(
     return C
 
 
-def _centroid_matrix(C) -> "F.Column":
-    """Literal array<array<double>> of centroids via ONE parsed SQL
-    expression (same plan-size rationale as plane_matrix)."""
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")" for row in C
-    )
-    return F.expr(f"array({rows})")
-
-
 def _cell_dots(vec, P, n_cells: int):
     """array<double> of <v, c_j> for every centroid j."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(n_cells - 1)),
-        lambda j: F.aggregate(
-            F.zip_with(vec, F.element_at(P, j + 1), lambda x, c: x * c),
-            F.lit(0.0).cast("double"),
-            lambda a, w: a + w,
-        ),
+        lambda j: _dot(vec, F.element_at(P, j + 1)),
     )
 
 
@@ -429,27 +401,24 @@ def ivf_topk(
         centroids = train_ivf_centroids(corpus, id_col, vec_col, n_cells, n_rows=n_rows)
     n_cells = len(centroids)
     nprobe = min(nprobe, n_cells)
-    P = _centroid_matrix(centroids)
+    P = _literal_matrix(centroids)
 
-    c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            _norm(F.col(vec_col)).alias("cnorm"),
-            # materialize the dots ONCE per row (HOFs get no common-
-            # subexpression elimination), then derive the argmax cell
-            _cell_dots(F.col(vec_col), P, n_cells).alias("dots"),
-        )
-        .where(F.col("cnorm") > 0)
-        .select(
-            "neighbor_id",
-            "cvec",
-            "cnorm",
-            # 0-based nearest cell: position of the max dot
-            (F.array_position(F.col("dots"), F.array_max(F.col("dots"))) - 1).alias(
-                "cell"
-            ),
-        )
+    c = _vectors(
+        corpus,
+        id_col,
+        vec_col,
+        "neighbor_id",
+        "cvec",
+        "cnorm",
+        # materialize the dots ONCE per row (HOFs get no common-
+        # subexpression elimination), then derive the argmax cell
+        _cell_dots(F.col(vec_col), P, n_cells).alias("dots"),
+    ).select(
+        "neighbor_id",
+        "cvec",
+        "cnorm",
+        # 0-based nearest cell: position of the max dot
+        (F.array_position(F.col("dots"), F.array_max(F.col("dots"))) - 1).alias("cell"),
     )
     # query side: nprobe nearest cells via sort of (−dot, idx) structs
     probe = F.transform(
@@ -466,28 +435,9 @@ def ivf_topk(
         ),
         lambda s: s["idx"],
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-        F.explode(probe).alias("cell"),
-    ).where(F.col("qnorm") > 0)
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm")),
-                6,
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
+    q = _vectors(
+        queries, id_col, vec_col, "query_id", "qvec", "qnorm", F.explode(probe).alias("cell")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k(
+        c.join(F.broadcast(q), "cell").where(F.col("query_id") != F.col("neighbor_id")), k
     )

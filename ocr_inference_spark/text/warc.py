@@ -562,7 +562,7 @@ def synth_warc_corpus(
         .withColumn("file_id", (F.col("doc_id") / docs_per_file).cast("long"))
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         file_id = int(key[0])
         docs = [(int(d), t or "") for d, t in zip(pdf["doc_id"], pdf["text"])]
         return pd.DataFrame(
@@ -714,7 +714,7 @@ def wet_export(texts_df: DataFrame, docs_per_file: int = 8) -> DataFrame:
         "file_id", (F.col("doc_id") / docs_per_file).cast("long")
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         file_id = int(key[0])
         info = warc_record(
             "warcinfo", b"software: ocr_inference_spark wet_export\r\n"

@@ -238,10 +238,10 @@ def test_ivf_centroids_filtered_sample_identical(spark):
     assert np.array_equal(full, filtered)
 
 
-def test_dup_clusters_star_matches_propagation(spark):
-    """algorithm='star' (large-star/small-star, O(log n) rounds) must
-    produce the exact (id, cluster_id) labeling of the propagation path
-    on a mixed graph: chain + triangle + isolated edge."""
+def test_dup_clusters_matches_union_find(spark):
+    """dup_clusters must produce the exact (id, min reachable id)
+    labeling of a plain-Python union-find on a mixed graph: chain +
+    triangle + isolated edge + seeded random edges."""
     import random
 
     from pyspark.sql import Row
@@ -252,37 +252,40 @@ def test_dup_clusters_star_matches_propagation(spark):
     edges = [(i, i + 1) for i in range(20, 28)]        # 8-hop chain
     edges += [(1, 2), (2, 3), (3, 1), (40, 41)]        # triangle + pair
     edges += [(rng.randrange(100, 140), rng.randrange(100, 140)) for _ in range(30)]
-    pairs = spark.createDataFrame([Row(id_a=a, id_b=b) for a, b in edges if a != b])
-    prop = {r["id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
-    star = {
-        r["id"]: r["cluster_id"]
-        for r in dup_clusters(pairs, algorithm="star").collect()
-    }
-    assert star == prop
+    edges = [(a, b) for a, b in edges if a != b]
+
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root is the component min
+    expected = {x: find(x) for x in parent}
+
+    pairs = spark.createDataFrame([Row(id_a=a, id_b=b) for a, b in edges])
+    assert {r["id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()} == expected
 
 
-def test_dup_clusters_star_logn_on_long_chain(spark):
-    """An 80-hop duplicate chain: propagation needs ~80 rounds (raises
-    at max_iters=10), star contraction converges within 10 — the
-    published O(log n) bound this path exists for."""
+def test_dup_clusters_raises_on_long_chain(spark):
+    """An 80-hop duplicate chain needs ~80 propagation rounds: with
+    max_iters=10 the function must raise rather than return split
+    clusters."""
     from pyspark.sql import Row
 
     from ocr_inference_spark.dedup import dup_clusters
 
     pairs = spark.createDataFrame([Row(id_a=i, id_b=i + 1) for i in range(80)])
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge in 10 rounds"):
         dup_clusters(pairs, max_iters=10)
-    out = {
-        r["id"]: r["cluster_id"]
-        for r in dup_clusters(pairs, max_iters=10, algorithm="star").collect()
-    }
-    assert out == {i: 0 for i in range(81)}
 
 
-
-def test_dup_clusters_star_keeps_self_pair_nodes(spark):
+def test_dup_clusters_keeps_self_pair_nodes(spark):
     """A node appearing only in a self-pair (a == b) is a 1-node
-    component; both algorithms must surface it identically."""
+    component and must surface in the output."""
     from pyspark.sql import Row
 
     from ocr_inference_spark.dedup import dup_clusters
@@ -290,12 +293,8 @@ def test_dup_clusters_star_keeps_self_pair_nodes(spark):
     pairs = spark.createDataFrame(
         [Row(id_a=7, id_b=7), Row(id_a=1, id_b=2)]
     )
-    prop = {r["id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
-    star = {
-        r["id"]: r["cluster_id"]
-        for r in dup_clusters(pairs, algorithm="star").collect()
-    }
-    assert prop == star == {1: 1, 2: 1, 7: 7}
+    out = {r["id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
+    assert out == {1: 1, 2: 1, 7: 7}
 
 
 def test_table_bucket_rows_bit_identical(spark):

@@ -1,8 +1,10 @@
 """Every per-row Python kernel runs through worker.map_rows. A
 ``.mapInPandas(`` call anywhere else in the package is a second,
 hand-written driver loop and fails here, unless it is one of the
-kernels that work on a whole batch at once. Spark-free: a source
-scan."""
+kernels that work on a whole batch at once. Likewise every scan
+spread is decided by ``queries._t(..., spread=True)``: an operator
+that asks the planner for its partition count is a second spread
+rule. Spark-free: source scans."""
 
 from __future__ import annotations
 
@@ -42,3 +44,15 @@ def test_map_in_pandas_only_in_the_row_driver_and_the_batch_kernels():
 def test_the_scan_sees_every_allowed_call():
     # a scan that finds nothing would pass the check above vacuously
     assert map_in_pandas_calls() == ALLOWED
+
+
+def test_no_operator_asks_for_its_partition_count():
+    # queries._t sizes the spread from footer metadata; a
+    # getNumPartitions() check inside an operator would decide it again
+    hits = [
+        f"{path.relative_to(PACKAGE)}:{n}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "getNumPartitions" in line
+    ]
+    assert hits == []

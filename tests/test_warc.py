@@ -446,3 +446,21 @@ class TestWetExport:
         urls = {r["url"] for r in got}
         assert "http://h.example/0" in urls  # first doc survives
         assert len(urls) < 2 or "also kept" in {r["text"] for r in got}
+
+
+def test_apply_in_pandas_kernels_raise_no_type_hint_warning(spark):
+    """A kernel hinted on ``pdf`` but not on ``key`` makes pyspark warn
+    that it cannot infer the eval type, on every ``applyInPandas`` call.
+    Building both grouped-map frames must stay warning-free."""
+    import warnings
+
+    from ocr_inference_spark.text.warc import synth_warc_corpus, wet_export
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    texts = spark.createDataFrame(
+        [(d, url_of(d), t) for d, t in DOCS], "doc_id long, url string, text string"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        synth_warc_corpus(spark, docs)
+        wet_export(texts)
