@@ -38,6 +38,8 @@ import struct
 
 import numpy as np
 
+from .imgcodec import check_pixel_budget
+
 # ---------------------------------------------------------------------------
 # BMP
 # ---------------------------------------------------------------------------
@@ -177,6 +179,7 @@ def bmp_decode(data: bytes) -> np.ndarray:
         raise ValueError(f"unsupported BMP header size {hdr_size}")
     if w <= 0 or h <= 0:
         raise ValueError("bad BMP dimensions")
+    check_pixel_budget(w, h)
     if bpp not in (1, 4, 8, 16, 24, 32):
         raise ValueError(f"unsupported BMP bpp {bpp}")
 
@@ -317,6 +320,7 @@ def pnm_decode(data: bytes) -> np.ndarray:
     maxval = 1 if bitmap else toks[2]
     if w <= 0 or h <= 0 or maxval <= 0 or maxval > 65535:
         raise ValueError("bad PNM header values")
+    check_pixel_budget(w, h)
     count = w * h * channels
 
     if kind in (1, 2, 3):  # ASCII

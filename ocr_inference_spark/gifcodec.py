@@ -49,6 +49,8 @@ import struct
 
 import numpy as np
 
+from .imgcodec import check_pixel_budget
+
 _MAX_CODE = 1 << 12  # GIF LZW dictionaries never exceed 4096 entries
 
 
@@ -248,6 +250,7 @@ def _parse(data: bytes):
     w, h, packed, bg_idx, _aspect = struct.unpack("<HHBBB", data[6:13])
     if w == 0 or h == 0:
         raise ValueError("zero-sized GIF logical screen")
+    check_pixel_budget(w, h)
     pos = 13
     gct = None
     if packed & 0x80:

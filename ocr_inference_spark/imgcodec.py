@@ -13,7 +13,8 @@ implement the slices we need ourselves:
   against Java ImageIO in both directions (fixtures
   tests/data/java_png_*.png). Encoder writes 8-bit gray/RGB with
   filter 0 (fast default) or forced/adaptive filtering.
-- JPEG (:mod:`.jpegcodec`): baseline sequential DCT per ITU-T T.81.
+- JPEG (:mod:`.jpegcodec`): baseline sequential and progressive DCT
+  per ITU-T T.81.
 - TIFF (this module): 8-bit grayscale/RGB, both byte orders, strip
   layout; compression none / LZW (TIFF 6.0 §13, early-change widths,
   cross-validated against Java ImageIO's independent implementation —
@@ -23,7 +24,9 @@ implement the slices we need ourselves:
   :mod:`.faxcodec`) — the classic book-scan archive formats, all
   validated against Java ImageIO in both directions.
 - :func:`decode_image` sniffs the container magic and dispatches — the
-  page kernel's single entry point for any supported scan format.
+  page kernel's single entry point for any supported scan format. Every
+  container checks the size its header declares against
+  ``MAX_PAGE_PIXELS`` before it allocates.
 
 Public knowledge only: PNG is ISO/IEC 15948, JPEG is ITU-T T.81 /
 ISO 10918-1, TIFF 6.0 is a published Adobe specification; these are
@@ -38,6 +41,21 @@ import zlib
 import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+# The largest page any decoder allocates. A 600-dpi A4 scan is 34.8 MPix;
+# a header that claims more raises before a pixel buffer exists, so a
+# decompression bomb becomes a failed:decode row, not an OOM-killed worker.
+MAX_PAGE_PIXELS = 40_000_000
+
+
+def check_pixel_budget(w: int, h: int) -> None:
+    """Raise ValueError when a header's ``w`` x ``h`` is over
+    ``MAX_PAGE_PIXELS``; every container ``decode_image`` reads calls
+    this as soon as it has parsed the size."""
+    if w * h > MAX_PAGE_PIXELS:
+        raise ValueError(
+            f"{w}x{h} image exceeds the {MAX_PAGE_PIXELS}-pixel page budget"
+        )
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -226,6 +244,7 @@ def png_decode(data: bytes) -> np.ndarray:
                 raise ValueError(f"bad bit depth {bit_depth} for type {color_type}")
             if color_type == 0 and bit_depth not in (1, 2, 4, 8, 16):
                 raise ValueError(f"bad gray bit depth {bit_depth}")
+            check_pixel_budget(width, height)
         elif tag == b"PLTE":
             palette = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)
         elif tag == b"IDAT":
@@ -682,6 +701,7 @@ def tiff_decode(data: bytes) -> np.ndarray:
         fields[_TIFF_TAGS[tag]] = list(struct.unpack(bo + fmt * count, raw))
     w = fields["width"][0]
     h = fields["height"][0]
+    check_pixel_budget(w, h)
     comp = fields.get("compression", [1])[0]
     bps = fields.get("bits_per_sample", [8])
     spp0 = fields.get("samples_per_pixel", [len(bps)])[0]
@@ -789,4 +809,4 @@ def decode_image(data: bytes) -> np.ndarray:
         from .bmpcodec import pnm_decode
 
         return pnm_decode(data)
-    raise ValueError("unrecognized image container (not PNG/JPEG/TIFF/GIF/BMP/PNM)")
+    raise ValueError("unrecognized image container (not PNG/JPEG/TIFF/GIF/WebP/BMP/PNM)")

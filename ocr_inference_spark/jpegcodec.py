@@ -15,7 +15,7 @@ baseline sequential DCT process:
   T.81 §G; cross-validated against Java ImageIO's independent
   implementation, tests/data/java_prog_*.jpg). Lossless/arithmetic
   processes raise a clear error.
-- encoder: grayscale or RGB->YCbCr 4:4:4 / 4:2:0, Annex-K quantization
+- encoder: grayscale or RGB->YCbCr 4:4:4 / 4:2:0 / 4:2:2, Annex-K quantization
   tables scaled by a libjpeg-style quality factor, Annex-K Huffman
   tables, optional restart interval, optional non-interleaved scans;
   plus a progressive (SOF2) encoder with a coarse-to-fine scan script.
@@ -33,6 +33,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from .imgcodec import check_pixel_budget
 
 # ---------------------------------------------------------------------------
 # Shared constants (ITU-T T.81 Annex K — public spec tables)
@@ -329,6 +331,7 @@ def jpeg_decode(data: bytes, apply_exif_orientation: bool = True) -> np.ndarray:
             precision, h, w, ncomp = struct.unpack(">BHHB", payload[:6])
             if precision != 8:
                 raise ValueError(f"unsupported precision {precision}")
+            check_pixel_budget(w, h)
             comps = []
             for i in range(ncomp):
                 cid, sampling, tq = payload[6 + 3 * i : 9 + 3 * i]
@@ -365,11 +368,14 @@ def jpeg_decode(data: bytes, apply_exif_orientation: bool = True) -> np.ndarray:
     return img
 
 
-def _alloc_comp_states(frame):
-    """Per-component coefficient storage: MCU-padded block grids (the
-    interleaved layout) with the component's own non-interleaved grid
-    (nbx, nby — T.81 A.2.2: ceil(comp_w/8) x ceil(comp_h/8)) recorded
-    for single-component scans."""
+def _frame_grid(frame):
+    """T.81 A.2 block geometry of a frame, shared by the decoder and both
+    encoders. Records the maximum sampling factors and the MCU counts on
+    ``frame`` and returns one dict per component (a copy of its
+    ``frame["comps"]`` entry) with its MCU-padded block grid ``bw`` x
+    ``bh`` (the interleaved layout and the storage order) and its own
+    non-interleaved grid ``nbx`` x ``nby`` (A.2.2: ceil(comp_w/8) x
+    ceil(comp_h/8)), which single-component scans walk."""
     h, w = frame["h"], frame["w"]
     hmax = max(c["h"] for c in frame["comps"])
     vmax = max(c["v"] for c in frame["comps"])
@@ -377,31 +383,70 @@ def _alloc_comp_states(frame):
     mcus_y = -(-h // (8 * vmax))
     frame["hmax"], frame["vmax"] = hmax, vmax
     frame["mcus_x"], frame["mcus_y"] = mcus_x, mcus_y
-    states = {}
-    order = []
+    grid = []
     for c in frame["comps"]:
-        bw = mcus_x * c["h"]
-        bh = mcus_y * c["v"]
         comp_w = -(-w * c["h"] // hmax)
         comp_h = -(-h * c["v"] // vmax)
-        st = {
-            "id": c["id"],
-            "h": c["h"],
-            "v": c["v"],
-            "tq": c["tq"],
-            "bw": bw,
-            "bh": bh,
-            "nbx": -(-comp_w // 8),
-            "nby": -(-comp_h // 8),
-            "coef": np.zeros((bh * bw, 64), dtype=np.int32),
-            "pred": 0,
-            "dc": None,
-            "ac": None,
-            "scanned": False,
-        }
-        states[c["id"]] = st
+        grid.append(
+            {
+                **c,
+                "bw": mcus_x * c["h"],
+                "bh": mcus_y * c["v"],
+                "nbx": -(-comp_w // 8),
+                "nby": -(-comp_h // 8),
+            }
+        )
+    return grid
+
+
+def _alloc_comp_states(frame):
+    """Per-component coefficient storage over the ``_frame_grid``
+    geometry: -> ({id: state}, states in frame order)."""
+    states = {}
+    order = []
+    for st in _frame_grid(frame):
+        st.update(
+            coef=np.zeros((st["bh"] * st["bw"], 64), dtype=np.int32),
+            pred=0,
+            dc=None,
+            ac=None,
+            scanned=False,
+        )
+        states[st["id"]] = st
         order.append(st)
     return states, order
+
+
+def _mcu_blocks(comps, mcus_x, mcus_y):
+    """Interleaved block order (T.81 A.2.3): MCUs in raster order, and in
+    each MCU every component's v x h blocks in raster order. Yields
+    (unit, component index, block index into the ``bw``-wide grid)."""
+    for unit in range(mcus_x * mcus_y):
+        my, mx = divmod(unit, mcus_x)
+        for ci, c in enumerate(comps):
+            ch, cv, bw = c["h"], c["v"], c["bw"]
+            for by in range(cv):
+                row = (my * cv + by) * bw + mx * ch
+                for bx in range(ch):
+                    yield unit, ci, row + bx
+
+
+def _own_blocks(c):
+    """Non-interleaved block order (T.81 A.2.2): the component's own
+    ``nbx`` x ``nby`` grid in raster order — sampling factors do not
+    apply, and each block is one unit. Yields (unit, 0, block index)."""
+    nbx, bw = c["nbx"], c["bw"]
+    for unit in range(nbx * c["nby"]):
+        by, bx = divmod(unit, nbx)
+        yield unit, 0, by * bw + bx
+
+
+def _scan_blocks(frame, scan):
+    """A scan's block walk: interleaved MCUs when it carries several
+    components, else the one component's own grid."""
+    if len(scan) > 1:
+        return _mcu_blocks(scan, frame["mcus_x"], frame["mcus_y"])
+    return _own_blocks(scan[0])
 
 
 def _entropy_segment(data: bytes, pos: int) -> tuple[bytes, int]:
@@ -470,14 +515,12 @@ def _decode_sos(data, pos, payload, frame, comp_states, htables, restart_interva
             raise ValueError("scan needs an undefined AC Huffman table")
 
     if not progressive:
-        return _decode_scan_fast(data, pos, frame, scan, restart_interval, ns)
+        return _decode_scan_fast(data, pos, frame, scan, restart_interval)
     if ss > 0:  # progressive AC scans are single-component (checked above)
         return _decode_prog_ac_scan_fast(
             data, pos, scan[0], ss, se, ah, al, restart_interval
         )
-    return _decode_prog_dc_scan_fast(
-        data, pos, frame, scan, ah, al, restart_interval, ns
-    )
+    return _decode_prog_dc_scan_fast(data, pos, frame, scan, ah, al, restart_interval)
 
 
 # hot-loop lookup tables: (1<<n)-1 masks, EXTEND threshold/offset per
@@ -487,179 +530,146 @@ _EXT_HALF = [0] + [1 << (s - 1) for s in range(1, 17)]
 _EXT_SUB = [0] + [1 - (1 << s) for s in range(1, 17)]
 
 
-def _decode_scan_fast(data, pos, frame, scan, restart_interval, ns):
-    """Sequential-mode scan decode, the hot ingest path: bit state in
-    local variables (no per-symbol method calls), packed-list Huffman
-    LUTs (cached per table content), and coefficients accumulated as
-    (block, k, value) triples scattered into the component arrays once
-    per scan — ~2x the generic per-unit path on real pages. Semantics
-    identical to _decode_block_seq (T.81 F.2)."""
-    mcus_x = frame["mcus_x"]
-    if ns > 1:
-        n_units = mcus_x * frame["mcus_y"]
-    else:
-        n_units = scan[0]["nbx"] * scan[0]["nby"]
-    plans = []
-    for st in scan:
-        plans.append((st, _packed_lut(st["dc"]), _packed_lut(st["ac"]), [], [], []))
-    seg, next_pos = _entropy_segment(data, pos)
-    buf = seg
+def _decode_scan_fast(data, pos, frame, scan, restart_interval):
+    """Sequential-mode scan decode (T.81 F.2), the hot ingest path: bit
+    state in local variables (no per-symbol method calls), packed-list
+    Huffman LUTs (cached per table content), and coefficients
+    accumulated as (block, k, value) triples scattered into the
+    component arrays once per scan."""
+    plans = [(_packed_lut(st["dc"]), _packed_lut(st["ac"]), [], [], []) for st in scan]
+    buf, next_pos = _entropy_segment(data, pos)
     nlen = len(buf)
     acc = 0
     nbits = 0
     p = 0
     preds = [0] * len(scan)
-    for unit in range(n_units):
-        if restart_interval and unit and unit % restart_interval == 0:
-            if next_pos + 1 < len(data) and 0xD0 <= data[next_pos + 1] <= 0xD7:
-                seg, next_pos = _entropy_segment(data, next_pos + 2)
-                buf = seg
-                nlen = len(buf)
-                acc = 0
-                nbits = 0
-                p = 0
-                preds = [0] * len(scan)
-        for ci, (st, dc_lut, ac_lut, idxs, ks, vs) in enumerate(plans):
-            if ns > 1:
-                my, mx = divmod(unit, mcus_x)
-                ch, cv = st["h"], st["v"]
-                bw = st["bw"]
-                block_ids = [
-                    (my * cv + by) * bw + (mx * ch + bx)
-                    for by in range(cv)
-                    for bx in range(ch)
-                ]
-            else:
-                my, mx = divmod(unit, st["nbx"])
-                block_ids = [my * st["bw"] + mx]
-            for bid in block_ids:
-                while nbits < 32:
-                    acc = (acc << 8) | (buf[p] if p < nlen else 0)
-                    p += 1
-                    nbits += 8
-                e = dc_lut[(acc >> (nbits - 16)) & 0xFFFF]
-                if e == 0:
-                    raise ValueError("invalid DC Huffman code")
-                size = e & 0xFF
-                nbits -= e >> 8
-                if size:
-                    v = (acc >> (nbits - size)) & _MASKS[size]
-                    nbits -= size
-                    if v < _EXT_HALF[size]:
-                        v += _EXT_SUB[size]
-                    preds[ci] += v
-                if preds[ci]:
-                    idxs.append(bid)
-                    ks.append(0)
-                    vs.append(preds[ci])
+    last = 0
+    for unit, ci, bid in _scan_blocks(frame, scan):
+        if unit != last:
+            last = unit
+            if restart_interval and unit % restart_interval == 0:
+                if next_pos + 1 < len(data) and 0xD0 <= data[next_pos + 1] <= 0xD7:
+                    buf, next_pos = _entropy_segment(data, next_pos + 2)
+                    nlen = len(buf)
+                    acc = 0
+                    nbits = 0
+                    p = 0
+                    preds = [0] * len(scan)
+        dc_lut, ac_lut, idxs, ks, vs = plans[ci]
+        while nbits < 32:
+            acc = (acc << 8) | (buf[p] if p < nlen else 0)
+            p += 1
+            nbits += 8
+        e = dc_lut[(acc >> (nbits - 16)) & 0xFFFF]
+        if e == 0:
+            raise ValueError("invalid DC Huffman code")
+        size = e & 0xFF
+        nbits -= e >> 8
+        if size:
+            v = (acc >> (nbits - size)) & _MASKS[size]
+            nbits -= size
+            if v < _EXT_HALF[size]:
+                v += _EXT_SUB[size]
+            preds[ci] += v
+        if preds[ci]:
+            idxs.append(bid)
+            ks.append(0)
+            vs.append(preds[ci])
+        acc &= _MASKS[nbits]
+        k = 1
+        while k < 64:
+            while nbits < 32:
+                acc = (acc << 8) | (buf[p] if p < nlen else 0)
+                p += 1
+                nbits += 8
+            e = ac_lut[(acc >> (nbits - 16)) & 0xFFFF]
+            if e == 0:
+                raise ValueError("invalid AC Huffman code")
+            nbits -= e >> 8
+            s = e & 0x0F
+            if s == 0:
                 acc &= _MASKS[nbits]
-                k = 1
-                while k < 64:
-                    while nbits < 32:
-                        acc = (acc << 8) | (buf[p] if p < nlen else 0)
-                        p += 1
-                        nbits += 8
-                    e = ac_lut[(acc >> (nbits - 16)) & 0xFFFF]
-                    if e == 0:
-                        raise ValueError("invalid AC Huffman code")
-                    nbits -= e >> 8
-                    s = e & 0x0F
-                    if s == 0:
-                        acc &= _MASKS[nbits]
-                        if (e & 0xF0) == 0xF0:  # ZRL
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += (e >> 4) & 0x0F
-                    if k > 63:
-                        raise ValueError("AC run overflows block")
-                    v = (acc >> (nbits - s)) & _MASKS[s]
-                    nbits -= s
-                    acc &= _MASKS[nbits]
-                    if v < _EXT_HALF[s]:
-                        v += _EXT_SUB[s]
-                    idxs.append(bid)
-                    ks.append(k)
-                    vs.append(v)
-                    k += 1
-    for st, _dc, _ac, idxs, ks, vs in plans:
+                if (e & 0xF0) == 0xF0:  # ZRL
+                    k += 16
+                    continue
+                break  # EOB
+            k += (e >> 4) & 0x0F
+            if k > 63:
+                raise ValueError("AC run overflows block")
+            v = (acc >> (nbits - s)) & _MASKS[s]
+            nbits -= s
+            acc &= _MASKS[nbits]
+            if v < _EXT_HALF[s]:
+                v += _EXT_SUB[s]
+            idxs.append(bid)
+            ks.append(k)
+            vs.append(v)
+            k += 1
+    for st, (_dc, _ac, idxs, ks, vs) in zip(scan, plans):
         if idxs:
             st["coef"][np.array(idxs), np.array(ks)] = np.array(vs, dtype=np.int32)
         st["pred"] = 0
     return next_pos
 
 
-def _decode_prog_dc_scan_fast(data, pos, frame, scan, ah, al, restart_interval, ns):
+def _decode_prog_dc_scan_fast(data, pos, frame, scan, ah, al, restart_interval):
     """Progressive DC scan (first: Huffman-coded diffs of dc>>Al;
     refinement: one raw bit per block), interleaved or single-component,
     with local bit state. Semantics per T.81 G.1.2.1."""
-    mcus_x = frame["mcus_x"]
-    n_units = mcus_x * frame["mcus_y"] if ns > 1 else scan[0]["nbx"] * scan[0]["nby"]
     plans = []
     for st in scan:
         rows = st.get("rows")
         if rows is None:
             rows = st["rows"] = st["coef"].tolist()
-        plans.append((st, _packed_lut(st["dc"]) if ah == 0 else None, rows))
-    seg, next_pos = _entropy_segment(data, pos)
-    buf = seg
+        plans.append((_packed_lut(st["dc"]) if ah == 0 else None, rows))
+    buf, next_pos = _entropy_segment(data, pos)
     nlen = len(buf)
     acc = 0
     nbits = 0
     p = 0
     preds = [0] * len(scan)
-    for unit in range(n_units):
-        if restart_interval and unit and unit % restart_interval == 0:
-            if next_pos + 1 < len(data) and 0xD0 <= data[next_pos + 1] <= 0xD7:
-                seg, next_pos = _entropy_segment(data, next_pos + 2)
-                buf = seg
-                nlen = len(buf)
-                acc = 0
-                nbits = 0
-                p = 0
-                preds = [0] * len(scan)
-        for ci, (st, dc_lut, rows) in enumerate(plans):
-            if ns > 1:
-                my, mx = divmod(unit, mcus_x)
-                ch, cv = st["h"], st["v"]
-                block_ids = [
-                    (my * cv + by) * st["bw"] + (mx * ch + bx)
-                    for by in range(cv)
-                    for bx in range(ch)
-                ]
-            else:
-                my, mx = divmod(unit, st["nbx"])
-                block_ids = [my * st["bw"] + mx]
-            for bid in block_ids:
-                if ah == 0:
-                    while nbits < 32:
-                        acc = (acc << 8) | (buf[p] if p < nlen else 0)
-                        p += 1
-                        nbits += 8
-                    e = dc_lut[(acc >> (nbits - 16)) & 0xFFFF]
-                    if e == 0:
-                        raise ValueError("invalid DC Huffman code")
-                    size = e & 0xFF
-                    nbits -= e >> 8
-                    if size:
-                        v = (acc >> (nbits - size)) & _MASKS[size]
-                        nbits -= size
-                        if v < _EXT_HALF[size]:
-                            v += _EXT_SUB[size]
-                        preds[ci] += v
-                    acc &= _MASKS[nbits]
-                    rows[bid][0] = preds[ci] << al
-                else:
-                    if nbits == 0:
-                        acc = (acc << 8) | (buf[p] if p < nlen else 0)
-                        p += 1
-                        nbits = 8
-                    bit = (acc >> (nbits - 1)) & 1
-                    nbits -= 1
-                    acc &= _MASKS[nbits]
-                    if bit:
-                        rows[bid][0] |= 1 << al
-    for st, _lut, _rows in plans:
+    last = 0
+    for unit, ci, bid in _scan_blocks(frame, scan):
+        if unit != last:
+            last = unit
+            if restart_interval and unit % restart_interval == 0:
+                if next_pos + 1 < len(data) and 0xD0 <= data[next_pos + 1] <= 0xD7:
+                    buf, next_pos = _entropy_segment(data, next_pos + 2)
+                    nlen = len(buf)
+                    acc = 0
+                    nbits = 0
+                    p = 0
+                    preds = [0] * len(scan)
+        dc_lut, rows = plans[ci]
+        if ah == 0:
+            while nbits < 32:
+                acc = (acc << 8) | (buf[p] if p < nlen else 0)
+                p += 1
+                nbits += 8
+            e = dc_lut[(acc >> (nbits - 16)) & 0xFFFF]
+            if e == 0:
+                raise ValueError("invalid DC Huffman code")
+            size = e & 0xFF
+            nbits -= e >> 8
+            if size:
+                v = (acc >> (nbits - size)) & _MASKS[size]
+                nbits -= size
+                if v < _EXT_HALF[size]:
+                    v += _EXT_SUB[size]
+                preds[ci] += v
+            acc &= _MASKS[nbits]
+            rows[bid][0] = preds[ci] << al
+        else:
+            if nbits == 0:
+                acc = (acc << 8) | (buf[p] if p < nlen else 0)
+                p += 1
+                nbits = 8
+            bit = (acc >> (nbits - 1)) & 1
+            nbits -= 1
+            acc &= _MASKS[nbits]
+            if bit:
+                rows[bid][0] |= 1 << al
+    for st in scan:
         st["pred"] = 0
     return next_pos
 
@@ -678,8 +688,6 @@ def _decode_prog_ac_scan_fast(data, pos, st, ss, se, ah, al, restart_interval):
     per T.81 G.1.2.2/G.1.2.3)."""
     from bisect import bisect_left, insort
 
-    nbx, nby, bw = st["nbx"], st["nby"], st["bw"]
-    n_units = nbx * nby
     ac_lut = _packed_lut(st["ac"])
     rows = st.get("rows")
     if rows is None:
@@ -704,8 +712,7 @@ def _decode_prog_ac_scan_fast(data, pos, st, ss, se, ah, al, restart_interval):
         for lst in nzl:
             lst.sort()
         st["nzl_dirty"] = False
-    seg, next_pos = _entropy_segment(data, pos)
-    buf = seg
+    buf, next_pos = _entropy_segment(data, pos)
     nlen = len(buf)
     acc = 0
     nbits = 0
@@ -713,18 +720,15 @@ def _decode_prog_ac_scan_fast(data, pos, st, ss, se, ah, al, restart_interval):
     eobrun = 0
     p1 = 1 << al
     m1 = -1 << al
-    for unit in range(n_units):
+    for unit, _, bid in _own_blocks(st):
         if restart_interval and unit and unit % restart_interval == 0:
             if next_pos + 1 < len(data) and 0xD0 <= data[next_pos + 1] <= 0xD7:
-                seg, next_pos = _entropy_segment(data, next_pos + 2)
-                buf = seg
+                buf, next_pos = _entropy_segment(data, next_pos + 2)
                 nlen = len(buf)
                 acc = 0
                 nbits = 0
                 p = 0
                 eobrun = 0
-        my, mx = divmod(unit, nbx)
-        bid = my * bw + mx
         blk = rows[bid]
         k = ss
         if not refine:
@@ -918,6 +922,11 @@ class _BitWriter:
             self.nbits -= 8
             self.acc &= (1 << self.nbits) - 1
 
+    def write_value(self, v: int, size: int) -> None:
+        """The ``size`` magnitude bits of a DC difference or AC value
+        (T.81 F.1.2.1): v itself when positive, v - 1 when negative."""
+        self.write(v if v > 0 else v + (1 << size) - 1, size)
+
     def flush(self) -> None:
         if self.nbits:
             pad = 8 - self.nbits
@@ -944,24 +953,115 @@ def _quantized_zigzag(plane: np.ndarray, qtbl_zz: np.ndarray) -> np.ndarray:
     return quant.reshape(-1, 64)[:, ZIGZAG]
 
 
-def _pad8(plane: np.ndarray) -> np.ndarray:
-    h, w = plane.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    if (ph, pw) == (h, w):
-        return plane
-    return np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge")
-
-
-def _pad_to(plane: np.ndarray, mult: int) -> np.ndarray:
-    return _pad_to_hw(plane, mult, mult)
-
-
-def _pad_to_hw(plane: np.ndarray, hm: int, wm: int) -> np.ndarray:
+def _pad_to(plane: np.ndarray, hm: int, wm: int) -> np.ndarray:
+    """Edge-replicate ``plane`` up to multiples of ``hm`` rows and ``wm``
+    columns."""
     h, w = plane.shape
     ph, pw = -(-h // hm) * hm, -(-w // wm) * wm
     if (ph, pw) == (h, w):
         return plane
     return np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge")
+
+
+# luma sampling factors (h, v) per subsampling; chroma is always 1x1
+_SAMPLING = {"444": (1, 1), "420": (2, 2), "422": (2, 1)}
+
+
+def _planes(img, quality, subsampling, caller, subsamplings=tuple(_SAMPLING)):
+    """Validate an encoder input and lay it out as a frame -> (frame,
+    comps, qtables). Gray is one component; RGB becomes JFIF Y, Cb, Cr,
+    with Y at the luma sampling factors of ``subsampling`` and each
+    chroma sample the mean of its h x v luma cell. Every comp carries the
+    ``_frame_grid`` geometry, its table id ``tq`` (0 luma, 1 chroma) and
+    ``zz``: its quantized zigzag blocks as Python lists (the entropy
+    coders index them per coefficient), ``bw``-wide in raster order."""
+    if img.dtype != np.uint8:
+        raise ValueError(f"{caller} expects uint8, got {img.dtype}")
+    gray = img.ndim == 2
+    if not gray and (img.ndim != 3 or img.shape[2] != 3):
+        raise ValueError(f"unsupported shape {img.shape}")
+    if subsampling not in subsamplings:
+        raise ValueError(f"unsupported subsampling {subsampling!r}")
+    if gray:
+        hs = vs = 1
+        planes = [img.astype(np.float64)]
+    else:
+        hs, vs = _SAMPLING[subsampling]
+        rgb = img.astype(np.float64)
+        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
+        planes = [
+            0.299 * r + 0.587 * g + 0.114 * b,
+            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
+            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
+        ]
+    luma = {"id": 1, "h": hs, "v": vs, "tq": 0}
+    chroma = [{"id": cid, "h": 1, "v": 1, "tq": 1} for cid in (2, 3)]
+    frame = {"h": img.shape[0], "w": img.shape[1]}
+    frame["comps"] = [luma] if gray else [luma, *chroma]
+    qtables = [_quality_scale(Q_LUMA, quality), _quality_scale(Q_CHROMA, quality)]
+    comps = _frame_grid(frame)
+    for c, plane in zip(comps, planes):
+        # pad to whole MCUs first, so the subsampled chroma planes land
+        # exactly on 8x8 block boundaries too
+        plane = _pad_to(plane, 8 * vs, 8 * hs)
+        ry, rx = vs // c["v"], hs // c["h"]
+        if ry > 1 or rx > 1:
+            ph, pw = plane.shape
+            plane = plane.reshape(ph // ry, ry, pw // rx, rx).mean(axis=(1, 3))
+        c["zz"] = _quantized_zigzag(plane, qtables[c["tq"]]).tolist()
+    return frame, comps, qtables
+
+
+def _segment(marker: int, payload: bytes) -> bytes:
+    """0xFF, the marker code, a big-endian length counting itself, and
+    the payload."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+
+def _frame_header(sof, frame, comps, qtables, dht, exif_orientation=0) -> bytearray:
+    """SOI, JFIF APP0, an optional Exif APP1 carrying the orientation
+    tag, one DQT per table id in use, SOFn, then the ``dht`` tables
+    (class, id, bits, vals) whose id is in use."""
+    used = sorted({c["tq"] for c in comps})
+    out = bytearray(b"\xff\xd8")
+    out += _segment(0xE0, b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00")
+    if exif_orientation:
+        tiff = (
+            b"II*\x00" + struct.pack("<I", 8) + struct.pack("<H", 1)
+            + struct.pack("<HHI", 0x0112, 3, 1)
+            + struct.pack("<HH", exif_orientation, 0)
+            + struct.pack("<I", 0)
+        )
+        out += _segment(0xE1, b"Exif\x00\x00" + tiff)
+    for tq in used:
+        out += _segment(0xDB, bytes([tq]) + bytes(qtables[tq].tolist()))
+    sof_payload = struct.pack(">BHHB", 8, frame["h"], frame["w"], len(comps))
+    for c in comps:
+        sof_payload += bytes([c["id"], c["h"] << 4 | c["v"], c["tq"]])
+    out += _segment(sof, sof_payload)
+    for tc, th, bits, vals in dht:
+        if th in used:
+            out += _segment(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(vals))
+    return out
+
+
+def _sos(scan, ss=0, se=63, a=0, ta=None) -> bytes:
+    """SOS header for the ``scan`` components: DC table ``tq``, AC table
+    ``ta`` (default: ``tq``), spectral band [ss, se] and the successive
+    approximation byte ``a`` = Ah << 4 | Al."""
+    hdr = bytes([len(scan)])
+    for c in scan:
+        hdr += bytes([c["id"], c["tq"] << 4 | (c["tq"] if ta is None else ta)])
+    return _segment(0xDA, hdr + bytes([ss, se, a]))
+
+
+# Annex K standard tables as DHT specs: (class, id, bits, vals)
+_BASELINE_DHT = (
+    (0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
+    (1, 0, AC_LUMA_BITS, AC_LUMA_VALS),
+    (0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
+    (1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS),
+)
 
 
 def jpeg_encode(
@@ -989,165 +1089,66 @@ def jpeg_encode(
     (legal baseline per T.81 A.2.2; each scan walks the component's own
     ceil(w_c/8) x ceil(h_c/8) grid) — the multi-scan sequential layout
     some scanner firmware emits."""
-    if img.dtype != np.uint8:
-        raise ValueError(f"jpeg_encode expects uint8, got {img.dtype}")
-    gray = img.ndim == 2
-    if not gray and (img.ndim != 3 or img.shape[2] != 3):
-        raise ValueError(f"unsupported shape {img.shape}")
-    if subsampling not in ("444", "420", "422"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    sub420 = (not gray) and subsampling == "420"
-    sub422 = (not gray) and subsampling == "422"
-    h, w = img.shape[:2]
-    qy = _quality_scale(Q_LUMA, quality)
-    qc = _quality_scale(Q_CHROMA, quality)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    # JFIF APP0
-    app0 = b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    out += b"\xff\xe0" + struct.pack(">H", len(app0) + 2) + app0
-    if exif_orientation:
-        tiff = (
-            b"II*\x00" + struct.pack("<I", 8) + struct.pack("<H", 1)
-            + struct.pack("<HHI", 0x0112, 3, 1)
-            + struct.pack("<HH", exif_orientation, 0)
-            + struct.pack("<I", 0)
-        )
-        app1 = b"Exif\x00\x00" + tiff
-        out += b"\xff\xe1" + struct.pack(">H", len(app1) + 2) + app1
-    # DQT
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(qy.tolist())
-    if not gray:
-        out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x01" + bytes(qc.tolist())
-    # SOF0
-    ncomp = 1 if gray else 3
-    y_sampling = 0x22 if sub420 else (0x21 if sub422 else 0x11)
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    sof += bytes([1, y_sampling, 0])
-    if not gray:
-        sof += bytes([2, 0x11, 1, 3, 0x11, 1])
-    out += b"\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
-    # DHT (Annex K standard tables)
-    for tc, th, bits, vals in (
-        (0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
-        (1, 0, AC_LUMA_BITS, AC_LUMA_VALS),
-    ) + (
-        ()
-        if gray
-        else (
-            (0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-            (1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS),
-        )
-    ):
-        payload = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        out += b"\xff\xc4" + struct.pack(">H", len(payload) + 2) + payload
+    frame, comps, qtables = _planes(img, quality, subsampling, "jpeg_encode")
+    out = _frame_header(0xC0, frame, comps, qtables, _BASELINE_DHT, exif_orientation)
     if restart_interval > 0:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    dc_y = _canonical_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_y = _canonical_codes(AC_LUMA_BITS, AC_LUMA_VALS)
-
-    # component planes + per-MCU block layout
-    if gray:
-        yp = _pad8(img.astype(np.float64))
-        comps = [(_quantized_zigzag(yp, qy), yp.shape[1] // 8, 1, 1, dc_y, ac_y)]
-        mcus_x = yp.shape[1] // 8
-        mcus_y = yp.shape[0] // 8
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    codes = {(tc, th): _canonical_codes(bits, vals) for tc, th, bits, vals in _BASELINE_DHT}
+    if interleaved or len(comps) == 1:
+        scans = [(comps, _mcu_blocks(comps, frame["mcus_x"], frame["mcus_y"]))]
     else:
-        rgb = img.astype(np.float64)
-        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        dc_c = _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-        ac_c = _canonical_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-        if sub420:
-            yp = _pad_to(y, 16)
-            ph, pw = yp.shape
-            # chroma: pad to the same 16-multiple extent, then 2x2 mean
-            # (half-res planes land exactly on 8x8 block boundaries)
-            cbp = _pad_to(cb, 16).reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            crp = _pad_to(cr, 16).reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            mcus_x, mcus_y = pw // 16, ph // 16
-            comps = [
-                (_quantized_zigzag(yp, qy), pw // 8, 2, 2, dc_y, ac_y),
-                (_quantized_zigzag(cbp, qc), pw // 16, 1, 1, dc_c, ac_c),
-                (_quantized_zigzag(crp, qc), pw // 16, 1, 1, dc_c, ac_c),
-            ]
-        elif sub422:
-            yp = _pad_to_hw(y, 8, 16)
-            ph, pw = yp.shape
-            # chroma: horizontal 2-pixel mean only (full vertical res)
-            cbp = _pad_to_hw(cb, 8, 16).reshape(ph, pw // 2, 2).mean(axis=2)
-            crp = _pad_to_hw(cr, 8, 16).reshape(ph, pw // 2, 2).mean(axis=2)
-            mcus_x, mcus_y = pw // 16, ph // 8
-            comps = [
-                (_quantized_zigzag(yp, qy), pw // 8, 2, 1, dc_y, ac_y),
-                (_quantized_zigzag(cbp, qc), pw // 16, 1, 1, dc_c, ac_c),
-                (_quantized_zigzag(crp, qc), pw // 16, 1, 1, dc_c, ac_c),
-            ]
-        else:
-            yp, cbp, crp = (_pad8(p) for p in (y, cb, cr))
-            mcus_x = yp.shape[1] // 8
-            mcus_y = yp.shape[0] // 8
-            comps = [
-                (_quantized_zigzag(yp, qy), mcus_x, 1, 1, dc_y, ac_y),
-                (_quantized_zigzag(cbp, qc), mcus_x, 1, 1, dc_c, ac_c),
-                (_quantized_zigzag(crp, qc), mcus_x, 1, 1, dc_c, ac_c),
-            ]
-
-    if interleaved or gray:
-        sos = bytes([ncomp, 1, 0x00])
-        if not gray:
-            sos += bytes([2, 0x11, 3, 0x11])
-        sos += bytes([0, 63, 0])
-        out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
+        # one scan per component over its own grid: the restart
+        # interval counts blocks, and RSTn numbering restarts per scan
+        scans = [([c], _own_blocks(c)) for c in comps]
+    for scan, blocks in scans:
+        out += _sos(scan)
+        tables = [(c["zz"], codes[0, c["tq"]], codes[1, c["tq"]]) for c in scan]
         writer = _BitWriter()
-        preds = [0] * len(comps)
-        rst = 0
-        for mcu in range(mcus_x * mcus_y):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                writer.flush()  # byte-align before the marker
-                writer.buf += bytes([0xFF, 0xD0 + (rst % 8)])
-                rst += 1
-                preds = [0] * len(comps)
-            my, mx = divmod(mcu, mcus_x)
-            for ci, (zz, bw, ch, cv, dc_t, ac_t) in enumerate(comps):
-                for by in range(cv):
-                    for bx in range(ch):
-                        idx = (my * cv + by) * bw + (mx * ch + bx)
-                        preds[ci] = _write_block(zz[idx], writer, dc_t, ac_t, preds[ci])
-        writer.flush()
-        out += writer.buf
-    else:
-        # one SOS per component; each walks its OWN ceil(w_c/8) x
-        # ceil(h_c/8) grid (sampling factors do not apply, T.81 A.2.2);
-        # restart interval counts blocks, counter resets per scan
-        hmax = max(c[2] for c in comps)
-        vmax = max(c[3] for c in comps)
-        for ci, (zz, bw, ch, cv, dc_t, ac_t) in enumerate(comps):
-            tbl_id = 0 if ci == 0 else 1
-            sos = bytes([1, ci + 1, (tbl_id << 4) | tbl_id, 0, 63, 0])
-            out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-            comp_w = -(-w * ch // hmax)
-            comp_h = -(-h * cv // vmax)
-            nbx = -(-comp_w // 8)
-            nby = -(-comp_h // 8)
-            writer = _BitWriter()
-            pred = 0
-            rst = 0
-            for bi in range(nbx * nby):
-                if restart_interval and bi and bi % restart_interval == 0:
-                    writer.flush()
+        preds = [0] * len(scan)
+        last = rst = 0
+        for unit, ci, bid in blocks:
+            if unit != last:
+                last = unit
+                if restart_interval and unit % restart_interval == 0:
+                    writer.flush()  # byte-align before the marker
                     writer.buf += bytes([0xFF, 0xD0 + (rst % 8)])
                     rst += 1
-                    pred = 0
-                by, bx = divmod(bi, nbx)
-                pred = _write_block(zz[by * bw + bx], writer, dc_t, ac_t, pred)
-            writer.flush()
-            out += writer.buf
+                    preds = [0] * len(scan)
+            zz, dc_t, ac_t = tables[ci]
+            preds[ci] = _write_block(zz[bid], writer, dc_t, ac_t, preds[ci])
+        writer.flush()
+        out += writer.buf
     out += b"\xff\xd9"  # EOI
     return bytes(out)
+
+
+def _write_block(blk, writer, dc_codes, ac_codes, pred):
+    """One sequential-mode block (T.81 F.1.2): the DC difference from
+    ``pred``, then the run/size-coded AC values; -> the block's DC."""
+    dc = blk[0]
+    diff = dc - pred
+    size = abs(diff).bit_length()
+    writer.write(*dc_codes[size])
+    writer.write_value(diff, size)
+    last_nz = 63
+    while last_nz > 0 and blk[last_nz] == 0:
+        last_nz -= 1
+    run = 0
+    for k in range(1, last_nz + 1):
+        v = blk[k]
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            writer.write(*ac_codes[0xF0])  # ZRL
+            run -= 16
+        size = abs(v).bit_length()
+        writer.write(*ac_codes[(run << 4) | size])
+        writer.write_value(v, size)
+        run = 0
+    if last_nz < 63:  # no EOB when the final coefficient is non-zero
+        writer.write(*ac_codes[0x00])
+    return dc
 
 
 # ---------------------------------------------------------------------------
@@ -1180,8 +1181,7 @@ def _flush_eobrun(writer, ac_codes, state):
     if n == 0:
         return
     r = n.bit_length() - 1
-    code, length = ac_codes[r << 4]
-    writer.write(code, length)
+    writer.write(*ac_codes[r << 4])
     if r:
         writer.write(n - (1 << r), r)
     for b in state.bits:
@@ -1211,13 +1211,11 @@ def _encode_ac_first(writer, ac_codes, band, al, state):
             r += 1
             continue
         while r > 15:
-            code, length = ac_codes[0xF0]
-            writer.write(code, length)
+            writer.write(*ac_codes[0xF0])
             r -= 16
         s = abs(x).bit_length()
-        code, length = ac_codes[(r << 4) | s]
-        writer.write(code, length)
-        writer.write(x if x > 0 else x + (1 << s) - 1, s)
+        writer.write(*ac_codes[(r << 4) | s])
+        writer.write_value(x, s)
         r = 0
     if last < len(t) - 1:
         state.eobrun += 1
@@ -1246,8 +1244,7 @@ def _encode_ac_refine(writer, ac_codes, band, al, state):
         # is still ahead; beyond it they fold into the EOB run
         while r > 15 and i <= eob:
             _flush_eobrun(writer, ac_codes, state)
-            code, length = ac_codes[0xF0]
-            writer.write(code, length)
+            writer.write(*ac_codes[0xF0])
             r -= 16
             for b in br:
                 writer.write(b, 1)
@@ -1256,8 +1253,7 @@ def _encode_ac_refine(writer, ac_codes, band, al, state):
             br.append(x & 1)
             continue
         _flush_eobrun(writer, ac_codes, state)
-        code, length = ac_codes[(r << 4) | 1]
-        writer.write(code, length)
+        writer.write(*ac_codes[(r << 4) | 1])
         writer.write(1 if band[i] > 0 else 0, 1)
         for b in br:
             writer.write(b, 1)
@@ -1268,6 +1264,14 @@ def _encode_ac_refine(writer, ac_codes, band, al, state):
         state.bits.extend(br)
         if state.eobrun == 0x7FFF:
             _flush_eobrun(writer, ac_codes, state)
+
+
+# Annex-K DC tables and the flat AC table (id 0) that every component shares
+_PROG_DHT = (
+    (0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
+    (1, 0, PROG_AC_BITS, PROG_AC_VALS),
+    (0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
+)
 
 
 def jpeg_encode_progressive(
@@ -1281,191 +1285,51 @@ def jpeg_encode_progressive(
     component AC refinement 1-63 (Ah=1 -> Al=0); interleaved DC
     refinement. AC scans are non-interleaved over each component's own
     ceil(w_c/8) x ceil(h_c/8) grid per T.81 A.2.2."""
-    if img.dtype != np.uint8:
-        raise ValueError(f"jpeg_encode_progressive expects uint8, got {img.dtype}")
-    gray = img.ndim == 2
-    if not gray and (img.ndim != 3 or img.shape[2] != 3):
-        raise ValueError(f"unsupported shape {img.shape}")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    sub420 = (not gray) and subsampling == "420"
-    h, w = img.shape[:2]
-    qy = _quality_scale(Q_LUMA, quality)
-    qc = _quality_scale(Q_CHROMA, quality)
+    frame, comps, qtables = _planes(
+        img, quality, subsampling, "jpeg_encode_progressive", ("444", "420")
+    )
+    out = _frame_header(0xC2, frame, comps, qtables, _PROG_DHT)
+    codes = {(tc, th): _canonical_codes(bits, vals) for tc, th, bits, vals in _PROG_DHT}
+    ac_codes = codes[1, 0]
+    mcus = (comps, frame["mcus_x"], frame["mcus_y"])
 
-    out = bytearray(b"\xff\xd8")
-    app0 = b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    out += b"\xff\xe0" + struct.pack(">H", len(app0) + 2) + app0
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(qy.tolist())
-    if not gray:
-        out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x01" + bytes(qc.tolist())
-    ncomp = 1 if gray else 3
-    y_sampling = 0x22 if sub420 else 0x11
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    sof += bytes([1, y_sampling, 0])
-    if not gray:
-        sof += bytes([2, 0x11, 1, 3, 0x11, 1])
-    out += b"\xff\xc2" + struct.pack(">H", len(sof) + 2) + sof  # SOF2
-    # DHT: Annex-K DC tables + the flat AC table (id 0) all comps share
-    dht_specs = [(0, 0, DC_LUMA_BITS, DC_LUMA_VALS), (1, 0, PROG_AC_BITS, PROG_AC_VALS)]
-    if not gray:
-        dht_specs.append((0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS))
-    for tc, th, bits, vals in dht_specs:
-        payload = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        out += b"\xff\xc4" + struct.pack(">H", len(payload) + 2) + payload
-
-    # component planes -> quantized zigzag blocks (baseline layout)
-    if gray:
-        yp = _pad8(img.astype(np.float64))
-        plane_specs = [(yp, qy, 1, 1, 0)]
-        mcus_x, mcus_y = yp.shape[1] // 8, yp.shape[0] // 8
-        hmax = vmax = 1
-    else:
-        rgb = img.astype(np.float64)
-        r_, g_, b_ = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-        cb = -0.168736 * r_ - 0.331264 * g_ + 0.5 * b_ + 128.0
-        cr = 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_ + 128.0
-        if sub420:
-            yp = _pad_to(y, 16)
-            ph, pw = yp.shape
-            cbp = _pad_to(cb, 16).reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            crp = _pad_to(cr, 16).reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            mcus_x, mcus_y = pw // 16, ph // 16
-            hmax = vmax = 2
-            plane_specs = [(yp, qy, 2, 2, 0), (cbp, qc, 1, 1, 1), (crp, qc, 1, 1, 1)]
-        else:
-            yp, cbp, crp = (_pad8(p) for p in (y, cb, cr))
-            mcus_x, mcus_y = yp.shape[1] // 8, yp.shape[0] // 8
-            hmax = vmax = 1
-            plane_specs = [(yp, qy, 1, 1, 0), (cbp, qc, 1, 1, 1), (crp, qc, 1, 1, 1)]
-    comps = []
-    for ci, (plane, qtbl, chs, cvs, dc_id) in enumerate(plane_specs):
-        zz = _quantized_zigzag(plane, qtbl)
-        bw = plane.shape[1] // 8
-        comp_w = -(-w * chs // hmax)
-        comp_h = -(-h * cvs // vmax)
-        comps.append(
-            {
-                "cid": ci + 1,
-                "zz": zz,
-                "bw": bw,
-                "h": chs,
-                "v": cvs,
-                "dc_id": dc_id,
-                "nbx": -(-comp_w // 8),
-                "nby": -(-comp_h // 8),
-            }
-        )
-    dc_codes = [
-        _canonical_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-        _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
-    ]
-    ac_codes = _canonical_codes(PROG_AC_BITS, PROG_AC_VALS)
-
-    def sos(scan_comps, ss, se, ah, al, body: bytes) -> bytes:
-        hdr = bytes([len(scan_comps)])
-        for c in scan_comps:
-            hdr += bytes([c["cid"], (c["dc_id"] << 4) | 0])
-        hdr += bytes([ss, se, (ah << 4) | al])
-        return b"\xff\xda" + struct.pack(">H", len(hdr) + 2) + hdr + body
-
-    # scan 1: DC first, interleaved, Al=1
+    # DC first scan, interleaved, Al=1
     writer = _BitWriter()
     preds = [0] * len(comps)
-    for mcu in range(mcus_x * mcus_y):
-        my, mx = divmod(mcu, mcus_x)
-        for ci, c in enumerate(comps):
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    idx = (my * c["v"] + by) * c["bw"] + (mx * c["h"] + bx)
-                    dc = int(c["zz"][idx][0]) >> 1
-                    diff = dc - preds[ci]
-                    preds[ci] = dc
-                    size = abs(diff).bit_length()
-                    code, length = dc_codes[c["dc_id"]][size]
-                    writer.write(code, length)
-                    if size:
-                        writer.write(diff if diff > 0 else diff + (1 << size) - 1, size)
+    for _, ci, bid in _mcu_blocks(*mcus):
+        c = comps[ci]
+        dc = c["zz"][bid][0] >> 1
+        diff = dc - preds[ci]
+        preds[ci] = dc
+        size = abs(diff).bit_length()
+        writer.write(*codes[0, c["tq"]][size])
+        writer.write_value(diff, size)
     writer.flush()
-    out += sos(comps, 0, 0, 0, 1, bytes(writer.buf))
+    out += _sos(comps, 0, 0, 0x01, ta=0) + writer.buf
 
-    # scans 2..: per-component AC bands (first pass at Al=1), walking the
-    # component's OWN grid — padded blocks beyond nbx/nby carry no AC
-    def comp_block_indices(c):
-        for by in range(c["nby"]):
-            for bx in range(c["nbx"]):
-                yield by * c["bw"] + bx
-
-    for ss, se in ((1, 5), (6, 63)):
+    # AC bands 1-5 and 6-63 at Al=1, then the AC refinement to full
+    # precision (Ah=1 -> Al=0), each scan over one component's own grid
+    # (the padded blocks beyond nbx/nby carry no AC)
+    for ss, se, a, encode in (
+        (1, 5, 0x01, _encode_ac_first),
+        (6, 63, 0x01, _encode_ac_first),
+        (1, 63, 0x10, _encode_ac_refine),
+    ):
         for c in comps:
             writer = _BitWriter()
             state = _ProgACState()
-            for idx in comp_block_indices(c):
-                band = [int(v) for v in c["zz"][idx][ss : se + 1]]
-                _encode_ac_first(writer, ac_codes, band, 1, state)
+            for _, _, bid in _own_blocks(c):
+                encode(writer, ac_codes, c["zz"][bid][ss : se + 1], a & 0x0F, state)
             _flush_eobrun(writer, ac_codes, state)
             writer.flush()
-            out += sos([c], ss, se, 0, 1, bytes(writer.buf))
-
-    # AC refinement to full precision (Ah=1 -> Al=0)
-    for c in comps:
-        writer = _BitWriter()
-        state = _ProgACState()
-        for idx in comp_block_indices(c):
-            band = [int(v) for v in c["zz"][idx][1:64]]
-            _encode_ac_refine(writer, ac_codes, band, 0, state)
-        _flush_eobrun(writer, ac_codes, state)
-        writer.flush()
-        out += sos([c], 1, 63, 1, 0, bytes(writer.buf))
+            out += _sos([c], ss, se, a, ta=0) + writer.buf
 
     # DC refinement, interleaved (raw bits, no Huffman)
     writer = _BitWriter()
-    for mcu in range(mcus_x * mcus_y):
-        my, mx = divmod(mcu, mcus_x)
-        for c in comps:
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    idx = (my * c["v"] + by) * c["bw"] + (mx * c["h"] + bx)
-                    writer.write(int(c["zz"][idx][0]) & 1, 1)
+    for _, ci, bid in _mcu_blocks(*mcus):
+        writer.write(comps[ci]["zz"][bid][0] & 1, 1)
     writer.flush()
-    out += sos(comps, 0, 0, 1, 0, bytes(writer.buf))
+    out += _sos(comps, 0, 0, 0x10, ta=0) + writer.buf
 
     out += b"\xff\xd9"
     return bytes(out)
-
-
-def _write_block(blk, writer, dc_codes, ac_codes, pred):
-    dc = int(blk[0])
-    diff = dc - pred
-    size = abs(diff).bit_length()
-    code, length = dc_codes[size]
-    writer.write(code, length)
-    if size:
-        v = diff if diff > 0 else diff + (1 << size) - 1
-        writer.write(v, size)
-    run = 0
-    last_nz = 63
-    while last_nz > 0 and blk[last_nz] == 0:
-        last_nz -= 1
-    for k in range(1, 64):
-        v = int(blk[k])
-        if v == 0:
-            if k > last_nz:
-                code, length = ac_codes[0x00]
-                writer.write(code, length)
-                break
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac_codes[0xF0]
-            writer.write(code, length)
-            run -= 16
-        size = abs(v).bit_length()
-        code, length = ac_codes[(run << 4) | size]
-        writer.write(code, length)
-        vv = v if v > 0 else v + (1 << size) - 1
-        writer.write(vv, size)
-        run = 0
-    # (no EOB when the final coefficient k=63 is non-zero, per spec)
-    return dc

@@ -6,15 +6,13 @@ video are real for the classic RIFF containers, implemented from the
 published specs (no codec libraries in this container):
 
 - ``decode_audio`` parses RIFF/WAVE (PCM 8/16/24/32-bit, IEEE float
-  32/64-bit, WAVE_FORMAT_EXTENSIBLE, multi-channel downmixed to mono)
-  plus the engine's own deterministic RAWA fixture container; perceptual
-  codecs (mp3/ogg/flac/aac) remain honest ``NotImplementedError``
-  boundaries;
+  32/64-bit, WAVE_FORMAT_EXTENSIBLE, multi-channel downmixed to mono);
+  perceptual codecs (mp3/ogg/flac/aac) remain honest
+  ``NotImplementedError`` boundaries;
 - ``sample_video_frames`` parses MJPEG-in-AVI (RIFF 'AVI ' — the
   classic scanner/camera archive layout; every ``..dc``/``..db`` movi
-  chunk is a baseline JPEG decoded by jpegcodec) plus the RAWV fixture
-  container of concatenated PNG frames; inter-frame codecs (h264/vp9/
-  av1) remain ``NotImplementedError``.
+  chunk is a baseline JPEG decoded by jpegcodec) and animated GIF;
+  inter-frame codecs (h264/vp9/av1) remain ``NotImplementedError``.
 
 Everything Spark-side — schemas, partitioning, UDF signatures, Arrow
 batch shapes — is the same regardless of container; a production
@@ -31,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .imgcodec import png_decode, png_encode
+from .imgcodec import png_encode
 from .worker import map_rows
 
 MEDIA_SCHEMA = T.StructType(
@@ -54,9 +52,6 @@ VIDEO_FRAMES_SCHEMA = (
     " mean_luma double, frame_png binary, status string"
 )
 
-_RAWA_MAGIC = b"RAWA"
-_RAWV_MAGIC = b"RAWV"
-
 
 def _chunk(cid: bytes, body: bytes) -> bytes:
     """RIFF chunk: id + little-endian size + body + word-alignment pad —
@@ -69,13 +64,6 @@ def _list(kind: bytes, body: bytes) -> bytes:
 
 
 # ------------------------------------------------------------------ audio
-
-
-def encode_audio_fake(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """Deterministic test container: RAWA | rate | n | int16 PCM."""
-    pcm = np.clip(samples, -1.0, 1.0)
-    pcm16 = np.rint(pcm * 32767).astype("<i2")
-    return _RAWA_MAGIC + struct.pack("<II", sample_rate, pcm16.size) + pcm16.tobytes()
 
 
 def wav_encode(
@@ -180,20 +168,15 @@ def wav_decode(content: bytes) -> tuple[np.ndarray, int]:
 
 
 def decode_audio(content: bytes) -> tuple[np.ndarray, int]:
-    """-> (mono float64 samples, sample_rate). RIFF/WAVE (real parser,
-    ``wav_decode``) and the RAWA fixture container decode here;
-    perceptual codecs stay honest NotImplementedError boundaries."""
+    """-> (mono float64 samples, sample_rate). RIFF/WAVE decodes here
+    (``wav_decode``); perceptual codecs stay honest NotImplementedError
+    boundaries."""
     if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
         return wav_decode(content)
-    if content[:4] != _RAWA_MAGIC:
-        raise NotImplementedError(
-            "perceptual audio codecs (mp3/ogg/flac/aac) are not available "
-            "in this container; RIFF/WAVE and the RAWA fixture container "
-            "decode here"
-        )
-    rate, n = struct.unpack("<II", content[4:12])
-    pcm = np.frombuffer(content[12 : 12 + 2 * n], dtype="<i2")
-    return pcm.astype(np.float64) / 32767.0, rate
+    raise NotImplementedError(
+        "perceptual audio codecs (mp3/ogg/flac/aac) are not available "
+        "in this container; RIFF/WAVE decodes here"
+    )
 
 
 def audio_features(media_df: DataFrame) -> DataFrame:
@@ -224,16 +207,6 @@ def audio_features(media_df: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------------ video
-
-
-def encode_video_fake(frames: list[np.ndarray]) -> bytes:
-    """RAWV | n_frames | (len | png)*  — concatenated PNG frames."""
-    blobs = [png_encode(f) for f in frames]
-    out = [_RAWV_MAGIC, struct.pack("<I", len(blobs))]
-    for b in blobs:
-        out.append(struct.pack("<I", len(b)))
-        out.append(b)
-    return b"".join(out)
 
 
 def avi_encode_mjpeg(frames: list[np.ndarray], fps: int = 25, quality: int = 90) -> bytes:
@@ -311,19 +284,10 @@ def iter_video_frames(content: bytes):
 
         yield from iter_gif_frames(content)
         return
-    if content[:4] != _RAWV_MAGIC:
-        raise NotImplementedError(
-            "inter-frame video codecs (h264/vp9/av1) are not available "
-            "in this container; MJPEG-AVI, animated GIF, and the RAWV "
-            "fixture container decode here"
-        )
-    (n,) = struct.unpack("<I", content[4:8])
-    pos = 8
-    for _ in range(n):
-        (ln,) = struct.unpack("<I", content[pos : pos + 4])
-        pos += 4
-        yield png_decode(content[pos : pos + ln])
-        pos += ln
+    raise NotImplementedError(
+        "inter-frame video codecs (h264/vp9/av1) are not available in "
+        "this container; MJPEG-AVI and animated GIF decode here"
+    )
 
 
 def sample_video_frames(media_df: DataFrame, every_nth: int = 2) -> DataFrame:

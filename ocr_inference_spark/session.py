@@ -18,14 +18,12 @@ ARROW_BATCH_ROWS = 32
 def get_spark(
     app_name: str = "ocr_inference_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     # the cores this process may run on, unless SPARK_GRAFT_CPUS says
     cores = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cores}]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")]
-        shuffle_partitions = 32 if n == "*" else max(int(n), 8)
+    n = master[master.find("[") + 1 : master.find("]")]
+    shuffle_partitions = 32 if n == "*" else max(int(n), 8)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

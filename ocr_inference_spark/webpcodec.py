@@ -51,6 +51,8 @@ import struct
 
 import numpy as np
 
+from .imgcodec import check_pixel_budget
+
 # code-length symbols appear in this fixed order (spec §"prefix codes")
 _CLC_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
 
@@ -589,6 +591,7 @@ def vp8l_decode(payload: bytes) -> np.ndarray:
     br = _BitReader(payload[1:])
     w = br.read(14) + 1
     h = br.read(14) + 1
+    check_pixel_budget(w, h)
     br.read(1)  # alpha hint
     if br.read(3) != 0:
         raise ValueError("unsupported VP8L version")

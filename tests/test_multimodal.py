@@ -9,13 +9,13 @@ import numpy as np
 import pytest
 from pyspark.sql import Row
 
+from ocr_inference_spark.gifcodec import gif_encode_frames
 from ocr_inference_spark.multimodal import (
     MEDIA_SCHEMA,
     audio_features,
     decode_audio,
-    encode_audio_fake,
-    encode_video_fake,
     sample_video_frames,
+    wav_encode,
 )
 from ocr_inference_spark.render import render_page
 
@@ -23,7 +23,7 @@ from ocr_inference_spark.render import render_page
 def test_audio_roundtrip_unit():
     t = np.arange(16000) / 16000.0
     x = 0.5 * np.sin(2 * np.pi * 440 * t)
-    back, rate = decode_audio(encode_audio_fake(x, 16000))
+    back, rate = decode_audio(wav_encode(x, 16000))
     assert rate == 16000
     assert np.allclose(back, x, atol=1e-4)
 
@@ -40,11 +40,11 @@ def media_df(spark):
     frames = [render_page([f"frame {i}"]) for i in range(4)]
     rows = [
         Row(media_ref="a1", modality="audio",
-            content=encode_audio_fake(clip, 8000), mime="audio/x-raw", meta={}),
+            content=wav_encode(clip, 8000), mime="audio/wav", meta={}),
         Row(media_ref="a2", modality="audio",
             content=b"OggS fake", mime="audio/ogg", meta={}),
         Row(media_ref="v1", modality="video",
-            content=encode_video_fake(frames), mime="video/x-raw", meta={}),
+            content=gif_encode_frames(frames), mime="image/gif", meta={}),
     ]
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
