@@ -157,8 +157,9 @@ def ocr_lines_to_pagexml(
 
 
 def detection_to_parquet(det_df: DataFrame, out_dir: str) -> None:
-    """K4 detection parquet sink (LINE_DETECTION_SCHEMA, Config.py:90-115;
-    zstd like BDRC/utils.py:1139)."""
+    """K4 detection parquet sink (``pipeline.DETECTION_OUT_SCHEMA``, the
+    reference's LINE_DETECTION_SCHEMA, Config.py:90-115; zstd like
+    BDRC/utils.py:1139)."""
     det_df.write.mode("overwrite").option("compression", "zstd").parquet(out_dir)
 
 

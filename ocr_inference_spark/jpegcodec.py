@@ -293,13 +293,20 @@ def jpeg_decode(data: bytes, apply_exif_orientation: bool = True) -> np.ndarray:
         # legal 0xFF fill bytes may pad before the marker code
         while pos + 1 < n and data[pos + 1] == 0xFF:
             pos += 1
+        if pos + 1 == n:
+            raise ValueError(f"truncated JPEG: stream ends inside a marker at byte {pos}")
         marker = data[pos + 1]
         pos += 2
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             continue
         if marker == 0xD9:  # EOI
             break
-        (seglen,) = struct.unpack(">H", data[pos : pos + 2])
+        seglen = int.from_bytes(data[pos : pos + 2], "big")
+        if pos + max(seglen, 2) > n:
+            raise ValueError(
+                f"truncated JPEG: segment 0xFF{marker:02X} at byte {pos - 2} "
+                "runs past the end of the stream"
+            )
         payload = data[pos + 2 : pos + seglen]
         pos += seglen
         if marker == 0xDB:  # DQT
@@ -324,6 +331,8 @@ def jpeg_decode(data: bytes, apply_exif_orientation: bool = True) -> np.ndarray:
                 tc, th = payload[p] >> 4, payload[p] & 0x0F
                 bits = list(payload[p + 1 : p + 17])
                 nv = sum(bits)
+                if p + 17 + nv > len(payload):
+                    raise ValueError("DHT table runs past its segment")
                 vals = list(payload[p + 17 : p + 17 + nv])
                 htables[(tc, th)] = _DecodeTable(bits, vals)
                 p += 17 + nv

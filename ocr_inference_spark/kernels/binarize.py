@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .boxops import box_sum_from_integral, integral
+
 
 def to_gray(img: np.ndarray) -> np.ndarray:
     """(H,W,3) RGB uint8 -> (H,W) uint8 luma; grayscale passes through."""
@@ -21,21 +23,6 @@ def to_gray(img: np.ndarray) -> np.ndarray:
     g = img[..., 1].astype(np.uint32)
     b = img[..., 2].astype(np.uint32)
     return ((299 * r + 587 * g + 114 * b) // 1000).astype(np.uint8)
-
-
-def box_mean(gray: np.ndarray, block: int) -> np.ndarray:
-    """Mean over a (block x block) window via integral image.
-
-    Edges are handled by edge-value padding (each out-of-bounds sample
-    repeats the nearest border pixel), which keeps the window area
-    constant so the whole filter is four integral-image slices — no
-    fancy indexing.
-    """
-    from .boxops import box_sum_from_integral, integral
-
-    r = block // 2
-    b = 2 * r + 1
-    return box_sum_from_integral(integral(gray, r), b, b) / float(b * b)
 
 
 def binarize(
@@ -57,8 +44,6 @@ def binarize(
     levels vs C=13) the decimation is decision-equivalent.
     adaptive=False: global threshold 120 (BDRC/utils.py:810-813).
     """
-    from .boxops import box_sum_from_integral, integral
-
     if gray.ndim != 2:
         gray = to_gray(gray)
     if not adaptive:

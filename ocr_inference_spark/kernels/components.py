@@ -95,12 +95,6 @@ class Component:
         inked = t[t > 0]
         return float(np.median(inked)) if inked.size else 0.0
 
-    def column_ys(self, x_abs: int) -> np.ndarray:
-        """All ink rows of this component at absolute column ``x_abs``."""
-        a = self.runs
-        sel = (a[:, 1] <= x_abs) & (x_abs < a[:, 2])
-        return np.sort(a[sel, 0]).astype(np.int32)
-
 
 def _all_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All ink runs of a {0,1} mask in one vectorized pass.
@@ -209,6 +203,40 @@ def connected_components(mask: np.ndarray) -> list[Component]:
         )
         for ci in disc
     ]
+
+
+def slice_ink_rows(
+    comps: list[Component], x_starts: np.ndarray, slice_width: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Each component's top and bottom ink rows inside x-slices
+    ``[x_start, x_start + slice_width)``: int64 ``(lo, hi)``, each
+    (len(comps), n). ``x_starts`` is (n,), the same slices for every
+    component, or (len(comps), n), a row of slices per component. A
+    slice holding none of a component's ink has lo = int64 max and
+    hi = -1.
+
+    One (runs, n) overlap test over the page's concatenated run table,
+    then per-component row extremes by segment reductions — the
+    slice sampling of the dewarp gate and of the reading-order
+    threshold (reference: check_line_tps, BDRC/image_dewarping.py:
+    118-193; get_line_threshold, BDRC/line_detection.py:360-421)."""
+    x_starts = np.asarray(x_starts, dtype=np.int64)
+    big = np.iinfo(np.int64).max
+    lo = np.full((len(comps), x_starts.shape[-1]), big, dtype=np.int64)
+    hi = np.full(lo.shape, -1, dtype=np.int64)
+    lens = np.array([len(c.runs) for c in comps], dtype=np.int64)
+    inked = np.flatnonzero(lens)  # reduceat needs non-empty segments
+    if not inked.size or not lo.shape[1]:
+        return lo, hi
+    a = np.concatenate([comps[i].runs for i in inked.tolist()])
+    first = np.concatenate(([0], np.cumsum(lens[inked])[:-1]))
+    if x_starts.ndim == 2:
+        x_starts = np.repeat(x_starts[inked], lens[inked], axis=0)
+    sel = (a[:, 1, None] < x_starts + slice_width) & (a[:, 2, None] > x_starts)
+    rows = a[:, 0, None]
+    lo[inked] = np.minimum.reduceat(np.where(sel, rows, big), first)
+    hi[inked] = np.maximum.reduceat(np.where(sel, rows, -1), first)
+    return lo, hi
 
 
 def filter_area(comps: list[Component], min_area: float) -> list[Component]:

@@ -1,4 +1,4 @@
-"""Deskew: page-rotation estimation and correction.
+"""Deskew: page-rotation estimation and the shear that corrects it.
 
 The reference estimates the page angle as the mean of per-contour
 ``cv2.minAreaRect`` angles, split into low/high branches within ±5°
@@ -8,6 +8,13 @@ estimate each line component's angle by least-squares fitting its
 per-column top edge (the strut rule of a text band is a straight line
 under pure rotation) — same quantity minAreaRect would report for a
 long thin band.
+
+The correction is not a resampling rotation but an integer vertical
+shear: ``shear_shift`` gives each column's up-shift, and the page path
+(``page.page_stages``) composes it with the dewarp shift and applies
+both in one ``dewarp.apply_column_shift``. For |angle| < 5° the shear
+equals rotation up to a sub-pixel horizontal term, and because it moves
+columns whole, per-column features are preserved exactly.
 """
 
 from __future__ import annotations
@@ -69,44 +76,3 @@ def shear_shift(width: int, angle_deg: float) -> np.ndarray:
     return np.rint(
         (np.arange(width) - cx) * math.tan(math.radians(angle_deg))
     ).astype(np.int32)
-
-
-def shear_correct(img: np.ndarray, angle_deg: float, fill: int = 0) -> np.ndarray:
-    """Small-angle deskew by integer vertical shear: column x shifts up by
-    round((x - cx)·tan(angle)). For |angle| < 5° this equals rotation up
-    to a sub-pixel horizontal term (h·tanθ differential across a glyph is
-    << 1 px), but — unlike resampling rotation — translates columns
-    whole, so downstream per-column features are exactly preserved.
-    Used as the pipeline's deskew step; ``rotate_image`` below is the
-    general-angle kernel (reference: rotate_from_angle,
-    BDRC/line_detection.py:62-76)."""
-    if angle_deg == 0.0:
-        return img
-    from .dewarp import apply_column_shift
-
-    return apply_column_shift(img, shear_shift(img.shape[1], angle_deg), fill=fill)
-
-
-def rotate_image(
-    img: np.ndarray, angle_deg: float, fill: int = 0
-) -> np.ndarray:
-    """Rotate about the image center by ``angle_deg`` (counter-clockwise
-    in image coordinates), nearest-neighbour inverse mapping, same output
-    size — the affine-rotation semantics of the reference's
-    ``rotate_from_angle`` (BDRC/line_detection.py:62-76)."""
-    if angle_deg == 0.0:
-        return img
-    h, w = img.shape[:2]
-    cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
-    theta = math.radians(angle_deg)
-    cos_t, sin_t = math.cos(theta), math.sin(theta)
-    ys, xs = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-    xr = xs - cx
-    yr = ys - cy
-    # inverse rotation: source = R(-theta) . dest
-    src_x = np.rint(cos_t * xr - sin_t * yr + cx).astype(np.int64)
-    src_y = np.rint(sin_t * xr + cos_t * yr + cy).astype(np.int64)
-    inside = (src_x >= 0) & (src_x < w) & (src_y >= 0) & (src_y < h)
-    out = np.full_like(img, fill)
-    out[inside] = img[src_y[inside], src_x[inside]]
-    return out

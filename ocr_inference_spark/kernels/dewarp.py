@@ -2,37 +2,47 @@
 
 Mirrors the reference's TPS stage semantics (BDRC/image_dewarping.py):
 
-- ``check_line_distortion`` ~ ``check_line_tps`` (:118-193): sample the
+- ``slice_stats`` ~ the sampling of ``check_line_tps`` (:118-193): each
   line's vertical position at 5 x-slices (x in {0, w/4, w/2, 3w/4,
-  w-sw}); the line is distorted iff max Δy between slice centers exceeds
-  the mean line height.
-- ``distortion_ratio`` ~ ``check_for_tps`` (:196-227): fraction of lines
-  flagged distorted; the pipeline gates rectification on
-  ratio > tps_threshold = 0.25 (BDRC/inference.py:549-567).
+  w-sw}), for all lines of a page from one run-table pass.
+- ``distortion_ratio`` ~ ``check_for_tps`` (:196-227): a line is
+  distorted iff max Δy between its slice centers exceeds its mean slice
+  height; the ratio is the fraction of lines flagged, and the pipeline
+  gates rectification on ratio > tps_threshold = 0.25
+  (BDRC/inference.py:549-567).
 - ``best_global_line`` ~ ``get_global_tps_line`` (:230-264): the line
   whose Δy is closest to the mean Δy drives the global correction.
-- ``apply_global_rectification`` ~ ``apply_global_tps`` (:267-289): we
-  fit a polynomial through the chosen line's per-column baseline (the
-  "polynomial baseline fit" of the target spec) and shift every column
-  vertically to flatten it — a thin-plate-style warp restricted to the
-  vertical axis, which is exactly the distortion family page curl
-  produces. Fully vectorized (one fancy-index gather).
+- ``fit_page_shift`` + ``apply_column_shift`` ~ ``apply_global_tps``
+  (:267-289): we fit one polynomial through every line's per-column
+  baseline (the "polynomial baseline fit" of the target spec) and shift
+  every column vertically to flatten it — a thin-plate-style warp
+  restricted to the vertical axis, which is exactly the distortion
+  family page curl produces. ``apply_global_tps_2d`` is the true 2-D
+  spline path.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .components import Component
+from .components import Component, slice_ink_rows
 
 TPS_THRESHOLD = 0.25  # reference: BDRC/inference.py:558
 SLICE_FRACTIONS = (0.0, 0.25, 0.5, 0.75, 1.0)  # reference: image_dewarping.py:137-147
 
 
-def line_slice_stats(
-    comp: Component, slice_width: int = 8, base_shift: np.ndarray | None = None
+def _slice_starts(comps: list[Component], slice_width: int) -> np.ndarray:
+    """(len(comps), 5) slice starts x in {0, w/4, w/2, 3w/4, w-sw} of
+    each component's bbox."""
+    starts = [[c.x + int(f * max(c.w - slice_width, 0)) for f in SLICE_FRACTIONS] for c in comps]
+    return np.array(starts, dtype=np.int64).reshape(len(comps), len(SLICE_FRACTIONS))
+
+
+def slice_stats(
+    comps: list[Component], slice_width: int = 8, base_shift: np.ndarray | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(centers, heights) of the component at 5 x-slices (NaN if empty).
+    """(centers, heights), each (len(comps), 5): every component's ink
+    center row and ink height at its 5 x-slices (NaN where empty).
 
     Heights are *local* slice heights (the vertical extent of ink inside
     the slice), matching ``get_global_center``
@@ -44,16 +54,9 @@ def line_slice_stats(
     row - shift(slice center) — so the dewarp gate sees post-deskew
     geometry without the ink ever being re-materialized.
     """
-    x_starts = np.array(
-        [comp.x + int(frac * max(comp.w - slice_width, 0)) for frac in SLICE_FRACTIONS]
-    )
-    a = comp.runs  # (m, 3) [row, x0, x1) — one (5, m) overlap test
-    sel = (a[None, :, 1] < x_starts[:, None] + slice_width) & (a[None, :, 2] > x_starts[:, None])
-    hit = sel.any(axis=1)
-    rows = a[None, :, 0]
-    big = np.iinfo(np.int64).max
-    lo = np.where(sel, rows, big).min(axis=1, initial=big)
-    hi = np.where(sel, rows, -1).max(axis=1, initial=-1)
+    x_starts = _slice_starts(comps, slice_width)
+    lo, hi = slice_ink_rows(comps, x_starts, slice_width)
+    hit = hi >= 0
     s = 0.0
     if base_shift is not None:
         s = base_shift[np.minimum(x_starts + slice_width // 2, len(base_shift) - 1)]
@@ -63,34 +66,24 @@ def line_slice_stats(
     return centers, heights
 
 
-def check_line_distortion(
-    comp: Component, base_shift: np.ndarray | None = None
-) -> tuple[bool, float]:
-    """(distorted?, max Δy of slice centers). Distorted iff the center
-    spread exceeds the mean local slice height
-    (reference: check_line_tps, BDRC/image_dewarping.py:118-193)."""
-    centers, heights = line_slice_stats(comp, base_shift=base_shift)
-    valid = centers[~np.isnan(centers)]
-    if valid.size < 2:
-        return False, 0.0
-    dy = float(valid.max() - valid.min())
-    mean_h = float(np.nanmean(heights))
-    return dy > mean_h, dy
-
-
 def distortion_ratio(
     comps: list[Component], base_shift: np.ndarray | None = None
 ) -> tuple[float, list[float]]:
     """Fraction of distorted lines + per-line Δy values
-    (reference: check_for_tps, BDRC/image_dewarping.py:196-227)."""
+    (reference: check_for_tps, BDRC/image_dewarping.py:196-227).
+
+    A line is distorted iff the spread Δy of its slice centers exceeds
+    its mean local slice height (reference: check_line_tps,
+    BDRC/image_dewarping.py:118-193)."""
     if not comps:
         return 0.0, []
-    flags, dys = [], []
-    for c in comps:
-        flag, dy = check_line_distortion(c, base_shift)
-        flags.append(flag)
-        dys.append(dy)
-    return float(np.mean(flags)), dys
+    centers, heights = slice_stats(comps, base_shift=base_shift)
+    # fmax/fmin skip NaN: Δy is 0 for a line with one inked slice and
+    # NaN -> 0 for a line with none, so neither exceeds its height
+    dy = np.nan_to_num(np.fmax.reduce(centers, axis=1) - np.fmin.reduce(centers, axis=1))
+    n = (~np.isnan(heights)).sum(axis=1)
+    mean_h = np.nansum(heights, axis=1) / np.maximum(n, 1)
+    return float(np.mean(dy > mean_h)), dy.tolist()
 
 
 def best_global_line(comps: list[Component], dys: list[float]) -> Component:
@@ -108,14 +101,8 @@ def line_control_points(
     inputs are the (x, y) centers at the 5 slices, outputs flatten each
     to the centers' mean y (reference: check_line_tps control points,
     BDRC/image_dewarping.py:118-193)."""
-    centers, _ = line_slice_stats(comp, slice_width=slice_width)
-    xs = np.array(
-        [
-            comp.x + int(f * max(comp.w - slice_width, 0)) + slice_width // 2
-            for f in SLICE_FRACTIONS
-        ],
-        dtype=np.float64,
-    )
+    centers = slice_stats([comp], slice_width)[0][0]
+    xs = (_slice_starts([comp], slice_width)[0] + slice_width // 2).astype(np.float64)
     valid = ~np.isnan(centers)
     xs, ys = xs[valid], centers[valid]
     mean_y = float(ys.mean()) if ys.size else 0.0

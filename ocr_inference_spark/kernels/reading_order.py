@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .components import Component
+from .components import Component, slice_ink_rows
 
 
 def get_line_threshold(comps: list[Component], mask_shape, slice_width: int = 20) -> float:
@@ -34,28 +34,20 @@ def get_line_threshold(comps: list[Component], mask_shape, slice_width: int = 20
     x_steps = (w // slice_width) // 2
     if x_steps == 0:
         return 0.0
-    # every slice against one run table for the page: a (steps, runs)
-    # overlap matrix, then per-component row extremes by segment
-    # reductions. Every run row lies inside the union bbox's [ymin, ymax]
-    # by construction, so the original row-range test is implied; a
-    # component without runs never counts, and the median ignores order.
-    tables = [c.runs for c in comps if len(c.runs)]
-    if not tables:
-        return 0.0
-    a = np.concatenate(tables)
-    first = np.cumsum([0] + [len(t) for t in tables[:-1]])
-    x_start = xmin + x_steps * np.arange(1, x_steps + 1)[:, None]
-    sel = (a[:, 1] < x_start + slice_width) & (a[:, 2] > x_start)
-    big = np.iinfo(np.int64).max
-    lo = np.minimum.reduceat(np.where(sel, a[:, 0], big), first, axis=1)
-    hi = np.maximum.reduceat(np.where(sel, a[:, 0], -1), first, axis=1)
+    # every slice against one run table for the page. Every run row
+    # lies inside the union bbox's [ymin, ymax] by construction, so the
+    # original row-range test is implied; a component without runs
+    # never counts.
+    x_start = xmin + x_steps * np.arange(1, x_steps + 1)
+    lo, hi = slice_ink_rows(comps, x_start, slice_width)
     hit = hi >= 0
-    counts = hit.sum(axis=1)
+    counts = hit.sum(axis=0)
     best = int(np.argmax(counts))  # the first densest slice
     n = int(counts[best])
     if n == 0:
         return 0.0
-    y_points = (lo[best, hit[best]] + hi[best, hit[best]]) / 2.0
+    inked = hit[:, best]
+    y_points = (lo[inked, best] + hi[inked, best]) / 2.0
     return float(np.median(y_points) // n)
 
 

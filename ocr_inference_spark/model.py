@@ -1,8 +1,8 @@
 """Deterministic text-recognition "network" + executor-side session cache.
 
 Plays the role of the reference's per-line ONNX CTC recognizer
-(BDRC/inference.py:279-429): ``forward`` maps a binarized line image to
-per-timestep vocab logits (one timestep per pixel column); CTC decoding
+(BDRC/inference.py:279-429): ``forward_batch`` maps binarized line images
+to per-timestep vocab logits (one timestep per pixel column); CTC decoding
 (kernels/ctc.py) turns the logit matrix into text. The "weights" are the
 glyph templates (glyphs.py) serialized to bytes, shipped to executors
 via ``SparkContext.broadcast`` exactly as real ONNX weight bytes would
@@ -92,16 +92,12 @@ class RecognitionSession:
         d[:, 0] = _POPCOUNT16[packed]  # blank: distance to empty column
         return -2.0 * d
 
-    def forward(self, line_img: np.ndarray) -> np.ndarray:
-        """Line ink -> logits (T=W, V): char score = -2*hamming(col,
-        template); blank score = -2*popcount(col). A column matching a
-        template wins; an (almost-)empty column yields blank."""
-        return self._logits_from_packed(self._pack(self.features(line_img)))
-
     def forward_batch(self, line_imgs: list[np.ndarray]) -> list[np.ndarray]:
-        """Batched call — concatenates all lines' packed columns into one
-        vectorized pass (the reference runs per line; we batch, cf.
-        SURVEY.md I31)."""
+        """Line inks -> one logits array (T=W, V) per line: char score =
+        -2*hamming(col, template); blank score = -2*popcount(col). A
+        column matching a template wins; an (almost-)empty column yields
+        blank. All lines' packed columns go through one vectorized pass
+        (the reference runs per line; we batch, cf. SURVEY.md I31)."""
         if not line_imgs:
             return []
         packed = [self._pack(self.features(img)) for img in line_imgs]

@@ -315,10 +315,11 @@ def extract_spans(
     return out
 
 
-# full LINE_DETECTION_SCHEMA fidelity (Config.py:90-115): nested contour
-# polygons (Douglas-Peucker simplified) alongside axis-aligned AND
-# rotated (minAreaRect-equivalent) boxes — the reference emits both
-# (get_union_bbox, BDRC/utils.py:1081-1097)
+# the detection table's schema: the reference's LINE_DETECTION_SCHEMA
+# (Config.py:90-115) — nested contour polygons (Douglas-Peucker
+# simplified) and axis-aligned boxes — plus rotated (minAreaRect-
+# equivalent) boxes, which the reference also emits (get_union_bbox,
+# BDRC/utils.py:1081-1097), and the page status
 DETECTION_OUT_SCHEMA = (
     "image_name string, image_width int, image_height int, num_contours int,"
     " contours array<array<struct<x:int, y:int>>>,"

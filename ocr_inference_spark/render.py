@@ -73,7 +73,7 @@ def render_page(
     """Known text lines -> uint8 grayscale page image (dark ink on paper).
 
     Skew is applied as integer vertical shear (the small-angle model of
-    page tilt — see kernels/deskew.py:shear_correct) and warp as a
+    page tilt — see kernels/deskew.py:shear_shift) and warp as a
     vertical sine shift: both are per-column displacements, the
     distortion family the pipeline's deskew + baseline-dewarp stages
     invert.

@@ -4,7 +4,10 @@ The reference declares its Parquet schemas by hand
 (LINE_DETECTION_SCHEMA, Config.py:90-115; OCR-lines schema,
 BDRC/utils.py:1273-1285); we do the same for every table the engine
 touches. The input/output span shape is authoritative from
-BASELINE.json ``input_hint``.
+BASELINE.json ``input_hint``. The detection table's schema, the
+analogue of the reference's LINE_DETECTION_SCHEMA, is
+``pipeline.DETECTION_OUT_SCHEMA``, next to ``detect_lines``, the one
+writer of it.
 """
 
 from __future__ import annotations
@@ -101,45 +104,5 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("stage", T.StringType(), True),
         T.StructField("duration_ms", T.DoubleType(), True),
         T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
-# detection-parquet analogue of LINE_DETECTION_SCHEMA (Config.py:90-115):
-# contours = list<list<struct<x,y>>> exactly like the reference's Arrow
-# schema (Douglas-Peucker-simplified boundary polygons)
-LINE_DETECTION_SCHEMA = T.StructType(
-    [
-        T.StructField("image_name", T.StringType(), False),
-        T.StructField("image_width", T.IntegerType(), False),
-        T.StructField("image_height", T.IntegerType(), False),
-        T.StructField("num_contours", T.IntegerType(), False),
-        T.StructField(
-            "contours",
-            T.ArrayType(
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("x", T.IntegerType()),
-                            T.StructField("y", T.IntegerType()),
-                        ]
-                    )
-                )
-            ),
-            True,
-        ),
-        T.StructField(
-            "bboxes",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("x", T.IntegerType()),
-                        T.StructField("y", T.IntegerType()),
-                        T.StructField("w", T.IntegerType()),
-                        T.StructField("h", T.IntegerType()),
-                    ]
-                )
-            ),
-            True,
-        ),
     ]
 )

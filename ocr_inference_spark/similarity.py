@@ -109,7 +109,6 @@ _M64 = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
 _P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
 
 

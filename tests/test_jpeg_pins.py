@@ -16,6 +16,7 @@ import itertools
 from pathlib import Path
 
 import numpy as np
+import pytest
 
 from ocr_inference_spark.jpegcodec import (
     jpeg_decode,
@@ -26,7 +27,7 @@ from ocr_inference_spark.jpegcodec import (
 SIZES = ((1, 1), (17, 23), (33, 65))
 
 ENCODE_MD5 = "ad407e93abf1d594ffa8cbd7371d1a59"
-DECODE_MD5 = "c231f6494f54e6b9d7e7a611aaf6869e"
+DECODE_MD5 = "bc9af0d751683d018ac5e0e982bdcd79"
 
 
 def _image(h: int, w: int, rgb: bool) -> np.ndarray:
@@ -87,3 +88,16 @@ def test_jpeg_encoder_bytes_and_decoder_pixels_are_pinned():
     assert n == 312 + 2
     assert enc == ENCODE_MD5
     assert dec == DECODE_MD5
+
+
+def test_cut_or_overrun_segments_raise_value_error():
+    # a stream that ends inside a segment or a marker, and a Huffman
+    # table whose code counts run past its own segment, are malformed
+    # media: ValueError, which every caller turns into a failed row
+    data = jpeg_encode(_image(17, 23, False), quality=90)
+    dht = data.find(b"\xff\xc4")
+    bad_counts = bytearray(data)
+    bad_counts[dht + 5 : dht + 21] = bytes([255] * 16)
+    for blob in (data[:150], data[: dht + 1], bytes(bad_counts)):
+        with pytest.raises(ValueError):
+            jpeg_decode(blob)

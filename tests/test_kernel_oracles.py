@@ -298,6 +298,20 @@ def ref_line_slice_stats(comp, slice_width=8, base_shift=None):
     return centers, heights
 
 
+def ref_distortion_ratio(comps, base_shift=None):
+    """The gate as a loop over lines: each line flagged on its own."""
+    if not comps:
+        return 0.0, []
+    flags, dys = [], []
+    for c in comps:
+        centers, heights = ref_line_slice_stats(c, base_shift=base_shift)
+        valid = centers[~np.isnan(centers)]
+        dy = float(valid.max() - valid.min()) if valid.size >= 2 else 0.0
+        flags.append(valid.size >= 2 and dy > float(np.nanmean(heights)))
+        dys.append(dy)
+    return float(np.mean(flags)), dys
+
+
 def ref_line_threshold(comps, slice_width=20):
     if not comps:
         return 0.0
@@ -343,25 +357,33 @@ def _page_components():
 
 def test_slice_stats_threshold_and_angle_match_loop_references():
     from ocr_inference_spark.kernels.deskew import component_angle, shear_shift
-    from ocr_inference_spark.kernels.dewarp import line_slice_stats
+    from ocr_inference_spark.kernels.dewarp import distortion_ratio, slice_stats
     from ocr_inference_spark.kernels.reading_order import get_line_threshold
+
+    def assert_rows_match(comps, base=None):
+        got = slice_stats(comps, base_shift=base)
+        for i, c in enumerate(comps):
+            want = ref_line_slice_stats(c, base_shift=base)
+            assert np.array_equal(got[0][i], want[0], equal_nan=True)
+            assert np.array_equal(got[1][i], want[1], equal_nan=True)
 
     comps_all = _random_components()
     pages = _page_components()
     for ink, comps in pages:
         shift = shear_shift(ink.shape[1], 1.7)
-        for c in comps:
-            for base in (None, shift):
-                got, want = line_slice_stats(c, base_shift=base), ref_line_slice_stats(c, base_shift=base)
-                assert np.array_equal(got[0], want[0], equal_nan=True)
-                assert np.array_equal(got[1], want[1], equal_nan=True)
+        for base in (None, shift):
+            assert_rows_match(comps, base)
+            assert distortion_ratio(comps, base) == ref_distortion_ratio(comps, base)
         assert get_line_threshold(comps, ink.shape) == ref_line_threshold(comps)
     for c in comps_all + [c for _, comps in pages for c in comps]:
         assert component_angle(c) == ref_component_angle(c)
-        got, want = line_slice_stats(c), ref_line_slice_stats(c)
-        assert np.array_equal(got[0], want[0], equal_nan=True)
+        assert_rows_match([c])
+    # a component without runs never counts and is never distorted
+    empty = Component(runs=[], x=3, y=0, w=9, h=0, area=0)
     for i in range(0, len(comps_all), 5):
-        group = comps_all[i : i + 5]
+        group = comps_all[i : i + 5] + [empty]
+        assert_rows_match(group)
+        assert distortion_ratio(group) == ref_distortion_ratio(group)
         assert get_line_threshold(group, (0, 0), 4) == ref_line_threshold(group, 4)
 
 

@@ -1,13 +1,9 @@
 import numpy as np
 
 from ocr_inference_spark.glyphs import BAND_H, GLYPH_GAP, GLYPH_W, encode_text
-from ocr_inference_spark.kernels.binarize import binarize, box_mean, to_gray
+from ocr_inference_spark.kernels.binarize import binarize, to_gray
 from ocr_inference_spark.kernels.components import connected_components
-from ocr_inference_spark.kernels.deskew import (
-    estimate_page_angle,
-    rotate_image,
-    shear_correct,
-)
+from ocr_inference_spark.kernels.deskew import estimate_page_angle, shear_shift
 from ocr_inference_spark.kernels.dewarp import (
     apply_column_shift,
     distortion_ratio,
@@ -23,11 +19,6 @@ def test_to_gray():
     img[..., 0] = 255  # pure red
     g = to_gray(img)
     assert g[0, 0] == 255 * 299 // 1000
-
-
-def test_box_mean_constant():
-    img = np.full((10, 10), 100, dtype=np.uint8)
-    assert np.allclose(box_mean(img, 5), 100.0)
 
 
 def test_binarize_finds_ink():
@@ -56,21 +47,13 @@ def test_segmentation_mask_one_component_per_line():
 def test_shear_roundtrip_exact():
     page = render_page(["hello world foo bar"], skew_deg=3.0)
     ink = binarize(page)
-    fixed = shear_correct(ink, 3.0)
+    fixed = apply_column_shift(ink, shear_shift(ink.shape[1], 3.0))
     flat = binarize(render_page(["hello world foo bar"]))
     # the strut rows must be perfectly horizontal after correction
     comps = connected_components(line_segmentation_mask(fixed))
     angle = estimate_page_angle(comps, fixed.shape)
     assert abs(angle) < 0.2
     assert flat.sum() == ink.sum()  # shear moved ink, never destroyed it
-
-
-def test_rotate_image_identity_and_angle():
-    img = np.zeros((21, 21), dtype=np.uint8)
-    img[10, :] = 1
-    assert np.array_equal(rotate_image(img, 0.0), img)
-    rot = rotate_image(img, 90.0)
-    assert rot[:, 10].sum() >= 19  # the row became a column
 
 
 def test_column_shift_roundtrip():

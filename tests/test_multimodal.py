@@ -250,6 +250,35 @@ def test_avi_midstream_truncation_is_atomic(spark):
     assert out[0]["status"] == "decode_failed" and out[0]["frame_idx"] == -1
 
 
+def test_avi_frame_cut_inside_a_jpeg_segment_is_one_failed_row(spark):
+    """A clip whose only frame ends inside a JPEG header segment (150
+    bytes in, inside a Huffman table) is one decode_failed row: the
+    decoder raises ValueError, not an error the sampler lets through to
+    fail the task."""
+    import struct as _struct
+
+    from ocr_inference_spark.jpegcodec import jpeg_decode
+    from ocr_inference_spark.multimodal import avi_encode_mjpeg
+
+    avi = avi_encode_mjpeg([render_page(["frame a"])], fps=4)
+    movi = avi.find(b"movi") - 8  # the LIST holding the frame chunks
+    idx = avi.find(b"00dc", movi)
+    frame = avi[idx + 8 : idx + 8 + 150]
+    with pytest.raises(ValueError, match="runs past the end"):
+        jpeg_decode(frame)
+    clip = bytearray(avi[:idx] + b"00dc" + _struct.pack("<I", len(frame)) + frame)
+    assert clip[movi : movi + 4] == b"LIST"
+    clip[movi + 4 : movi + 8] = _struct.pack("<I", len(clip) - movi - 8)
+    clip[4:8] = _struct.pack("<I", len(clip) - 8)
+    rows = [
+        Row(media_ref="cut", modality="video", content=bytes(clip),
+            mime="video/x-msvideo", meta={}),
+    ]
+    out = sample_video_frames(spark.createDataFrame(rows, schema=MEDIA_SCHEMA)).collect()
+    assert len(out) == 1
+    assert out[0]["status"] == "decode_failed" and out[0]["frame_idx"] == -1
+
+
 def test_clip_corpus_rotates_avi_and_gif(spark):
     """q42's synthetic clip corpus must carry BOTH short-clip
     containers (even doc_id -> MJPEG-AVI, odd -> animated GIF) and the
