@@ -22,11 +22,11 @@ CompuServe 1989/1990):
   ``0xFE`` / plain-text ``0x01`` are skipped), image descriptors
   (``0x2C``: frame rect, optional local color table, interlace flag,
   LZW-compressed index raster), trailer ``0x3B``.
-- LZW: variable-width codes 3..12 bits packed LSB-first (the opposite
-  bit order of TIFF's LZW in imgcodec.py), clear/EOI codes, deferred
-  width growth (width bumps when the next free slot reaches
-  ``1 << width``), dictionary capped at 4096 with deferred-clear
-  streams legal.
+- LZW: variable-width codes 3..12 bits packed LSB-first, clear/EOI
+  codes, width growth when the next free slot reaches ``1 << width``
+  (no early change), dictionary capped at 4096 with deferred-clear
+  streams legal. The coder is the one in :mod:`.bitcodes` that TIFF
+  shares; decode stops at the frame's ``fw * fh`` pixels.
 - Interlace: four row passes starting at 0/4/2/1 with steps 8/8/4/2.
 - Animation compositing: each frame paints its rect over the canvas
   (transparent index skipped); disposal 2 restores the rect to the
@@ -49,141 +49,8 @@ import struct
 
 import numpy as np
 
+from .bitcodes import lzw_decode, lzw_encode
 from .imgcodec import check_pixel_budget
-
-_MAX_CODE = 1 << 12  # GIF LZW dictionaries never exceed 4096 entries
-
-
-# ---------------------------------------------------------------------------
-# LZW (LSB-first variable-width — NOT the MSB-first TIFF variant)
-# ---------------------------------------------------------------------------
-
-
-def gif_lzw_decode(data: bytes, min_code_size: int, expected: int) -> np.ndarray:
-    """De-sub-blocked LZW stream -> uint8 index raster of ``expected``
-    pixels. Tolerates deferred-clear streams (dict pinned at 4096) and
-    streams that omit the EOI code; raises on codes beyond the
-    dictionary frontier or rasters that come up short."""
-    if not 2 <= min_code_size <= 11:
-        raise ValueError(f"bad GIF LZW min code size {min_code_size}")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    # dictionary as materialized bytes entries (list indexing + bytes
-    # concat stay in C — the prefix-link/backtrack formulation costs
-    # ~50x more in per-element Python/numpy scalar ops)
-    literals = [bytes([i]) for i in range(clear)]
-    entries = literals + [b"", b""]  # clear/EOI placeholders
-    base_len = len(entries)
-
-    out = bytearray()
-    width = min_code_size + 1
-    prev = -1
-    acc = 0
-    nbits = 0
-    pos = 0
-    n = len(data)
-    append = entries.append
-
-    while len(out) < expected:
-        while nbits < width:
-            if pos >= n:
-                raise ValueError("truncated GIF LZW stream")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-
-        if code == clear:
-            del entries[base_len:]
-            width = min_code_size + 1
-            prev = -1
-            continue
-        if code == eoi:
-            break
-        if prev < 0:
-            if code >= clear:
-                raise ValueError("GIF LZW stream must open with a literal")
-            out += literals[code]
-            prev = code
-            continue
-        next_code = len(entries)
-        if code < next_code:
-            e = entries[code]
-            new = entries[prev] + e[:1]
-        elif code == next_code and next_code < _MAX_CODE:
-            e = new = entries[prev] + entries[prev][:1]  # KwKwK
-        else:
-            raise ValueError("GIF LZW code beyond dictionary frontier")
-        if next_code < _MAX_CODE:
-            append(new)
-            if next_code + 1 == (1 << width) and width < 12:
-                width += 1
-        out += e
-        prev = code
-
-    if len(out) < expected:
-        raise ValueError(f"GIF raster short: {len(out)}/{expected} pixels")
-    if len(out) > expected:
-        raise ValueError("GIF LZW raster overruns image dimensions")
-    return np.frombuffer(bytes(out), np.uint8)
-
-
-def gif_lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
-    """uint8 index raster -> LZW stream (clear emitted on dictionary
-    overflow; EOI terminated)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def put(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    width = min_code_size + 1
-    table: dict[tuple[int, int], int] = {}
-    next_code = eoi + 1
-    put(clear, width)
-    data = indices.tobytes()
-    cur = -1
-    for byte in data:
-        if cur < 0:
-            cur = byte
-            continue
-        key = (cur, byte)
-        hit = table.get(key)
-        if hit is not None:
-            cur = hit
-            continue
-        put(cur, width)
-        table[key] = next_code
-        next_code += 1
-        # the decoder adds its mirror entry one code LATER, so it bumps
-        # width one emission later than our dict does — compare against
-        # (1 << width) + 1 to stay in sync
-        if next_code == (1 << width) + 1 and width < 12:
-            width += 1
-        if next_code >= _MAX_CODE:
-            put(clear, width)
-            width = min_code_size + 1
-            table.clear()
-            next_code = eoi + 1
-        cur = byte
-    if cur >= 0:
-        put(cur, width)
-    put(eoi, width)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
 
 # ---------------------------------------------------------------------------
 # Container parsing
@@ -192,14 +59,9 @@ def gif_lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def _deinterlace(rows: np.ndarray) -> np.ndarray:
-    h = rows.shape[0]
-    order = np.concatenate(
-        [np.arange(start, h, step) for start, step in _INTERLACE_PASSES]
-    )
-    out = np.empty_like(rows)
-    out[order] = rows
-    return out
+def _interlace_order(h: int) -> np.ndarray:
+    """Stored row i of an interlaced frame is image row ``order[i]``."""
+    return np.concatenate([np.arange(start, h, step) for start, step in _INTERLACE_PASSES])
 
 
 def _read_subblocks(data: bytes, pos: int) -> tuple[bytes, int]:
@@ -215,18 +77,6 @@ def _read_subblocks(data: bytes, pos: int) -> tuple[bytes, int]:
         if pos + size > n:
             raise ValueError("truncated GIF sub-block")
         parts.append(data[pos : pos + size])
-        pos += size
-
-
-def _skip_subblocks(data: bytes, pos: int) -> int:
-    n = len(data)
-    while True:
-        if pos >= n:
-            raise ValueError("truncated GIF sub-block chain")
-        size = data[pos]
-        pos += 1
-        if size == 0:
-            return pos
         pos += size
 
 
@@ -284,7 +134,7 @@ def _parse(data: bytes):
                     transparent = body[3] if flags & 0x01 else -1
                     disposal = (flags >> 2) & 0x07
             else:  # application / comment / plain text — skipped
-                pos = _skip_subblocks(data, pos)
+                _, pos = _read_subblocks(data, pos)
             continue
         if block == 0x2C:  # image descriptor
             if pos + 9 > n:
@@ -306,10 +156,15 @@ def _parse(data: bytes):
                 raise ValueError("truncated GIF image data")
             mcs = data[pos]
             pos += 1
+            if not 2 <= mcs <= 11:
+                raise ValueError(f"bad GIF LZW min code size {mcs}")
             lzw, pos = _read_subblocks(data, pos)
-            indices = gif_lzw_decode(lzw, mcs, fw * fh).reshape(fh, fw)
+            raster = lzw_decode(lzw, mcs, fw * fh, lsb=True, early_change=False)
+            if len(raster) < fw * fh:
+                raise ValueError(f"GIF raster short: {len(raster)}/{fw * fh} pixels")
+            indices = np.frombuffer(raster, np.uint8).reshape(fh, fw)
             if fpacked & 0x40:
-                indices = _deinterlace(indices)
+                indices = indices[np.argsort(_interlace_order(fh))]
             frames.append(
                 _Frame(left, top, indices, palette, transparent, disposal, delay_cs)
             )
@@ -397,14 +252,6 @@ def _palettize(img: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return inverse.astype(np.uint8).reshape(img.shape[:2]), palette.astype(np.uint8)
 
 
-def _interlace_rows(indices: np.ndarray) -> np.ndarray:
-    h = indices.shape[0]
-    order = np.concatenate(
-        [np.arange(start, h, step) for start, step in _INTERLACE_PASSES]
-    )
-    return indices[order]
-
-
 def _screen_and_gct(w: int, h: int, palette: np.ndarray) -> bytes:
     n_colors = palette.shape[0]
     depth = max(1, (max(n_colors, 2) - 1).bit_length())
@@ -417,9 +264,10 @@ def _screen_and_gct(w: int, h: int, palette: np.ndarray) -> bytes:
 def _image_block(indices: np.ndarray, left: int, top: int, n_colors: int, interlace: bool) -> bytes:
     fh, fw = indices.shape
     desc = struct.pack("<BHHHHB", 0x2C, left, top, fw, fh, 0x40 if interlace else 0)
-    rows = _interlace_rows(indices) if interlace else indices
+    rows = indices[_interlace_order(fh)] if interlace else indices
     mcs = max(2, (max(n_colors, 2) - 1).bit_length())
-    return desc + bytes([mcs]) + _subblocked(gif_lzw_encode(rows.ravel(), mcs))
+    stream = lzw_encode(rows.tobytes(), mcs, lsb=True, early_change=False)
+    return desc + bytes([mcs]) + _subblocked(stream)
 
 
 def gif_encode(img: np.ndarray, interlace: bool = False) -> bytes:

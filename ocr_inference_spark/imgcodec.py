@@ -27,6 +27,10 @@ implement the slices we need ourselves:
   page kernel's single entry point for any supported scan format. Every
   container checks the size its header declares against
   ``MAX_PAGE_PIXELS`` before it allocates.
+- The LZW coder (shared with GIF) and the capped inflate live in
+  :mod:`.bitcodes`. The PNG IDAT stream and every TIFF LZW, Deflate
+  and PackBits strip decode to at most the bytes their header implies,
+  so a decompression bomb raises ValueError instead of allocating.
 
 Public knowledge only: PNG is ISO/IEC 15948, JPEG is ITU-T T.81 /
 ISO 10918-1, TIFF 6.0 is a published Adobe specification; these are
@@ -39,6 +43,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from .bitcodes import inflate, lzw_decode, lzw_encode
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -255,25 +261,29 @@ def png_decode(data: bytes) -> np.ndarray:
         raise ValueError("missing IHDR")
     spp = _PNG_SAMPLES[color_type]
     bpp = max(1, spp * bit_depth // 8)
-    decomp = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
 
     def stride_for(w: int) -> int:
         return (w * spp * bit_depth + 7) // 8
 
+    # (x0, y0, dx, dy, width, height) of each sub-image: the whole
+    # image, or the Adam7 passes that are not empty
+    passes = [(0, 0, 1, 1, width, height)]
+    if interlace:
+        passes = [
+            (x0, y0, dx, dy, (width - x0 + dx - 1) // dx, (height - y0 + dy - 1) // dy)
+            for x0, y0, dx, dy in _ADAM7
+        ]
+        passes = [p for p in passes if p[4] > 0 and p[5] > 0]
+    sizes = [ph * (stride_for(pw) + 1) for *_, pw, ph in passes]
+    decomp = np.frombuffer(inflate(idat, sum(sizes)), dtype=np.uint8)
     if interlace == 0:
         rows = _png_unfilter(decomp, height, stride_for(width), bpp)
         samples = _png_expand_row_bytes(rows, width, bit_depth, spp)
     else:  # Adam7: seven independently-filtered sub-images
         samples = np.zeros((height, width, spp), dtype=np.uint8)
         off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            st = stride_for(pw)
-            size = ph * (st + 1)
-            sub = _png_unfilter(decomp[off : off + size], ph, st, bpp)
+        for (x0, y0, dx, dy, pw, ph), size in zip(passes, sizes):
+            sub = _png_unfilter(decomp[off : off + size], ph, stride_for(pw), bpp)
             off += size
             samples[y0::dy, x0::dx] = _png_expand_row_bytes(sub, pw, bit_depth, spp)
 
@@ -305,21 +315,6 @@ _TIFF_TAGS = {
 }
 _TIFF_TYPE_SIZE = {1: 1, 3: 2, 4: 4}
 
-_LZW_CLEAR = 256
-_LZW_EOI = 257
-_LZW_FIRST = 258
-# TIFF LZW "early change" code widths, in the convention every deployed
-# reader implements (libtiff, Java ImageIO TIFFLZWDecompressor — cross-
-# validated against the latter): the DECODER widens when its
-# next-available table index reaches 511/1023/2047 (one entry earlier
-# than the 512/1024/2048 a standard LZW decoder would need — hence
-# "early"); the encoder, one table entry ahead at emit time, widens at
-# 512/1024/2048. The table resets via ClearCode before entry 4094.
-_LZW_ENC_GROW = {512: 10, 1024: 11, 2048: 12}
-_LZW_DEC_GROW = {511: 10, 1023: 11, 2047: 12}
-_LZW_MAX = 4094
-
-
 def packbits_encode(data: bytes) -> bytes:
     """TIFF 6.0 §9 PackBits (byte-oriented run-length): literal runs as
     (n-1, bytes...), repeats of >=2 as (1-n mod 256, byte)."""
@@ -350,9 +345,10 @@ def packbits_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def packbits_decode(data: bytes) -> bytes:
+def packbits_decode(data: bytes, max_out: int) -> bytes:
     """Inverse of :func:`packbits_encode` (also reads any conforming
-    PackBits stream; -128 is a noop per spec)."""
+    PackBits stream; -128 is a noop per spec). Raises ValueError when
+    the output would overrun ``max_out`` bytes."""
     out = bytearray()
     i = 0
     n = len(data)
@@ -362,110 +358,15 @@ def packbits_decode(data: bytes) -> bytes:
         if c < 128:  # literal run of c+1 bytes
             out += data[i : i + c + 1]
             i += c + 1
-        elif c > 128:  # repeat next byte 257-c times
-            if i < n:
-                out += bytes([data[i]]) * (257 - c)
-                i += 1
+        elif c > 128 and i < n:  # repeat next byte 257-c times
+            out += data[i : i + 1] * (257 - c)
+            i += 1
+            if len(out) > max_out:
+                break
         # c == 128: noop
+    if len(out) > max_out:
+        raise ValueError(f"PackBits output overruns its {max_out}-byte budget")
     return bytes(out)
-
-
-def lzw_encode(data: bytes) -> bytes:
-    """TIFF 6.0 §13 LZW compress (MSB-first variable-width codes,
-    early-change widths, leading ClearCode, trailing EOI)."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def put(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-            acc &= (1 << nbits) - 1
-
-    width = 9
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    next_code = _LZW_FIRST
-    put(_LZW_CLEAR, width)
-    omega = b""
-    for i in range(len(data)):
-        ch = data[i : i + 1]
-        cand = omega + ch
-        if cand in table:
-            omega = cand
-            continue
-        put(table[omega], width)
-        table[cand] = next_code
-        next_code += 1
-        if next_code in _LZW_ENC_GROW:
-            width = _LZW_ENC_GROW[next_code]
-        elif next_code == _LZW_MAX:
-            put(_LZW_CLEAR, width)
-            table = {bytes([j]): j for j in range(256)}
-            next_code = _LZW_FIRST
-            width = 9
-        omega = ch
-    if omega:
-        put(table[omega], width)
-    put(_LZW_EOI, width)
-    if nbits:
-        put(0, 8 - nbits)  # flush: pad final byte with zero bits
-    return bytes(out)
-
-
-def lzw_decode(data: bytes) -> bytes:
-    """TIFF 6.0 §13 LZW decompress (inverse of :func:`lzw_encode`;
-    also reads streams from any spec-conforming writer)."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
-    n = len(data)
-    width = 9
-    table: list[bytes] = []
-    prev: bytes | None = None
-
-    def reset() -> None:
-        nonlocal table, width, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-        prev = None
-
-    reset()
-    while True:
-        while nbits < width:
-            if pos >= n:
-                return bytes(out)  # truncated stream: emit what we have
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nbits += 8
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        acc &= (1 << nbits) - 1
-        if code == _LZW_EOI:
-            return bytes(out)
-        if code == _LZW_CLEAR:
-            reset()
-            continue
-        if prev is None:
-            if code >= len(table) or code >= 256:
-                raise ValueError("LZW: first code after clear must be a literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(f"LZW: code {code} beyond table size {len(table)}")
-        out += entry
-        prev = entry
-        if len(table) in _LZW_DEC_GROW:
-            width = _LZW_DEC_GROW[len(table)]
 
 
 _TIFF_COMPRESSION_CODES = {"none": 1, "lzw": 5, "deflate": 8, "packbits": 32773}
@@ -547,7 +448,7 @@ def tiff_encode(
                 chunk = _hdiff_encode(chunk, spp)
             raw = chunk.tobytes()
             if comp == 5:
-                raw = lzw_encode(raw)
+                raw = lzw_encode(raw, 8, lsb=False, early_change=True)
             elif comp == 8:
                 raw = zlib.compress(raw, 6)
             elif comp == 32773:  # PackBits: each row packed separately (§9)
@@ -723,15 +624,17 @@ def tiff_decode(data: bytes) -> np.ndarray:
         raise ValueError(f"unsupported TIFF predictor {pred}")
     offsets = fields["strip_offsets"]
     counts = fields.get("strip_byte_counts", [w * h * spp])
+    # a strip holds rows_per_strip rows at most
+    strip_max = min(fields.get("rows_per_strip", [h])[0], h) * w * spp
     chunks = []
     for o, c in zip(offsets, counts):
         raw = data[o : o + c]
         if comp == 5:
-            raw = lzw_decode(raw)
+            raw = lzw_decode(raw, 8, strip_max, lsb=False, early_change=True)
         elif comp in (8, 32946):
-            raw = zlib.decompress(raw)
+            raw = inflate(raw, strip_max)
         elif comp == 32773:
-            raw = packbits_decode(raw)
+            raw = packbits_decode(raw, strip_max)
         chunks.append(raw)
     raw = b"".join(chunks)
     if len(raw) < w * h * spp:

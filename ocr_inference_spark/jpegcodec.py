@@ -34,6 +34,7 @@ import struct
 
 import numpy as np
 
+from .bitcodes import MsbBitWriter, canonical_codes
 from .imgcodec import check_pixel_budget
 
 # ---------------------------------------------------------------------------
@@ -160,57 +161,37 @@ def _fdct_blocks(blocks: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _canonical_codes(bits, vals):
-    """(symbol -> (code, length)) per the canonical JPEG assignment."""
-    codes = {}
-    code = 0
-    idx = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[vals[idx]] = (code, length)
-            code += 1
-            idx += 1
-        code <<= 1
-    return codes
+def _code_lengths(table) -> list[tuple[int, int]]:
+    """A DHT table (its 16 code counts, then its symbols) -> (symbol,
+    length) pairs in code order."""
+    lengths = [n for n in range(1, 17) for _ in range(table[n - 1])]
+    return list(zip(table[16:], lengths))
 
 
-class _DecodeTable:
-    """16-bit-lookahead LUT: lut[next16] = (symbol, code_length)."""
-
-    __slots__ = ("sym", "length", "key")
-
-    def __init__(self, bits, vals):
-        self.key = bytes(bits) + bytes(vals)
-        self.sym = np.zeros(1 << 16, dtype=np.int32) - 1
-        self.length = np.zeros(1 << 16, dtype=np.int32)
-        code = 0
-        idx = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                lo = code << (16 - length)
-                hi = lo + (1 << (16 - length))
-                self.sym[lo:hi] = vals[idx]
-                self.length[lo:hi] = length
-                code += 1
-                idx += 1
-            code <<= 1
+def _huffman_codes(table) -> dict[int, tuple[int, int]]:
+    """{symbol: (code, length)} of a DHT table, for the encoders."""
+    return {s: (c, l) for s, c, l in canonical_codes(_code_lengths(table))}
 
 
-# (length << 8 | symbol) packed LUT as a plain Python list — list
-# indexing beats numpy scalar indexing ~3x in the per-symbol hot loop.
-# Cached by table CONTENT: the Annex-K tables recur on every page, so a
-# long-lived executor builds each list once per process.
+# lut[next 16 bits] = length << 8 | symbol (0 where no code matches), a
+# plain Python list — list indexing beats numpy scalar indexing ~3x in
+# the per-symbol hot loop. Cached by table CONTENT: the Annex-K tables
+# recur on every page, so a long-lived executor builds each list once
+# per process.
 _PACKED_LUT_CACHE: dict[bytes, list[int]] = {}
 
 
-def _packed_lut(tbl: _DecodeTable) -> list[int]:
-    lut = _PACKED_LUT_CACHE.get(tbl.key)
+def _packed_lut(table: bytes) -> list[int]:
+    lut = _PACKED_LUT_CACHE.get(table)
     if lut is None:
-        packed = np.where(tbl.sym >= 0, (tbl.length << 8) | tbl.sym, 0)
-        lut = packed.astype(np.int32).tolist()
+        packed = np.zeros(1 << 16, dtype=np.int32)
+        for sym, code, length in canonical_codes(_code_lengths(table)):
+            lo = code << (16 - length)
+            packed[lo : lo + (1 << (16 - length))] = (length << 8) | sym
+        lut = packed.tolist()
         while len(_PACKED_LUT_CACHE) >= 16:
             _PACKED_LUT_CACHE.pop(next(iter(_PACKED_LUT_CACHE)))
-        _PACKED_LUT_CACHE[tbl.key] = lut
+        _PACKED_LUT_CACHE[table] = lut
     return lut
 
 
@@ -280,7 +261,7 @@ def jpeg_decode(data: bytes, apply_exif_orientation: bool = True) -> np.ndarray:
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], _DecodeTable] = {}  # (class, id)
+    htables: dict[tuple[int, int], bytes] = {}  # (class, id) -> DHT table
     frame = None
     comp_states = None  # id -> per-component coefficient state
     order = None  # frame-ordered component states
@@ -329,12 +310,10 @@ def jpeg_decode(data: bytes, apply_exif_orientation: bool = True) -> np.ndarray:
             p = 0
             while p < len(payload):
                 tc, th = payload[p] >> 4, payload[p] & 0x0F
-                bits = list(payload[p + 1 : p + 17])
-                nv = sum(bits)
+                nv = sum(payload[p + 1 : p + 17])
                 if p + 17 + nv > len(payload):
                     raise ValueError("DHT table runs past its segment")
-                vals = list(payload[p + 17 : p + 17 + nv])
-                htables[(tc, th)] = _DecodeTable(bits, vals)
+                htables[(tc, th)] = bytes(payload[p + 1 : p + 17 + nv])
                 p += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
             precision, h, w, ncomp = struct.unpack(">BHHB", payload[:6])
@@ -910,38 +889,6 @@ def _reconstruct(frame, order, qtables):
 # ---------------------------------------------------------------------------
 
 
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        if length == 0:
-            return
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.buf.append(byte)
-            if byte == 0xFF:
-                self.buf.append(0x00)  # stuffing
-            self.nbits -= 8
-            self.acc &= (1 << self.nbits) - 1
-
-    def write_value(self, v: int, size: int) -> None:
-        """The ``size`` magnitude bits of a DC difference or AC value
-        (T.81 F.1.2.1): v itself when positive, v - 1 when negative."""
-        self.write(v if v > 0 else v + (1 << size) - 1, size)
-
-    def flush(self) -> None:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1s per spec
-
-
 def _quality_scale(tbl: np.ndarray, quality: int) -> np.ndarray:
     """libjpeg-compatible quality scaling of a base table (public
     behavior of jpeg_set_quality / jpeg_quality_scaling)."""
@@ -1102,7 +1049,7 @@ def jpeg_encode(
     out = _frame_header(0xC0, frame, comps, qtables, _BASELINE_DHT, exif_orientation)
     if restart_interval > 0:
         out += _segment(0xDD, struct.pack(">H", restart_interval))
-    codes = {(tc, th): _canonical_codes(bits, vals) for tc, th, bits, vals in _BASELINE_DHT}
+    codes = {(tc, th): _huffman_codes([*bits, *vals]) for tc, th, bits, vals in _BASELINE_DHT}
     if interleaved or len(comps) == 1:
         scans = [(comps, _mcu_blocks(comps, frame["mcus_x"], frame["mcus_y"]))]
     else:
@@ -1112,7 +1059,7 @@ def jpeg_encode(
     for scan, blocks in scans:
         out += _sos(scan)
         tables = [(c["zz"], codes[0, c["tq"]], codes[1, c["tq"]]) for c in scan]
-        writer = _BitWriter()
+        writer = MsbBitWriter(stuff=True)
         preds = [0] * len(scan)
         last = rst = 0
         for unit, ci, bid in blocks:
@@ -1136,9 +1083,7 @@ def _write_block(blk, writer, dc_codes, ac_codes, pred):
     ``pred``, then the run/size-coded AC values; -> the block's DC."""
     dc = blk[0]
     diff = dc - pred
-    size = abs(diff).bit_length()
-    writer.write(*dc_codes[size])
-    writer.write_value(diff, size)
+    writer.write_coded(dc_codes, 0, diff)
     last_nz = 63
     while last_nz > 0 and blk[last_nz] == 0:
         last_nz -= 1
@@ -1151,9 +1096,7 @@ def _write_block(blk, writer, dc_codes, ac_codes, pred):
         while run > 15:
             writer.write(*ac_codes[0xF0])  # ZRL
             run -= 16
-        size = abs(v).bit_length()
-        writer.write(*ac_codes[(run << 4) | size])
-        writer.write_value(v, size)
+        writer.write_coded(ac_codes, run, v)
         run = 0
     if last_nz < 63:  # no EOB when the final coefficient is non-zero
         writer.write(*ac_codes[0x00])
@@ -1222,9 +1165,7 @@ def _encode_ac_first(writer, ac_codes, band, al, state):
         while r > 15:
             writer.write(*ac_codes[0xF0])
             r -= 16
-        s = abs(x).bit_length()
-        writer.write(*ac_codes[(r << 4) | s])
-        writer.write_value(x, s)
+        writer.write_coded(ac_codes, r, x)
         r = 0
     if last < len(t) - 1:
         state.eobrun += 1
@@ -1298,21 +1239,19 @@ def jpeg_encode_progressive(
         img, quality, subsampling, "jpeg_encode_progressive", ("444", "420")
     )
     out = _frame_header(0xC2, frame, comps, qtables, _PROG_DHT)
-    codes = {(tc, th): _canonical_codes(bits, vals) for tc, th, bits, vals in _PROG_DHT}
+    codes = {(tc, th): _huffman_codes([*bits, *vals]) for tc, th, bits, vals in _PROG_DHT}
     ac_codes = codes[1, 0]
     mcus = (comps, frame["mcus_x"], frame["mcus_y"])
 
     # DC first scan, interleaved, Al=1
-    writer = _BitWriter()
+    writer = MsbBitWriter(stuff=True)
     preds = [0] * len(comps)
     for _, ci, bid in _mcu_blocks(*mcus):
         c = comps[ci]
         dc = c["zz"][bid][0] >> 1
         diff = dc - preds[ci]
         preds[ci] = dc
-        size = abs(diff).bit_length()
-        writer.write(*codes[0, c["tq"]][size])
-        writer.write_value(diff, size)
+        writer.write_coded(codes[0, c["tq"]], 0, diff)
     writer.flush()
     out += _sos(comps, 0, 0, 0x01, ta=0) + writer.buf
 
@@ -1325,7 +1264,7 @@ def jpeg_encode_progressive(
         (1, 63, 0x10, _encode_ac_refine),
     ):
         for c in comps:
-            writer = _BitWriter()
+            writer = MsbBitWriter(stuff=True)
             state = _ProgACState()
             for _, _, bid in _own_blocks(c):
                 encode(writer, ac_codes, c["zz"][bid][ss : se + 1], a & 0x0F, state)
@@ -1334,7 +1273,7 @@ def jpeg_encode_progressive(
             out += _sos([c], ss, se, a, ta=0) + writer.buf
 
     # DC refinement, interleaved (raw bits, no Huffman)
-    writer = _BitWriter()
+    writer = MsbBitWriter(stuff=True)
     for _, ci, bid in _mcu_blocks(*mcus):
         writer.write(comps[ci]["zz"][bid][0] & 1, 1)
     writer.flush()

@@ -19,15 +19,16 @@ def get_spark(
     app_name: str = "ocr_inference_spark",
     master: str | None = None,
 ) -> SparkSession:
-    # the cores this process may run on, unless SPARK_GRAFT_CPUS says
-    cores = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    master = master or f"local[{cores}]"
-    n = master[master.find("[") + 1 : master.find("]")]
-    shuffle_partitions = 32 if n == "*" else max(int(n), 8)
+    """The engine's session on ``master``. Without one, a driver that
+    spark-submit started keeps its ``--master``; any other runs
+    ``local[N]`` over the cores this process may use (or
+    ``SPARK_GRAFT_CPUS``). Shuffle partitions follow the started
+    context's default parallelism, at least 8."""
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cores = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+        master = f"local[{cores}]"
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -43,7 +44,11 @@ def get_spark(
         .config("spark.python.worker.reuse", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
+    if master is not None:
+        builder = builder.master(master)
     spark = builder.getOrCreate()
+    shuffle_partitions = max(spark.sparkContext.defaultParallelism, 8)
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark.sparkContext.setLogLevel("WARN")
     _ship_self(spark)
     return spark

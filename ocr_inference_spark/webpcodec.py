@@ -12,8 +12,9 @@ h264/vp9 in multimodal.py).
 Decoder coverage — the complete VP8L feature set:
 
 - RIFF/WEBP container, VP8L chunk, 0x2F signature, 14-bit dims.
-- LSB-first bit reader; DEFLATE-convention canonical prefix codes
-  (first bit read = code MSB), built from code lengths.
+- LSB-first bit reader and writer and the canonical code assignment
+  from :mod:`.bitcodes`; DEFLATE-convention prefix codes (first bit
+  read = code MSB), built from code lengths.
 - Code lengths themselves entropy-coded with the 19-symbol
   code-length code (kCodeLengthCodeOrder), repeat codes 16/17/18,
   optional max_symbol limit field, and the 1- or 2-symbol "simple
@@ -51,6 +52,7 @@ import struct
 
 import numpy as np
 
+from .bitcodes import LsbBitReader, LsbBitWriter, canonical_codes, reverse_bits
 from .imgcodec import check_pixel_budget
 
 # code-length symbols appear in this fixed order (spec §"prefix codes")
@@ -84,72 +86,39 @@ _DIST_MAP = [
 ]
 
 
-class _BitReader:
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated VP8L bitstream")
-            self.acc |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        v = self.acc & ((1 << n) - 1)
-        self.acc >>= n
-        self.nbits -= n
-        return v
-
-
 class _PrefixCode:
     """Canonical prefix decoder. ``lengths[sym]`` -> decode()."""
 
     __slots__ = ("table", "max_len", "single")
 
     def __init__(self, lengths):
-        lengths = list(lengths)
-        used = [(l, s) for s, l in enumerate(lengths) if l > 0]
+        used = [(s, l) for s, l in enumerate(lengths) if l > 0]
         if not used:
             raise ValueError("empty prefix code")
         if len(used) == 1:
             # single-symbol code: zero bits per symbol (spec)
-            self.single = used[0][1]
+            self.single = used[0][0]
             self.table = None
             self.max_len = 0
             return
         self.single = None
-        max_len = max(l for l, _ in used)
+        used.sort(key=lambda sl: (sl[1], sl[0]))  # code order: by length, then symbol
+        codes = canonical_codes(used)
+        max_len = codes[-1][2]
         if max_len > 15:
             raise ValueError("prefix length > 15")
-        # canonical code assignment: by (length, symbol) ascending
-        used.sort()
-        code = 0
-        prev_len = used[0][0]
-        entries = []
-        for l, s in used:
-            code <<= l - prev_len
-            prev_len = l
-            entries.append((code, l, s))
-            code += 1
-        if (code << (max_len - prev_len)) != (1 << max_len):
+        if codes[-1][1] + 1 != 1 << max_len:
             raise ValueError("prefix code lengths are not complete")
         # LUT over max_len LSB-first bits: index low bits are the bits
         # in read order; a code's first-read bit is its MSB
         size = 1 << max_len
         table = np.empty(size, np.uint32)  # (sym << 4) | len
-        for c, l, s in entries:
-            rev = int(f"{c:0{l}b}"[::-1], 2)  # bit-reverse within l
-            step = 1 << l
-            table[rev::step] = (s << 4) | l
+        for s, c, l in codes:
+            table[reverse_bits(c, l) :: 1 << l] = (s << 4) | l
         self.table = table.tolist()  # python list: ~10x faster scalar reads
         self.max_len = max_len
 
-    def decode(self, br: _BitReader) -> int:
+    def decode(self, br: LsbBitReader) -> int:
         if self.single is not None:
             return self.single
         n = self.max_len
@@ -167,7 +136,7 @@ class _PrefixCode:
         return e >> 4
 
 
-def _read_code_lengths(br: _BitReader, alphabet_size: int) -> list[int]:
+def _read_code_lengths(br: LsbBitReader, alphabet_size: int) -> list[int]:
     """The code-length-coded form of one prefix code."""
     simple = br.read(1)
     lengths = [0] * alphabet_size
@@ -237,7 +206,7 @@ class _Group:
         self.d = _PrefixCode(_read_code_lengths(br, _NUM_DISTANCE))
 
 
-def _prefix_value(br: _BitReader, code: int) -> int:
+def _prefix_value(br: LsbBitReader, code: int) -> int:
     """Length/distance prefix decoding (spec §'LZ77 backward refs')."""
     if code < 4:
         return code + 1
@@ -246,7 +215,7 @@ def _prefix_value(br: _BitReader, code: int) -> int:
     return offset + br.read(extra) + 1
 
 
-def _decode_image_stream(br: _BitReader, w: int, h: int, level0: bool):
+def _decode_image_stream(br: LsbBitReader, w: int, h: int, level0: bool):
     """-> (pixels uint32 ARGB array of w*h, transforms) — transforms
     only collected at level 0."""
     transforms = []
@@ -588,7 +557,7 @@ def vp8l_decode(payload: bytes) -> np.ndarray:
     conventions: (H,W) gray / (H,W,3) RGB / (H,W,4) RGBA."""
     if not payload or payload[0] != 0x2F:
         raise ValueError("bad VP8L signature")
-    br = _BitReader(payload[1:])
+    br = LsbBitReader(payload[1:])
     w = br.read(14) + 1
     h = br.read(14) + 1
     check_pixel_budget(w, h)
@@ -646,32 +615,6 @@ def webp_decode(data: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc |= value << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):  # MSB of the code first
-            self.write((code >> i) & 1, 1)
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-        return bytes(self.out)
-
-
 def _package_merge(freqs: dict[int, int], max_len: int) -> dict[int, int]:
     """Optimal length-limited code lengths (package-merge)."""
     syms = sorted(freqs)
@@ -693,44 +636,25 @@ def _package_merge(freqs: dict[int, int], max_len: int) -> dict[int, int]:
     return lengths
 
 
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """lengths -> {sym: (code, len)} canonical (by length, then symbol)."""
+def _code_map(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
+    """{symbol: length} -> {symbol: (code, length)}, codes assigned by
+    length, then symbol."""
     order = sorted((l, s) for s, l in lengths.items() if l > 0)
-    codes = {}
-    code = 0
-    prev = order[0][0]
-    for l, s in order:
-        code <<= l - prev
-        prev = l
-        codes[s] = (code, l)
-        code += 1
-    return codes
+    return {s: (c, l) for s, c, l in canonical_codes((s, l) for l, s in order)}
 
 
-def _write_prefix_code(bw: _BitWriter, lengths_by_sym: dict[int, int], alphabet: int):
-    used = {s: l for s, l in lengths_by_sym.items() if l > 0}
-    if len(used) == 1:
-        (sym,) = used
+def _write_prefix_code(bw: LsbBitWriter, lengths_by_sym: dict[int, int], alphabet: int):
+    used = sorted(s for s, l in lengths_by_sym.items() if l > 0)
+    if len(used) == 1 or (
+        len(used) == 2 and all(lengths_by_sym[s] == 1 for s in used) and used[1] < 256
+    ):
         bw.write(1, 1)  # simple
-        bw.write(0, 1)  # one symbol
-        if sym < 2:
-            bw.write(0, 1)  # 1-bit symbol field
-            bw.write(sym, 1)
-        else:
-            bw.write(1, 1)
-            bw.write(sym, 8)
-        return
-    if len(used) == 2 and all(l == 1 for l in used.values()) and max(used) < 256:
-        a, b = sorted(used)
-        bw.write(1, 1)
-        bw.write(1, 1)  # two symbols
-        if a < 2:
-            bw.write(0, 1)
-            bw.write(a, 1)
-        else:
-            bw.write(1, 1)
-            bw.write(a, 8)
-        bw.write(b, 8)
+        bw.write(len(used) - 1, 1)  # one or two symbols
+        wide = used[0] >= 2
+        bw.write(wide, 1)  # 8-bit first-symbol field
+        bw.write(used[0], 8 if wide else 1)
+        if len(used) == 2:
+            bw.write(used[1], 8)
         return
     bw.write(0, 1)  # normal form
     # code-length code over the length values actually emitted (all
@@ -754,7 +678,7 @@ def _write_prefix_code(bw: _BitWriter, lengths_by_sym: dict[int, int], alphabet:
     for i in range(num_codes):
         bw.write(full[_CLC_ORDER[i]], 3)
     bw.write(0, 1)  # no max_symbol cap
-    clc_codes = _canonical_codes(clc_lengths)
+    clc_codes = _code_map(clc_lengths)
     for l in seq:
         c, ln = clc_codes[l]
         bw.write_code(c, ln)
@@ -783,7 +707,7 @@ def vp8l_encode(img: np.ndarray) -> bytes:
     rr = (r.astype(np.int16) - g).astype(np.uint8)
     bb = (b.astype(np.int16) - g).astype(np.uint8)
 
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(0 if bool(np.all(a == 255)) else 1, 1)
@@ -794,32 +718,21 @@ def vp8l_encode(img: np.ndarray) -> bytes:
     bw.write(0, 1)  # no color cache
     bw.write(0, 1)  # no meta-prefix image
 
-    planes = {"g": g.ravel(), "r": rr.ravel(), "b": bb.ravel(), "a": a.ravel()}
-    codes = {}
-    for key, alphabet in (("g", _NUM_LITERAL + _NUM_LENGTH), ("r", 256),
-                          ("b", 256), ("a", 256)):
-        vals, counts = np.unique(planes[key], return_counts=True)
-        freqs = {int(v): int(c) for v, c in zip(vals, counts)}
-        lengths = _package_merge(freqs, 15)
+    # per coded channel, each pixel's code as an LSB-first word and its
+    # length (a single-symbol code costs no bits)
+    words = []
+    for plane, alphabet in ((g, _NUM_LITERAL + _NUM_LENGTH), (rr, 256), (bb, 256), (a, 256)):
+        vals, counts = np.unique(plane, return_counts=True)
+        lengths = _package_merge(dict(zip(vals.tolist(), counts.tolist())), 15)
         _write_prefix_code(bw, lengths, alphabet)
-        codes[key] = None if len(lengths) == 1 else _canonical_codes(lengths)
+        if len(lengths) > 1:
+            lsb = {s: (reverse_bits(c, l), l) for s, (c, l) in _code_map(lengths).items()}
+            words.append([lsb[v] for v in plane.ravel().tolist()])
     _write_prefix_code(bw, {0: 1}, _NUM_DISTANCE)  # unused distance code
-
-    cg, cr, cb, ca = codes["g"], codes["r"], codes["b"], codes["a"]
-    gd, rd, bd, ad = planes["g"], planes["r"], planes["b"], planes["a"]
-    for i in range(w * h):
-        if cg is not None:
-            c, l = cg[int(gd[i])]
-            bw.write_code(c, l)
-        if cr is not None:
-            c, l = cr[int(rd[i])]
-            bw.write_code(c, l)
-        if cb is not None:
-            c, l = cb[int(bd[i])]
-            bw.write_code(c, l)
-        if ca is not None:
-            c, l = ca[int(ad[i])]
-            bw.write_code(c, l)
+    write = bw.write
+    for pixel in zip(*words):
+        for word, n in pixel:
+            write(word, n)
     return b"\x2f" + bw.finish()
 
 

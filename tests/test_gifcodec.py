@@ -26,14 +26,23 @@ from ocr_inference_spark.gifcodec import (
     gif_decode,
     gif_encode,
     gif_encode_frames,
-    gif_lzw_decode,
-    gif_lzw_encode,
     iter_gif_frames,
 )
+from ocr_inference_spark.bitcodes import lzw_decode, lzw_encode
 from ocr_inference_spark.imgcodec import decode_image, sniff_format
 
 DATA = Path(__file__).parent / "data"
 _GRAY_PAL = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
+
+
+def gif_lzw_decode(data: bytes, min_code_size: int, expected: int) -> np.ndarray:
+    """The GIF dialect of the shared LZW decoder, as a uint8 raster."""
+    out = lzw_decode(data, min_code_size, expected, lsb=True, early_change=False)
+    return np.frombuffer(out, np.uint8)
+
+
+def gif_lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
+    return lzw_encode(indices.tobytes(), min_code_size, lsb=True, early_change=False)
 
 
 def _gray(h=48, w=64):

@@ -440,8 +440,8 @@ def test_tiff_packbits_roundtrip():
     rng = np.random.default_rng(7)
     for payload in (b"", b"a", b"aaaaab" * 100, b"\x00" * 1000,
                     bytes(rng.integers(0, 256, 5000, dtype=np.uint8))):
-        assert packbits_decode(packbits_encode(payload)) == payload
-    assert packbits_decode(b"\x80") == b""  # -128 noop per spec
+        assert packbits_decode(packbits_encode(payload), len(payload)) == payload
+    assert packbits_decode(b"\x80", 0) == b""  # -128 noop per spec
     for img in (_test_image_gray(61, 83), _test_image_rgb(37, 59)):
         data = tiff_encode(img, compression="packbits", rows_per_strip=16)
         assert np.array_equal(tiff_decode(data), img)
@@ -547,15 +547,19 @@ def test_lzw_stream_roundtrip_with_table_reset():
     """Payload large/diverse enough to push the code table past 4093
     entries forces a mid-stream ClearCode reset; roundtrip stays exact.
     Truncated streams terminate with partial output, never hang."""
-    from ocr_inference_spark.imgcodec import lzw_decode, lzw_encode
+    from functools import partial as bind
 
+    from ocr_inference_spark.bitcodes import lzw_decode, lzw_encode
+
+    tiff = {"lsb": False, "early_change": True}
     rng = np.random.default_rng(3)
     payload = bytes(rng.integers(0, 256, 300_000, dtype=np.uint8))
-    enc = lzw_encode(payload)
-    assert lzw_decode(enc) == payload
-    partial = lzw_decode(enc[: len(enc) // 3])
+    enc = lzw_encode(payload, 8, **tiff)
+    decode = bind(lzw_decode, min_code_size=8, max_out=len(payload), **tiff)
+    assert decode(enc) == payload
+    partial = decode(enc[: len(enc) // 3])
     assert payload.startswith(partial) and len(partial) > 0
-    assert lzw_decode(lzw_encode(b"")) == b""
+    assert decode(lzw_encode(b"", 8, **tiff)) == b""
 
 
 def test_tiff_lzw_truncated_raises():

@@ -14,15 +14,21 @@ import struct
 import numpy as np
 import pytest
 
+from ocr_inference_spark.bitcodes import LsbBitWriter, canonical_codes
 from ocr_inference_spark.webpcodec import (
-    _BitWriter,
-    _canonical_codes,
     _package_merge,
     _write_prefix_code,
     vp8l_decode,
     webp_decode,
     webp_encode,
 )
+
+
+def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
+    """{symbol: length} -> {symbol: (code, length)}, codes assigned in
+    (length, symbol) order."""
+    order = sorted((l, s) for s, l in lengths.items() if l > 0)
+    return {s: (c, l) for s, c, l in canonical_codes((s, l) for l, s in order)}
 
 
 def _gray(h=48, w=64):
@@ -58,14 +64,14 @@ def test_structured_page_roundtrip():
 # ------------------------------------------------- hand-built stream helpers
 
 
-def _header(bw: _BitWriter, w: int, h: int) -> None:
+def _header(bw: LsbBitWriter, w: int, h: int) -> None:
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(0, 1)  # alpha hint
     bw.write(0, 3)  # version
 
 
-def _plain_codes(bw: _BitWriter, green_syms: dict[int, int]):
+def _plain_codes(bw: LsbBitWriter, green_syms: dict[int, int]):
     """Write a 5-code group: a real green code over `green_syms`
     (symbol -> freq), single-symbol red=0/blue=0/alpha=255, single
     distance=0. Returns the green canonical code map."""
@@ -83,7 +89,7 @@ def _emit(bw, codes, sym):
         bw.write_code(c, l)
 
 
-def _finish(bw: _BitWriter) -> bytes:
+def _finish(bw: LsbBitWriter) -> bytes:
     return b"\x2f" + bw.finish()
 
 
@@ -99,7 +105,7 @@ def test_lz77_backref_linear_distance():
     # 6x1: literals 10,20,30 then a length-3 copy at distance 3
     # distance: prefix VALUE 123 (> 120) -> dist = 3. Code 13 spans
     # values 98..129 (extra=5, offset=(2+1)<<5=96): extra bits = 26.
-    bw2 = _BitWriter()
+    bw2 = LsbBitWriter()
     _header(bw2, 6, 1)
     bw2.write(0, 1)
     bw2.write(0, 1)
@@ -125,7 +131,7 @@ def test_lz77_backref_linear_distance():
 def test_lz77_distance_map_copies_pixel_above():
     # 3x2 image: first row literals 5,6,7; second row = one length-3
     # copy with distance code 1 -> map (0,1) -> dist = xsize -> row above
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     _header(bw, 3, 2)
     bw.write(0, 1)
     bw.write(0, 1)
@@ -152,7 +158,7 @@ def test_color_cache_hit():
     # cache symbol re-emits it
     px_val = (255 << 24) | (200 << 8)
     idx = ((0x1E35A7BD * px_val) & 0xFFFFFFFF) >> 28
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     _header(bw, 2, 1)
     bw.write(0, 1)  # no transforms
     bw.write(1, 1)  # cache present
@@ -175,7 +181,7 @@ def test_color_cache_hit():
 # ----------------------------------------------------------- transforms
 
 
-def _subimage_bits(bw: _BitWriter, pixels: list[int]):
+def _subimage_bits(bw: LsbBitWriter, pixels: list[int]):
     """Entropy-code a tiny ARGB subimage (tile/palette stream): no
     cache, literal-only, one code group; each pixel is (a,r,g,b)."""
     greens = {}
@@ -207,7 +213,7 @@ def _subimage_bits(bw: _BitWriter, pixels: list[int]):
 def test_predictor_transform_mode_left():
     # 4x1 image, one tile, mode 1 (L): residuals 10,5,250,3 ->
     # cumulative sums mod 256; pixel 0 predicts opaque black
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     _header(bw, 4, 1)
     bw.write(1, 1)  # transform present
     bw.write(0, 2)  # PREDICTOR
@@ -231,7 +237,7 @@ def test_predictor_mode_top_and_clamped():
     # (0,1) top row: pred L -> g = (200+100)%256 = 44
     # (1,0) left col: pred T -> g = (200+30)%256 = 230
     # (1,1): pred = clamp(L + T - TL) = clamp(230+44-200)=74; g=74+2=76
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     _header(bw, 2, 2)
     bw.write(1, 1)
     bw.write(0, 2)
@@ -255,7 +261,7 @@ def test_color_transform_arithmetic():
     # delta(2, 100)  = (2*100)>>5  = 6   -> r = 16
     # delta(-1, 100) = (-100)>>5   = -4 (arithmetic) -> b = (50-4)+d2
     # delta(0, r=16) = 0           -> b = 46
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     _header(bw, 1, 1)
     bw.write(1, 1)
     bw.write(1, 2)  # COLOR transform
@@ -279,7 +285,7 @@ def test_color_indexing_with_bundling():
     # palette of 4 grays -> 2-bit indices, 4 per byte; width 9 ->
     # packed width 3. indices row: 0 1 2 3 0 1 2 3 0
     pal = [0, 85, 170, 255]
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     _header(bw, 9, 1)
     bw.write(1, 1)
     bw.write(3, 2)  # COLOR_INDEXING
@@ -312,7 +318,7 @@ def test_meta_prefix_groups():
     # use meta_bits=0? spec minimum is 2 -> need width > 4 for 2 tiles;
     # 8x1 with meta_bits=2 -> 2 tiles of 4px. Group 0 emits green=11,
     # group 1 emits green=22 (each single-symbol, zero pixel bits).
-    bw = _BitWriter()
+    bw = LsbBitWriter()
     _header(bw, 8, 1)
     bw.write(0, 1)  # no transforms
     bw.write(0, 1)  # no cache
