@@ -266,10 +266,13 @@ def reverse_bits(code: int, length: int) -> int:
 
 def inflate(buf: bytes, max_out: int) -> bytes:
     """zlib stream -> at most ``max_out`` bytes. Raises ``ValueError``
-    when the data would overrun ``max_out`` or the stream ends before
-    its final block; a corrupt stream raises ``zlib.error``."""
+    when the data would overrun ``max_out``, the stream ends before its
+    final block or the stream is corrupt."""
     d = zlib.decompressobj()
-    out = d.decompress(buf, max_out + 1)
+    try:
+        out = d.decompress(buf, max_out + 1)
+    except zlib.error as exc:
+        raise ValueError(f"corrupt zlib stream: {exc}") from exc
     if len(out) > max_out:
         raise ValueError(f"inflated data overruns its {max_out}-byte budget")
     if not d.eof:

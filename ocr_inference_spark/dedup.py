@@ -2,7 +2,6 @@
 compositions (no per-row Python UDFs; the LSH bucket projection is the
 batched numpy kernel ``similarity.table_bucket_rows``), shuffle-conscious:
 
-- exact:        hash-groupBy on normalized text (one shuffle)
 - n-gram Jaccard: shingle explode -> self-equi-join on shingle ->
                   count/union arithmetic (shuffles on shingle, then pair)
 - MinHash+LSH:  shingle -> per-permutation min-hash -> band buckets ->
@@ -10,8 +9,8 @@ batched numpy kernel ``similarity.table_bucket_rows``), shuffle-conscious:
                 At 100 TB the LSH path is the scale path: candidate
                 generation touches only same-bucket pairs instead of the
                 O(n²) cross join.
-- SimHash:      sign-aggregated word-hash bits -> 64-bit key; near-dup
-                iff Hamming distance <= k (bit_count(xor)).
+- SimHash:      sign-aggregated md5 word-hash bits -> 60-bit key;
+                near-dup iff Hamming distance <= k (bit_count(xor)).
 - embedding near-dup: all-pairs or hyperplane-LSH-blocked candidates ->
                 exact cosine verify (the similarity.py cosine convention).
 - clusters:     connected components over near-dup pairs by min-label
@@ -36,20 +35,6 @@ _log = logging.getLogger(__name__)
 
 def normalize(col):
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, dup_key, group_size) for rows whose normalized text appears
-    more than once. Single hash-aggregate shuffle; the md5 key keeps the
-    shuffle rows narrow (no full text travels twice)."""
-    keyed = df.select(
-        F.col(id_col).alias("id"), F.md5(normalize(F.col(text_col))).alias("dup_key")
-    )
-    sizes = keyed.groupBy("dup_key").agg(F.count("*").alias("group_size"))
-    return (
-        keyed.join(sizes.where(F.col("group_size") > 1), "dup_key")
-        .select("id", "dup_key", "group_size")
-    )
 
 
 def char_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 5) -> DataFrame:
@@ -508,16 +493,21 @@ def dup_clusters(
     return labels.select("id", "cluster_id")
 
 
-def _simhash(df: DataFrame, id_col: str, text_col: str, token_hash, bits: int) -> DataFrame:
+def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash) over whitespace tokens: bit j of the document key is
-    1 iff more of its tokens have bit j of ``token_hash(token)`` set
-    than unset. Pure expressions: explode tokens -> per-bit sign sums
-    over the (id, h) relation -> reassemble the key."""
+    1 iff more of its tokens have bit j of their hash set than unset.
+    Each token hashes to the top 15 hex chars of its md5 (60 bits, fits
+    a signed BIGINT in every engine), so the operator is
+    ORACLE-CHECKABLE: DuckDB reproduces md5/bit arithmetic exactly.
+    Pure expressions: explode tokens -> per-bit sign sums over the
+    (id, h) relation -> reassemble the key."""
+    bits = 60
     words = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(normalize(F.col(text_col)), " ")).alias("w"),
     ).where(F.length("w") > 0)
-    hashed = words.select("id", token_hash(F.col("w")).alias("h"))
+    md5_prefix = F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 15), 16, 10)
+    hashed = words.select("id", md5_prefix.cast("long").alias("h"))
     bit_cols = [
         F.sum(
             F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -535,77 +525,12 @@ def _simhash(df: DataFrame, id_col: str, text_col: str, token_hash, bits: int) -
     return sums.select("id", key.alias("simhash"))
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash): 64-bit SimHash, each token hashed by xxhash64."""
-    return _simhash(df, id_col, text_col, F.xxhash64, 64)
-
-
-def simhash_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_hamming.
-
-    Candidate generation blocks on 16-bit quadrants (pigeonhole: any
-    pair within Hamming<=3 of 64 bits shares at least one exact
-    quadrant), avoiding the O(n²) cross join at scale.
-    """
-    sig = simhash(df, id_col, text_col)
-    quads = sig.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(q).alias("q"),
-                        F.shiftright(F.col("simhash"), q * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("quad"),
-                    )
-                    for q in range(4)
-                ]
-            )
-        ).alias("qk"),
-    ).select("id", "simhash", F.col("qk.q").alias("q"), F.col("qk.quad").alias("quad"))
-    a = quads.alias("a")
-    b = quads.alias("b")
-    cand = (
-        a.join(b, ["q", "quad"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.where(hamming <= max_hamming).select(
-        "id_a", "id_b", hamming.cast("int").alias("hamming")
-    )
-
-
-def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash): md5-derived SimHash — same algorithm as
-    :func:`simhash` but each token hashes to the top 15 hex chars of its
-    md5 (60 bits, fits a signed BIGINT in every engine). Exists so the
-    operator is ORACLE-CHECKABLE: DuckDB reproduces md5/bit arithmetic
-    exactly, xxhash64 it cannot."""
-
-    def md5_prefix(w):
-        return F.conv(F.substring(F.md5(w.cast("binary")), 1, 15), 16, 10).cast("long")
-
-    return _simhash(df, id_col, text_col, md5_prefix, 60)
-
-
 def simhash_md5_pairs_exact(
     df: DataFrame, id_col: str, text_col: str, max_hamming: int = 10
 ) -> DataFrame:
     """EXACT all-pairs SimHash near-dups over the md5-derived keys —
-    the oracle-checkable small-n baseline (like q24 for Jaccard). The
-    quadrant-BLOCKED :func:`simhash_pairs` is the scale path; its
-    pigeonhole guarantee (any pair within Hamming<=3 shares a 16-bit
-    quadrant) only covers max_hamming <= 3, so larger radii belong on
-    this exact path or a multi-probe scheme."""
+    the oracle-checkable small-n baseline (like q24 for Jaccard), one
+    O(n²) self-join over the keys."""
     sig = simhash_md5(df, id_col, text_col)
     a = sig.alias("a")
     b = sig.alias("b")

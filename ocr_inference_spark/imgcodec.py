@@ -579,25 +579,34 @@ def tiff_decode(data: bytes) -> np.ndarray:
         bo = ">"
     else:
         raise ValueError("not a TIFF")
+    if len(data) < 8:
+        raise ValueError("truncated TIFF header")
     (magic,) = struct.unpack(bo + "H", data[2:4])
     if magic != 42:
         raise ValueError("bad TIFF magic")
     (ifd_off,) = struct.unpack(bo + "I", data[4:8])
+    if ifd_off + 2 > len(data):
+        raise ValueError(f"TIFF IFD offset {ifd_off} outside the file")
     (n,) = struct.unpack(bo + "H", data[ifd_off : ifd_off + 2])
     fields: dict[str, list[int]] = {}
     for i in range(n):
         off = ifd_off + 2 + i * 12
+        if off + 8 > len(data):
+            raise ValueError(f"TIFF IFD entry {i} outside the file")
         tag, typ, count = struct.unpack(bo + "HHI", data[off : off + 8])
         if tag not in _TIFF_TAGS or typ not in _TIFF_TYPE_SIZE:
             continue
         size = _TIFF_TYPE_SIZE[typ] * count
         if size > len(data):  # corrupt count: a value cannot outsize the file
             raise ValueError(f"TIFF field {tag} count {count} exceeds file size")
-        if size <= 4:
-            raw = data[off + 8 : off + 8 + size]
-        else:
+        voff = off + 8
+        if size > 4:
+            if off + 12 > len(data):
+                raise ValueError(f"TIFF IFD entry {i} outside the file")
             (voff,) = struct.unpack(bo + "I", data[off + 8 : off + 12])
-            raw = data[voff : voff + size]
+        raw = data[voff : voff + size]
+        if len(raw) < size:
+            raise ValueError(f"TIFF field {tag} value outside the file")
         fmt = {1: "B", 3: "H", 4: "I"}[typ]
         fields[_TIFF_TAGS[tag]] = list(struct.unpack(bo + fmt * count, raw))
     w = fields["width"][0]

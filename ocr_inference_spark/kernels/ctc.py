@@ -6,7 +6,9 @@ and the reference's observable behavior — BDRC/inference.py:75-118,
 The beam variant is a standard prefix beam search over log-probs with
 optional top-k beam output (top_k_beams=10, beam width 64 —
 BDRC/inference.py:83,690-693). Confidence is exp(score/len)
-(BDRC/inference.py:707-720).
+(BDRC/inference.py:707-720). The reference's optional KenLM shallow
+fusion (BDRC/inference.py:95-106,386-398) is not carried: no entry
+point takes a language model.
 """
 
 from __future__ import annotations
@@ -44,59 +46,11 @@ def beam_decode(
     logits: np.ndarray,
     beam_width: int = BEAM_WIDTH,
     top_k: int = TOP_K_BEAMS,
-    lm: dict[tuple[int, ...], float] | None = None,
-    lm_alpha: float = 0.8,
-    space_id: int | None = None,
 ) -> list[tuple[tuple[int, ...], float]]:
     """Prefix beam search. Returns up to ``top_k`` (sequence, log-prob)
-    pairs, best first. Deterministic: ties broken by sequence.
-
-    ``lm`` enables shallow LM fusion (the KenLM hook of the reference,
-    BDRC/inference.py:95-106,386-398), applied with weight ``lm_alpha``
-    whenever a word completes at ``space_id``. Two table shapes:
-
-    - a plain dict mapping a word (tuple of char ids) to a log-prob —
-      unigram fusion; unseen words receive the table's floor
-      (min score - 2).
-    - a :class:`BackoffLM` — order-N Katz-backoff fusion (the
-      reference's KenLM is a 5-gram backoff model; we score the
-      completed word conditioned on up to order-1 previous words,
-      backing off recursively to the unigram).
-
-    The LM term biases pruning and the final ranking but the reported
-    score stays acoustic+LM, matching shallow-fusion semantics.
-    """
+    pairs, best first. Deterministic: ties broken by sequence."""
     logp = log_softmax(logits)
     T, V = logp.shape
-    is_ngram = isinstance(lm, BackoffLM)
-    floor = (min(lm.values()) - 2.0) if (lm and not is_ngram) else 0.0
-
-    def lm_word_score(prefix: tuple[int, ...]) -> float:
-        """Score of the word ending at prefix's tail (called at a space)."""
-        if not lm:
-            return 0.0
-        j = len(prefix)
-        while j > 0 and prefix[j - 1] != space_id:
-            j -= 1
-        word = prefix[j:]
-        if not word:
-            return 0.0
-        if is_ngram:
-            # context = up to order-1 preceding words (spans between
-            # spaces, walking backwards; empty spans from double spaces
-            # are skipped)
-            ctx: list[tuple[int, ...]] = []
-            k = j - 1  # prefix[k] is the space closing the previous word
-            while k > 0 and len(ctx) < lm.order - 1:
-                i = k
-                while i > 0 and prefix[i - 1] != space_id:
-                    i -= 1
-                if k > i:
-                    ctx.append(prefix[i:k])
-                k = i - 1
-            ctx.reverse()
-            return lm_alpha * lm.word_logp(word, tuple(ctx))
-        return lm_alpha * lm.get(word, floor)
 
     # beams: prefix -> (logp ending in blank, logp ending in non-blank)
     beams: dict[tuple[int, ...], tuple[float, float]] = {(): (0.0, -math.inf)}
@@ -114,8 +68,6 @@ def beam_decode(
             add(prefix, total + frame[BLANK], -math.inf)
             for c in range(1, V):
                 p = frame[c]
-                if lm and space_id is not None and c == space_id:
-                    p = p + lm_word_score(prefix)
                 if prefix and prefix[-1] == c:
                     # same char: repeat (no growth) or after-blank (growth)
                     add(prefix, -math.inf, pnb + p)
@@ -128,262 +80,11 @@ def beam_decode(
         )[:beam_width]
         beams = dict(pruned)
 
-    def final_score(prefix, pb, pnb) -> float:
-        s = float(np.logaddexp(pb, pnb))
-        if lm and space_id is not None:
-            s += lm_word_score(prefix)  # close the trailing word
-        return s
-
     final = sorted(
-        ((prefix, final_score(prefix, pb, pnb)) for prefix, (pb, pnb) in beams.items()),
+        ((prefix, float(np.logaddexp(pb, pnb))) for prefix, (pb, pnb) in beams.items()),
         key=lambda kv: (-kv[1], kv[0]),
     )
     return final[:top_k]
-
-
-class BackoffLM:
-    """Order-N Katz-backoff LM over char-id-tuple words (the public ARPA
-    backoff formulation used by SRILM/KenLM — the reference wires a
-    5-gram KenLM into decode_beams, BDRC/inference.py:95-106):
-
-        P(w | ctx) = P_n(ctx, w)                  if the n-gram is listed,
-                     bo(ctx) + P(w | ctx[1:])     otherwise (log domain),
-
-    recursing down to the unigram (unseen unigrams get the table floor).
-    ``tables[n-1]`` maps an n-word tuple (each word a char-id tuple) to
-    ``(logprob, backoff)`` — backoff 0.0 when the file omits it, and
-    unused at the highest order. All probabilities natural-log. Tiny
-    and picklable — broadcast to executors like the unigram table."""
-
-    __slots__ = ("order", "tables", "floor")
-
-    def __init__(self, tables: list[dict[tuple, tuple[float, float]]]):
-        if not tables:
-            raise ValueError("BackoffLM needs at least a unigram table")
-        self.order = len(tables)
-        self.tables = tables
-        uni = tables[0]
-        self.floor = (min(lp for lp, _ in uni.values()) - 2.0) if uni else 0.0
-
-    def word_logp(self, word: tuple[int, ...], context=None) -> float:
-        """P(word | context) — ``context`` is a tuple of the preceding
-        words, oldest first (a bare word tuple is accepted for the old
-        bigram call shape); only the last order-1 words are used."""
-        if context is None:
-            context = ()
-        elif context and isinstance(context[0], int):
-            context = (context,)  # single previous word (bigram shape)
-        ctx = tuple(context)[-(self.order - 1) :] if self.order > 1 else ()
-        return self._score(ctx, word)
-
-    def _score(self, ctx: tuple, word: tuple[int, ...]) -> float:
-        entry = self.tables[len(ctx)].get(ctx + (word,))
-        if entry is not None:
-            return entry[0]
-        if not ctx:
-            return self.floor
-        bo_entry = self.tables[len(ctx) - 1].get(ctx)
-        bo = bo_entry[1] if bo_entry is not None else 0.0
-        return bo + self._score(ctx[1:], word)
-
-
-class NGramLM(BackoffLM):
-    """Bigram special case of :class:`BackoffLM`, kept under the original
-    constructor shape (separate unigram / backoff / bigram dicts)."""
-
-    def __init__(
-        self,
-        unigrams: dict[tuple[int, ...], float],
-        backoffs: dict[tuple[int, ...], float],
-        bigrams: dict[tuple[tuple[int, ...], tuple[int, ...]], float],
-    ):
-        t1 = {(w,): (lp, backoffs.get(w, 0.0)) for w, lp in unigrams.items()}
-        t2 = {k: (lp, 0.0) for k, lp in bigrams.items()}
-        super().__init__([t1, t2])
-
-
-def parse_arpa_unigrams(arpa_text: str) -> dict[str, float]:
-    """Extract the \\1-grams: section of an ARPA LM file as
-    {token: log10-prob} (C14 — reference: parse_arpa_unigrams,
-    BDRC/utils.py:395-427; the reference keeps tokens only, we keep the
-    log-probs too so the table feeds shallow fusion directly). Section
-    ends at the next backslash header; blank/# lines skipped. Sentinel
-    tokens (<s>, </s>, <unk>) are dropped — they never complete from CTC
-    output. Takes the file CONTENT (driver reads once, broadcasts)."""
-    out: dict[str, float] = {}
-    in_1grams = False
-    for line in arpa_text.splitlines():
-        line = line.strip()
-        if line == r"\1-grams:":
-            in_1grams = True
-            continue
-        if in_1grams and line.startswith("\\"):
-            break
-        if in_1grams and line and not line.startswith("#"):
-            parts = line.split()  # <logprob> <token> [<backoff>]
-            if len(parts) >= 2 and parts[1] not in ("<s>", "</s>", "<unk>"):
-                try:
-                    out[parts[1]] = float(parts[0])
-                except ValueError:
-                    continue
-    return out
-
-
-def arpa_unigram_lm(arpa_text: str, encode) -> dict[tuple[int, ...], float]:
-    """ARPA file content -> shallow-fusion table (char-id tuple ->
-    natural-log prob). ARPA stores log10; fusion uses ln."""
-    return {
-        tuple(int(i) for i in encode(tok)): lp * math.log(10.0)
-        for tok, lp in parse_arpa_unigrams(arpa_text).items()
-    }
-
-
-_ARPA_SENTINELS = ("<s>", "</s>", "<unk>")
-
-
-def parse_arpa_ngrams(
-    arpa_text: str,
-) -> tuple[dict[str, tuple[float, float]], dict[tuple[str, str], float]]:
-    """Parse the \\1-grams: and \\2-grams: sections of an ARPA file
-    (public format: SRILM ngram-format(5), also what KenLM reads).
-
-    Returns ``(unigrams, bigrams)`` where unigrams maps token ->
-    (log10-prob, log10-backoff — 0.0 when the file omits it) and
-    bigrams maps (w1, w2) -> log10-prob. Sentinel-only entries are
-    dropped on the unigram side; bigrams keep <s>/<\\s> context rows
-    out too since CTC output never contains them."""
-    unigrams: dict[str, tuple[float, float]] = {}
-    bigrams: dict[tuple[str, str], float] = {}
-    section = 0
-    for line in arpa_text.splitlines():
-        line = line.strip()
-        if line.startswith("\\"):
-            section = {"\\1-grams:": 1, "\\2-grams:": 2}.get(line, -1)
-            continue
-        if not line or line.startswith("#") or section <= 0:
-            continue
-        parts = line.split()
-        try:
-            lp = float(parts[0])
-        except (ValueError, IndexError):
-            continue
-        if section == 1 and len(parts) >= 2:
-            tok = parts[1]
-            if tok in _ARPA_SENTINELS:
-                continue
-            bo = 0.0
-            if len(parts) >= 3:
-                try:
-                    bo = float(parts[2])
-                except ValueError:
-                    bo = 0.0
-            unigrams[tok] = (lp, bo)
-        elif section == 2 and len(parts) >= 3:
-            w1, w2 = parts[1], parts[2]
-            if w1 in _ARPA_SENTINELS or w2 in _ARPA_SENTINELS:
-                continue
-            bigrams[(w1, w2)] = lp
-    return unigrams, bigrams
-
-
-def arpa_bigram_lm(arpa_text: str, encode) -> NGramLM:
-    """ARPA file content -> :class:`NGramLM` for bigram shallow fusion
-    (char-id-tuple words, natural-log probs)."""
-    ln10 = math.log(10.0)
-    unigrams, bigrams = parse_arpa_ngrams(arpa_text)
-
-    def key(tok: str) -> tuple[int, ...]:
-        return tuple(int(i) for i in encode(tok))
-
-    uni = {key(t): lp * ln10 for t, (lp, _) in unigrams.items()}
-    bo = {key(t): b * ln10 for t, (_, b) in unigrams.items() if b != 0.0}
-    bi = {(key(a), key(b_)): lp * ln10 for (a, b_), lp in bigrams.items()}
-    return NGramLM(uni, bo, bi)
-
-
-def parse_arpa(arpa_text: str) -> list[dict[tuple[str, ...], tuple[float, float]]]:
-    """Parse EVERY ``\\N-grams:`` section of an ARPA file (SRILM
-    ngram-format(5); what KenLM reads) into a list indexed by n-1:
-    ``{(w1..wn): (log10-prob, log10-backoff)}``, backoff 0.0 when the
-    column is absent (always at the highest order). Rows containing
-    sentinel tokens are dropped — CTC output never produces them.
-    Sections may appear in any order; gaps raise (a backoff chain needs
-    every lower order)."""
-    import re
-
-    sections: dict[int, dict[tuple[str, ...], tuple[float, float]]] = {}
-    n = 0
-    for line in arpa_text.splitlines():
-        line = line.strip()
-        m = re.fullmatch(r"\\(\d+)-grams:", line)
-        if m:
-            n = int(m.group(1))
-            sections.setdefault(n, {})
-            continue
-        if line.startswith("\\"):
-            n = 0
-            continue
-        if not line or line.startswith("#") or n <= 0:
-            continue
-        parts = line.split()
-        if len(parts) < n + 1:
-            continue
-        try:
-            lp = float(parts[0])
-        except ValueError:
-            continue
-        words = tuple(parts[1 : n + 1])
-        if any(w in _ARPA_SENTINELS for w in words):
-            continue
-        bo = 0.0
-        if len(parts) >= n + 2:
-            try:
-                bo = float(parts[n + 1])
-            except ValueError:
-                bo = 0.0
-        sections[n][words] = (lp, bo)
-    if not sections:
-        return []
-    top = max(sections)
-    missing = [i for i in range(1, top + 1) if i not in sections]
-    if missing:
-        raise ValueError(f"ARPA file missing \\{missing[0]}-grams: section")
-    return [sections[i] for i in range(1, top + 1)]
-
-
-def arpa_backoff_lm(arpa_text: str, encode, order: int | None = 3) -> BackoffLM:
-    """ARPA file content -> :class:`BackoffLM` for order-N shallow
-    fusion (char-id-tuple words, natural-log probs). ``order`` truncates
-    the model (default trigram — the eval-mode setting; pass ``None``
-    to keep the file's full order, e.g. 5 for a KenLM-style model)."""
-    ln10 = math.log(10.0)
-    raw = parse_arpa(arpa_text)
-    if order is not None:
-        raw = raw[:order]
-
-    def key(tok: str) -> tuple[int, ...]:
-        return tuple(int(i) for i in encode(tok))
-
-    tables = [
-        {
-            tuple(key(w) for w in words): (lp * ln10, bo * ln10)
-            for words, (lp, bo) in tbl.items()
-        }
-        for tbl in raw
-    ]
-    return BackoffLM(tables)
-
-
-def build_unigram_lm(word_counts: dict[str, int], encode) -> dict[tuple[int, ...], float]:
-    """Word frequency table -> {char-id tuple: log-prob} for shallow
-    fusion. ``encode`` maps a word string to char ids (glyphs.encode_text).
-    The table is tiny and broadcast-friendly (the reference ships its
-    KenLM file to every worker the same way, BDRC/utils.py:105-159)."""
-    total = sum(word_counts.values())
-    return {
-        tuple(int(i) for i in encode(w)): math.log(c / total)
-        for w, c in word_counts.items()
-    }
 
 
 def ctc_confidence(logit_score: float, text_len: int) -> float:

@@ -701,9 +701,7 @@ def q26_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs, ORACLE-CHECKABLE (round 3: flipped from
     rows-only): the 60-bit md5-derived key family — DuckDB reproduces
     md5 + bit arithmetic exactly, xxhash64 it cannot. Exact all-pairs
-    over an oracle-bounded 120 docs (like q24's Jaccard baseline); the
-    quadrant-blocked xxhash64 simhash_pairs remains the scale path with
-    its pigeonhole guarantee at max_hamming <= 3."""
+    over an oracle-bounded 120 docs (like q24's Jaccard baseline)."""
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 120).coalesce(1)
     return dd.simhash_md5_pairs_exact(docs, "doc_id", "text", max_hamming=10)
 

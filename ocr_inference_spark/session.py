@@ -57,7 +57,9 @@ def get_spark(
 def _ship_self(spark: SparkSession) -> None:
     """Ship this package to executor Python workers (addPyFile), so jobs
     built on get_spark() work regardless of the driver process CWD —
-    the programmatic equivalent of spark-submit --py-files."""
+    the programmatic equivalent of spark-submit --py-files. Once per
+    context: Spark ignores a second add of the same path, with a
+    warning."""
     import shutil
     import tempfile
 
@@ -67,8 +69,13 @@ def _ship_self(spark: SparkSession) -> None:
             tempfile.gettempdir(), f"ocr_inference_spark_self_{os.getpid()}"
         )
         zip_path = base + ".zip"
+        sc = spark.sparkContext
+        # addPyFile's own record, a Python list: sc.listFiles would cost
+        # a JVM round trip on every get_spark
+        if os.path.basename(zip_path) in sc._python_includes:
+            return
         if not os.path.exists(zip_path):
             shutil.make_archive(base, "zip", root_dir=repo, base_dir="ocr_inference_spark")
-        spark.sparkContext.addPyFile(zip_path)
+        sc.addPyFile(zip_path)
     except Exception:
-        pass  # already shipped or running from a --py-files deployment
+        pass  # running from a --py-files deployment

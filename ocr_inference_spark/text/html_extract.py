@@ -223,12 +223,6 @@ def parse_html_spans(doc: str) -> list[tuple[str, str | None, str | None]]:
     return spans
 
 
-def strip_boilerplate(doc: str) -> str:
-    """Main text only, blocks joined by newlines (the classic
-    boilerplate-strip output shape)."""
-    return "\n".join(t for k, t, _ in parse_html_spans(doc) if k == "text")
-
-
 # ---------------------------------------------------------------------------
 # Spark operators
 # ---------------------------------------------------------------------------

@@ -1,4 +1,5 @@
-"""Deterministic interleaved-corpus fixtures (FIXTURES.md §§1-3).
+"""Deterministic interleaved-corpus fixtures (FIXTURES.md §§1-3), a
+test builder: ``from corpus_fixtures import build_corpus``.
 
 Builds the three tables of the engine's contract from a seed:
 
@@ -17,9 +18,9 @@ from __future__ import annotations
 import math
 import random
 
-from .glyphs import CHARSET, line_pixel_width
-from .imgcodec import png_encode
-from .render import render_page
+from ocr_inference_spark.glyphs import line_pixel_width
+from ocr_inference_spark.imgcodec import png_encode
+from ocr_inference_spark.render import render_page
 
 _WORDS = (
     "the quick brown fox jumps over lazy dog spark native engine page line "
@@ -157,7 +158,7 @@ def corpus_to_spark(spark, documents, pages):
     """Row dicts -> DataFrames under the explicit schemas."""
     from pyspark.sql import Row
 
-    from .schemas import DOCUMENTS_SCHEMA, PAGES_SCHEMA
+    from ocr_inference_spark.schemas import DOCUMENTS_SCHEMA, PAGES_SCHEMA
 
     doc_rows = [
         Row(doc_id=d["doc_id"], spans=[Row(**s) for s in d["spans"]])

@@ -7,7 +7,8 @@ streams, of the Java ImageIO GIF and TIFF fixtures in ``tests/data`` and
 of half-length truncations of all of them (a decode that raises
 contributes its exception's repr). A refactor of the LZW coder, the bit
 writers, the canonical-code builder or the inflate step must leave both
-digests unchanged.
+digests unchanged. Every one of those errors is a ``ValueError``: a
+malformed stream never escapes as ``struct.error`` or ``zlib.error``.
 """
 
 from __future__ import annotations
@@ -17,15 +18,17 @@ import itertools
 from pathlib import Path
 
 import numpy as np
+import pytest
 
 from ocr_inference_spark.gifcodec import gif_encode, gif_encode_frames, iter_gif_frames
-from ocr_inference_spark.imgcodec import tiff_decode, tiff_encode
+from ocr_inference_spark.imgcodec import png_decode, png_encode, tiff_decode, tiff_encode
+from ocr_inference_spark.render import render_page
 from ocr_inference_spark.webpcodec import webp_decode, webp_encode
 
 SIZES = ((1, 1), (17, 23), (33, 65))
 
 ENCODE_MD5 = "d748cf297e4f4c3812b7153204651b10"
-DECODE_MD5 = "cec955df0f41ddda9dec98bbfe913aba"
+DECODE_MD5 = "96ae577130c5d5d68de1604db9a696f6"
 
 
 def _image(h: int, w: int, channels: int) -> np.ndarray:
@@ -120,3 +123,35 @@ def test_codec_encoder_bytes_and_decoder_pixels_are_pinned():
     assert n == 113 + 7
     assert enc == ENCODE_MD5
     assert dec == DECODE_MD5
+
+
+def _page() -> np.ndarray:
+    return render_page(["the quick brown fox"])
+
+
+def _overwrite(data: bytes, at: int) -> bytes:
+    """Eight bytes of 0xFF over ``data[at:at + 8]``."""
+    return data[:at] + b"\xff" * 8 + data[at + 8 :]
+
+
+def _idat_overwritten() -> bytes:
+    png = png_encode(_page())
+    return _overwrite(png, png.index(b"IDAT") + 4 + 8)  # 8 bytes into the data
+
+
+MALFORMED = {
+    # an LZW page cut inside its IFD, which follows the strip data
+    "tiff_lzw_cut_288": lambda: tiff_decode(tiff_encode(_page(), "lzw")[:288]),
+    "tiff_lzw_cut_556": lambda: tiff_decode(tiff_encode(_page(), "lzw")[:556]),
+    # corrupt zlib streams; the one strip starts after the 8-byte header
+    "tiff_deflate_strip_ff": lambda: tiff_decode(
+        _overwrite(tiff_encode(_page(), "deflate"), 8 + 8)
+    ),
+    "png_idat_ff": lambda: png_decode(_idat_overwritten()),
+}
+
+
+@pytest.mark.parametrize("case", sorted(MALFORMED))
+def test_malformed_media_raises_value_error(case):
+    with pytest.raises(ValueError):
+        MALFORMED[case]()

@@ -56,243 +56,3 @@ def test_confidence():
     assert ctc_confidence(0.0, 5) == 1.0
     assert ctc_confidence(-2.0, 2) == math.exp(-1.0)
     assert ctc_confidence(-1.0, 0) == 0.0
-
-
-def test_lm_fusion_reranks_ambiguous_word():
-    from ocr_inference_spark.kernels.ctc import beam_decode, build_unigram_lm
-
-    # vocab: 0=blank, 1='a', 2='b', 3=' '
-    SP = 3
-    # frames spell "a? " where frame 1 is ambiguous between 'a'(1) and 'b'(2)
-    logits = np.full((4, 4), -10.0)
-    logits[0, 1] = 10.0
-    logits[1, 1] = 1.0
-    logits[1, 2] = 1.2  # acoustically prefers 'b'
-    logits[2, 0] = 10.0
-    logits[3, SP] = 10.0
-    no_lm = beam_decode(logits, beam_width=16, top_k=3)
-    assert no_lm[0][0] == (1, 2, SP)  # "ab "
-    lm = build_unigram_lm(
-        {"a": 99, "ab": 1}, lambda w: [1 if ch == "a" else 2 for ch in w]
-    )
-    with_lm = beam_decode(logits, beam_width=16, top_k=3, lm=lm, lm_alpha=2.0, space_id=SP)
-    assert with_lm[0][0] == (1, SP)  # LM flips to "a "
-
-
-def test_lm_fusion_no_space_is_noop_on_best_path():
-    from ocr_inference_spark.kernels.ctc import beam_decode
-
-    logits = _logits_for_path([1, 0, 2])
-    a = beam_decode(logits, beam_width=8, top_k=1)
-    b = beam_decode(logits, beam_width=8, top_k=1, lm={(1,): -0.5}, space_id=3)
-    # no space emitted and no trailing word in LM -> same best sequence
-    assert a[0][0] == b[0][0]
-
-
-def test_parse_arpa_unigrams_and_fusion():
-    """C14: ARPA 1-grams section parse + shallow-fusion table
-    (reference: parse_arpa_unigrams, BDRC/utils.py:395-427)."""
-    import math
-
-    from ocr_inference_spark.glyphs import encode_text
-    from ocr_inference_spark.kernels.ctc import arpa_unigram_lm, parse_arpa_unigrams
-
-    arpa = "\n".join([
-        "\\data\\",
-        "ngram 1=5",
-        "ngram 2=2",
-        "",
-        "\\1-grams:",
-        "-1.0\t<s>\t-0.30103",
-        "-0.5\tthe\t-0.2",
-        "-2.0\tfox",
-        "",
-        "# a comment",
-        "-3.0\t</s>",
-        "\\2-grams:",
-        "-0.1\tthe fox",
-        "\\end\\",
-    ])
-    uni = parse_arpa_unigrams(arpa)
-    assert uni == {"the": -0.5, "fox": -2.0}
-    lm = arpa_unigram_lm(arpa, encode_text)
-    key = tuple(int(i) for i in encode_text("the"))
-    assert math.isclose(lm[key], -0.5 * math.log(10.0))
-
-
-def test_bigram_fusion_beats_greedy_and_unigram():
-    """I33 fidelity: a word acoustically AND unigram-preferred is
-    overturned only by the bigram context (the reference's KenLM is an
-    n-gram backoff model, BDRC/inference.py:95-106)."""
-    from ocr_inference_spark.kernels.ctc import (
-        NGramLM,
-        beam_decode,
-        build_unigram_lm,
-        greedy_decode,
-    )
-
-    # vocab: 0=blank, 1='a', 2='b', 3='c', 4=' '
-    SP = 4
-    A, B, C = (1,), (2,), (3,)
-    # frames spell "a <?>" where <?> is ambiguous between 'b' and 'c';
-    # acoustics slightly prefer 'b'
-    logits = np.full((4, 5), -10.0)
-    logits[0, 1] = 10.0   # 'a'
-    logits[1, SP] = 10.0  # ' '
-    logits[2, 2] = 1.2    # 'b' (acoustic winner)
-    logits[2, 3] = 1.0    # 'c'
-    logits[3, 0] = 10.0   # blank
-
-    greedy_ids, _ = greedy_decode(logits)
-    assert greedy_ids.tolist() == [1, SP, 2]  # "a b" — wrong
-
-    # unigrams also prefer 'b'
-    uni = build_unigram_lm({"a": 10, "b": 10, "c": 5},
-                           lambda w: [{"a": 1, "b": 2, "c": 3}[w]])
-    with_uni = beam_decode(logits, beam_width=16, top_k=3, lm=uni,
-                           lm_alpha=1.0, space_id=SP)
-    assert with_uni[0][0] == (1, SP, 2)  # still "a b" — wrong
-
-    # bigram context: after "a", "c" is overwhelmingly more likely
-    bi = NGramLM(
-        unigrams={A: math.log(0.4), B: math.log(0.4), C: math.log(0.2)},
-        backoffs={},
-        bigrams={(A, C): math.log(0.95), (A, B): math.log(0.001)},
-    )
-    with_bi = beam_decode(logits, beam_width=16, top_k=3, lm=bi,
-                          lm_alpha=1.0, space_id=SP)
-    assert with_bi[0][0] == (1, SP, 3)  # "a c" — bigram fixes it
-
-
-def test_ngram_lm_backoff_path():
-    from ocr_inference_spark.kernels.ctc import NGramLM
-
-    A, B, C = (1,), (2,), (3,)
-    lm = NGramLM(
-        unigrams={A: -1.0, B: -2.0, C: -3.0},
-        backoffs={A: -0.5},
-        bigrams={(A, B): -0.1},
-    )
-    assert lm.word_logp(B, A) == -0.1          # listed bigram
-    assert lm.word_logp(C, A) == -0.5 + -3.0   # backoff: bo(a) + P1(c)
-    assert lm.word_logp(C, B) == 0.0 + -3.0    # no backoff weight for b
-    assert lm.word_logp(B) == -2.0             # unigram (no context)
-    unseen = (9,)
-    assert lm.word_logp(unseen) == lm.floor
-
-
-def test_parse_arpa_ngrams_and_bigram_fusion():
-    from ocr_inference_spark.glyphs import encode_text
-    from ocr_inference_spark.kernels.ctc import arpa_bigram_lm, parse_arpa_ngrams
-
-    arpa = "\n".join([
-        "\\data\\",
-        "ngram 1=4",
-        "ngram 2=3",
-        "",
-        "\\1-grams:",
-        "-1.0\t<s>\t-0.30103",
-        "-0.5\tthe\t-0.2",
-        "-2.0\tfox",
-        "",
-        "\\2-grams:",
-        "-0.1\tthe fox",
-        "-0.4\t<s> the",
-        "\\end\\",
-    ])
-    uni, bi = parse_arpa_ngrams(arpa)
-    assert uni == {"the": (-0.5, -0.2), "fox": (-2.0, 0.0)}
-    assert bi == {("the", "fox"): -0.1}
-
-    lm = arpa_bigram_lm(arpa, encode_text)
-    the = tuple(int(i) for i in encode_text("the"))
-    fox = tuple(int(i) for i in encode_text("fox"))
-    ln10 = math.log(10.0)
-    assert math.isclose(lm.word_logp(fox, the), -0.1 * ln10)
-    # unseen context word "dog": backoff chain -> bo(dog)=0 + P1(fox)
-    dog = tuple(int(i) for i in encode_text("dog"))
-    assert math.isclose(lm.word_logp(fox, dog), -2.0 * ln10)
-    # seen context, unseen continuation: bo(the) + floor
-    assert math.isclose(lm.word_logp(dog, the), -0.2 * ln10 + lm.floor)
-
-
-_ARPA_TRIGRAM = "\n".join([
-    "\\data\\",
-    "ngram 1=4",
-    "ngram 2=2",
-    "ngram 3=2",
-    "",
-    "\\1-grams:",
-    "-0.5\ta\t-0.1",
-    "-0.5\tb\t-0.1",
-    "-0.6\tc\t-0.1",
-    "-0.9\td\t-0.1",
-    "\\2-grams:",
-    "-0.05\tb c\t-0.1",
-    "-1.3\tb d\t-0.1",
-    "\\3-grams:",
-    "-6.0\ta b c",
-    "-0.004\ta b d",
-    "\\end\\",
-])
-_ENC = lambda w: [{"a": 1, "b": 2, "c": 3, "d": 4}[ch] for ch in w]  # noqa: E731
-
-
-def test_parse_arpa_all_orders_and_recursive_backoff():
-    import pytest
-
-    from ocr_inference_spark.kernels.ctc import arpa_backoff_lm, parse_arpa
-
-    tables = parse_arpa(_ARPA_TRIGRAM)
-    assert len(tables) == 3
-    assert tables[1][("b", "c")] == (-0.05, -0.1)
-    assert tables[2][("a", "b", "d")] == (-0.004, 0.0)
-
-    ln10 = math.log(10.0)
-    lm = arpa_backoff_lm(_ARPA_TRIGRAM, _ENC, order=None)
-    A, B, C, D = (1,), (2,), (3,), (4,)
-    assert lm.order == 3
-    assert math.isclose(lm.word_logp(C, (A, B)), -6.0 * ln10)  # listed 3-gram
-    # trigram miss (c b d): bo of unlisted bigram (c,b) = 0 + P2(d|b)
-    assert math.isclose(lm.word_logp(D, (C, B)), -1.3 * ln10)
-    # trigram+bigram miss (c a d): bo((c,a))=0 + bo((a,))=-0.1 + P1(d)
-    assert math.isclose(lm.word_logp(D, (C, A)), (-0.1 - 0.9) * ln10)
-    # context longer than order-1 is truncated to the last 2 words
-    assert math.isclose(lm.word_logp(C, (D, A, B)), -6.0 * ln10)
-    # order truncation: as a bigram model the 3-gram table is gone
-    lm2 = arpa_backoff_lm(_ARPA_TRIGRAM, _ENC, order=2)
-    assert lm2.order == 2
-    assert math.isclose(lm2.word_logp(C, (A, B)), -0.05 * ln10)
-
-    with pytest.raises(ValueError, match="2-grams"):
-        parse_arpa("\\1-grams:\n-0.5\ta\n\\3-grams:\n-0.1\ta a a\n")
-
-
-def test_trigram_fusion_beats_bigram():
-    """I33 at order 3: the final word is acoustically AND
-    bigram-preferred as 'c'; only the trigram context (a b _) knows it
-    should be 'd'. Decoding with order=2 stays wrong, order=3 fixes it
-    (the reference's KenLM family is a 5-gram; this pins that extra
-    orders actually change the decision)."""
-    from ocr_inference_spark.kernels.ctc import arpa_backoff_lm, beam_decode
-
-    # vocab: 0=blank, 1='a', 2='b', 3='c', 4='d', 5=' '
-    SP = 5
-    logits = np.full((6, 6), -10.0)
-    logits[0, 1] = 10.0   # 'a'
-    logits[1, SP] = 10.0  # ' '
-    logits[2, 2] = 10.0   # 'b'
-    logits[3, SP] = 10.0  # ' '
-    logits[4, 3] = 1.2    # 'c' (acoustic winner)
-    logits[4, 4] = 1.0    # 'd'
-    logits[5, 0] = 10.0   # blank
-
-    bi = arpa_backoff_lm(_ARPA_TRIGRAM, _ENC, order=2)
-    with_bi = beam_decode(logits, beam_width=16, top_k=3, lm=bi,
-                          lm_alpha=1.0, space_id=SP)
-    assert with_bi[0][0] == (1, SP, 2, SP, 3)  # "a b c" — still wrong
-
-    tri = arpa_backoff_lm(_ARPA_TRIGRAM, _ENC)  # default order=3
-    with_tri = beam_decode(logits, beam_width=16, top_k=3, lm=tri,
-                           lm_alpha=1.0, space_id=SP)
-    assert with_tri[0][0] == (1, SP, 2, SP, 4)  # "a b d" — trigram fixes it

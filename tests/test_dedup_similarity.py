@@ -19,13 +19,6 @@ def docs(spark):
     return spark.createDataFrame(rows)
 
 
-def test_exact_duplicates(docs):
-    from ocr_inference_spark.dedup import exact_duplicates
-
-    out = {r["id"]: r["group_size"] for r in exact_duplicates(docs, "id", "text").collect()}
-    assert out == {1: 2, 2: 2}
-
-
 def test_jaccard_pairs_finds_near_dup(docs):
     from ocr_inference_spark.dedup import jaccard_pairs
 
@@ -47,10 +40,10 @@ def test_minhash_lsh_matches_exact(docs):
 
 
 def test_simhash_near_dup(docs):
-    from ocr_inference_spark.dedup import simhash_pairs
+    from ocr_inference_spark.dedup import simhash_md5_pairs_exact
 
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-             simhash_pairs(docs, "id", "text", max_hamming=16).collect()}
+             simhash_md5_pairs_exact(docs, "id", "text", max_hamming=16).collect()}
     assert pairs.get((1, 2)) == 0  # identical token multiset
     assert (1, 3) in pairs  # one word changed -> small hamming
     assert (4, 5) not in pairs

@@ -38,7 +38,7 @@ def test_eval_mode_beams():
 
 
 def _ocr_df(spark):
-    from ocr_inference_spark.fixtures import build_corpus, corpus_to_spark
+    from corpus_fixtures import build_corpus, corpus_to_spark
     from ocr_inference_spark.pipeline import recognize_pages
 
     documents, pages, _ = build_corpus(n_docs=3, seed=5, pecha_docs=0)
@@ -74,7 +74,7 @@ def test_txt_jsonl_xml_sinks(spark, tmp_path):
 
 def test_detection_parquet_sink(spark, tmp_path):
     from ocr_inference_spark.exporters import detection_to_parquet
-    from ocr_inference_spark.fixtures import build_corpus, corpus_to_spark
+    from corpus_fixtures import build_corpus, corpus_to_spark
     from ocr_inference_spark.pipeline import detect_lines
 
     _, pages, _ = build_corpus(n_docs=3, seed=5, pecha_docs=0)
@@ -104,7 +104,7 @@ def test_encoding_roundtrip(spark):
 
 def test_recognize_pages_eval_schema(spark):
     from ocr_inference_spark.exporters import ocr_lines_to_parquet
-    from ocr_inference_spark.fixtures import build_corpus, corpus_to_spark
+    from corpus_fixtures import build_corpus, corpus_to_spark
     from ocr_inference_spark.pipeline import recognize_pages_eval
 
     documents, pages, expected = build_corpus(n_docs=3, seed=5, pecha_docs=0)

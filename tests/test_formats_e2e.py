@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from ocr_inference_spark.fixtures import build_corpus, corpus_to_spark
+from corpus_fixtures import build_corpus, corpus_to_spark
 from ocr_inference_spark.imgcodec import png_decode, tiff_encode
 from ocr_inference_spark.jpegcodec import jpeg_encode, jpeg_encode_progressive
 from ocr_inference_spark.pipeline import extract_spans

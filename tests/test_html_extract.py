@@ -12,7 +12,6 @@ from ocr_inference_spark.text.html_extract import (
     _spec_of,
     paragraphs_for,
     parse_html_spans,
-    strip_boilerplate,
     synth_html_for,
 )
 
@@ -50,7 +49,7 @@ def test_fallback_paragraphs_for_short_docs():
 
 def test_no_furniture_leaks():
     html = synth_html_for(5, LONG_TEXT)
-    joined = strip_boilerplate(html)
+    joined = "\n".join(t for k, t, _ in parse_html_spans(html) if k == "text")
     for decoy in (
         "Portal", "home", "archive", "tags",  # header + nav
         "one", "two", "three",  # link-soup menu

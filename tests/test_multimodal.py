@@ -218,34 +218,59 @@ def test_wav_truncated_and_garbage_raise_cleanly():
         wav_decode(bytes(truncated))
 
 
-def test_avi_midstream_truncation_is_atomic(spark):
-    """A clip whose SECOND frame is corrupt must yield exactly one
-    decode_failed row — never a mix of success frames and a failure row
-    for the same media_ref."""
+def _avi_second_frame_cut(keep: int | None, movi_consistent: bool) -> bytes:
+    """A two-frame clip whose SECOND frame's JPEG keeps only its first
+    ``keep`` bytes (None: all but the last 200), and the clip ends there
+    (no idx1). The frame chunk and the RIFF size match the cut; the movi
+    LIST size does too when ``movi_consistent``, and else still claims
+    the uncut list."""
     import struct as _struct
 
     from ocr_inference_spark.multimodal import avi_encode_mjpeg
 
     frames = [render_page(["frame a"]), render_page(["frame b"])]
-    avi = bytearray(avi_encode_mjpeg(frames, fps=4))
-    # truncate the SECOND movi chunk's JPEG mid-stream (occurrences of
-    # '00dc' after the movi frames are idx1 index entries, not chunks)
-    idx = bytes(avi).find(b"00dc", bytes(avi).find(b"00dc") + 4)
+    avi = avi_encode_mjpeg(frames, fps=4)
+    movi = avi.find(b"movi") - 8  # the LIST holding the frame chunks
+    # the second '00dc' chunk after movi (later ones are idx1 entries)
+    idx = avi.find(b"00dc", avi.find(b"00dc", movi) + 4)
     (sz,) = _struct.unpack("<I", avi[idx + 4 : idx + 8])
-    corrupt = avi[: idx + 8 + sz - 200]
-    corrupt[idx + 4 : idx + 8] = _struct.pack("<I", sz - 200)
-    # fix RIFF + movi LIST sizes minimally: shrink top-level size
-    corrupt[4:8] = _struct.pack("<I", len(corrupt) - 8)
-    movi = bytes(corrupt).find(b"LIST", 12)
-    (lsz,) = _struct.unpack("<I", corrupt[movi + 4 : movi + 8])
+    keep = sz - 200 if keep is None else keep
+    clip = bytearray(avi[: idx + 8 + keep])
+    clip[idx + 4 : idx + 8] = _struct.pack("<I", keep)
+    clip[4:8] = _struct.pack("<I", len(clip) - 8)
+    assert clip[movi : movi + 4] == b"LIST"
+    (movi_size,) = _struct.unpack("<I", clip[movi + 4 : movi + 8])
+    assert movi_size > len(clip) - movi - 8
+    if movi_consistent:
+        clip[movi + 4 : movi + 8] = _struct.pack("<I", len(clip) - movi - 8)
+    return bytes(clip)
+
+
+def _sampled_rows(spark, content: bytes):
     rows = [
-        Row(media_ref="bad", modality="video", content=bytes(corrupt),
+        Row(media_ref="bad", modality="video", content=content,
             mime="video/x-msvideo", meta={}),
     ]
-    from ocr_inference_spark.multimodal import MEDIA_SCHEMA, sample_video_frames
-
     df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    out = sample_video_frames(df, every_nth=1).collect()
+    return sample_video_frames(df, every_nth=1).collect()
+
+
+def test_avi_midstream_truncation_is_atomic(spark):
+    """A clip whose SECOND frame is corrupt, with consistent RIFF and
+    movi sizes, must yield exactly one decode_failed row — never a mix
+    of success frames and a failure row for the same media_ref. The
+    frame ends 150 bytes in, inside a Huffman table, where the decoder
+    raises (a cut inside the scan data still decodes, zero-filled)."""
+    out = _sampled_rows(spark, _avi_second_frame_cut(150, movi_consistent=True))
+    assert len(out) == 1
+    assert out[0]["status"] == "decode_failed" and out[0]["frame_idx"] == -1
+
+
+def test_avi_overlong_movi_list_is_atomic(spark):
+    """A clip cut 200 bytes before the end of its second frame, whose
+    movi LIST claims more bytes than the file holds, is one
+    decode_failed row too: the chunk walk runs off the file."""
+    out = _sampled_rows(spark, _avi_second_frame_cut(None, movi_consistent=False))
     assert len(out) == 1
     assert out[0]["status"] == "decode_failed" and out[0]["frame_idx"] == -1
 

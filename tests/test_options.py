@@ -3,7 +3,7 @@ kernel and the output (reference cli.py:20-38)."""
 
 from __future__ import annotations
 
-from ocr_inference_spark.fixtures import build_corpus, corpus_to_spark
+from corpus_fixtures import build_corpus, corpus_to_spark
 from ocr_inference_spark.imgcodec import png_encode
 from ocr_inference_spark.model import RecognitionSession, serialize_weights
 from ocr_inference_spark.page import PipelineOptions, process_page

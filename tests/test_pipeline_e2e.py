@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from ocr_inference_spark.fixtures import build_corpus, corpus_to_spark
+from corpus_fixtures import build_corpus, corpus_to_spark
 from ocr_inference_spark.pipeline import (
     extract_spans,
     media_spans,

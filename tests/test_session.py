@@ -1,6 +1,7 @@
 """``get_spark`` under spark-submit: the driver keeps the ``--master`` it
 was submitted with, whatever its form, and sizes shuffle partitions from
-the started context. Runs spark-submit in a subprocess."""
+the started context. Runs spark-submit in a subprocess. A context ships
+the package to its workers once, however often ``get_spark`` runs."""
 
 from __future__ import annotations
 
@@ -37,3 +38,14 @@ def test_spark_submit_master_is_kept(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "master=local[2,2]" in lines
     assert "shuffle=8" in lines
+
+
+def test_package_is_shipped_once_per_context(spark):
+    from ocr_inference_spark.session import get_spark
+
+    sc = spark.sparkContext
+    get_spark(master=sc.master)
+    get_spark(master=sc.master)
+    name = f"ocr_inference_spark_self_{os.getpid()}.zip"
+    assert [f for f in sc.listFiles if f.endswith("/" + name)] != []
+    assert sc._python_includes.count(name) == 1
